@@ -71,13 +71,13 @@ object ScaleProbe {
     // maintenance) plus this round's wire-frame query
     "q202_event_time_parse", "q204_cvm_drift", "q205_bootstrap_ci",
     "w34_stream_index_maintain", "q206_wire_frame",
-    // round-13 additions: the bucketed-store serving/lookup/rollback
-    // drains (flat-overhead claims get one-decade evidence like w34's)
-    // and the register-sized skew audit
-    "w35_stream_index_lookup", "w36_stream_crash_rollback",
+    // round-13 additions: the bucketed-store serving/lookup drains
+    // (flat-overhead claims get one-decade evidence like w34's) and the
+    // register-sized skew audit
+    "w35_stream_index_lookup",
     "w37_stream_point_serve", "q207_key_skew_audit",
     "w38_stream_key_subscribe",
-    // round-14 additions: the manifest-protocol drain and the serde
+    // round-14 additions: the pointer-file-protocol drain and the serde
     // coercion round-trip
     "w39_stream_manifest_store", "q208_serde_coerce",
     // round-16: decade evidence for the r15 exchange-reuse-tail keep the

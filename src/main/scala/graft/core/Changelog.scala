@@ -85,12 +85,12 @@ object Changelog {
   def ttlFilter(df: DataFrame, tsCol: String, ttlUs: Long, nowUs: Long): DataFrame =
     df.filter(col(tsCol) >= lit(nowUs - ttlUs))
 
-  /** Vacuum a changelog parquet directory in place: compact to
+  /** Vacuum a changelog table committed through AtomicSwap: compact to
     * latest-per-key, drop tombstoned keys and TTL-expired records — the
     * reference's Kafka retention contract (`cleanup.policy=compact,delete` +
     * `retention.ms=ttl`, KafkaLogStorage.scala:355-374) as an explicit
-    * maintenance action. Crash-safe via AtomicSwap (run `recover` first if
-    * a prior vacuum may have been interrupted). */
+    * maintenance action. Crash-safe via AtomicSwap (the swap sweeps an
+    * interrupted vacuum's leftovers). */
   def vacuum(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -102,16 +102,15 @@ object Changelog {
       tieBreakCols: Seq[String] = Nil): Unit = {
     require(ttlUs.isEmpty || nowUs > 0L,
       "vacuum with a TTL requires an explicit nowUs — a zero 'now' would make the TTL filter a silent no-op")
-    graft.streaming.AtomicSwap.recover(path)
-    val log = spark.read.parquet(path)
+    val log = committed(spark, path)
     val live = ttlUs.fold(log)(t => ttlFilter(log, tsCol, t, nowUs))
     val compacted = compact(live, keyCols, tsCol, tieBreakCols)
     val clean = tombstoneCol.fold(compacted)(tc => dropTombstones(compacted, tc))
     graft.streaming.AtomicSwap.swap(clean, path, batchId = System.nanoTime())
   }
 
-  /** Small-files compaction: rewrite a parquet directory into
-    * ~`targetFileBytes` files (crash-safe swap). Streaming materialization
+  /** Small-files compaction: rewrite a table committed through AtomicSwap
+    * into ~`targetFileBytes` files (crash-safe swap). Streaming materialization
     * and frequent appends accumulate thousands of tiny files whose
     * per-file open/footer cost dominates scans long before data volume
     * does — the standard warehouse maintenance action. Returns the target
@@ -121,15 +120,19 @@ object Changelog {
       path: String,
       targetFileBytes: Long = 128L << 20): Int = {
     require(targetFileBytes > 0, "target file size must be positive")
-    graft.streaming.AtomicSwap.recover(path)
-    val p = new org.apache.hadoop.fs.Path(path)
+    val log = committed(spark, path)
+    val p = new org.apache.hadoop.fs.Path(graft.streaming.AtomicSwap.resolve(path).get)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val totalBytes = fs.getContentSummary(p).getLength
     val parts = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
     graft.streaming.AtomicSwap.swap(
-      spark.read.parquet(path).repartition(parts), path, batchId = System.nanoTime())
+      log.repartition(parts), path, batchId = System.nanoTime())
     parts
   }
+
+  private def committed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
+    graft.streaming.AtomicSwap.read(spark, path).getOrElse(
+      throw new IllegalArgumentException(s"no table committed at $path"))
 
   /** Keep the N most recent records per key (reference keep-last-3 CDC
     * listener, examples/example-external-state/.../ExampleESGateway.scala:63-69).

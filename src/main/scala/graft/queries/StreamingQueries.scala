@@ -371,7 +371,7 @@ private[graft] object StreamingQueries {
       graft.streaming.GraphStream.maintainComponents(ch, s"$tmp/g",
           s"$tmp/ckpt", tieBreakCols = Seq("event_id"))
         .start().awaitTermination()
-      s.read.parquet(s"$tmp/g/components").orderBy("vertex")
+      graft.streaming.AtomicSwap.read(s, s"$tmp/g/components").get.orderBy("vertex")
     }),
 
     // LIVE SECONDARY-INDEX MAINTENANCE under streaming ingest (R4 build +
@@ -527,19 +527,20 @@ private[graft] object StreamingQueries {
         .orderBy("user_id")
     }),
 
-    // CRASH-WINDOW ROLLBACK under the oracle gate (P7's rollback half,
-    // live — previously spec-only in AtomicSwapSpec): after a streamed
-    // bucketed materialization, one bucket is put into the EXACT state a
-    // crash between swapDir's two renames leaves behind (current dir
-    // renamed to its .old- backup, replacement never arrived), and the
-    // read path's recovery must roll the backup forward — the drained,
-    // crashed-and-recovered table ≡ the batch compaction of the replayed
-    // log, which is what the oracle asserts. The reference's rollback is
-    // the memstore write-through failure path (KVStoreLocal.put:477-513);
-    // here recovery is a property of the READ, so a crashed writer can
-    // never publish a half-table.
-    "w36_stream_crash_rollback" -> ((s, d) => {
-      val tmpPath = java.nio.file.Files.createTempDirectory("graft_w36_")
+    // THE POINTER-FILE (MANIFEST) COMMIT PROTOCOL UNDER THE ORACLE GATE
+    // (the StoreFs seam, r13 verdict #1): the w34 ingest topology drains
+    // into a bucketed store whose generations are immutable dirs committed
+    // solely by atomic pointer-file puts — the one protocol, correct on
+    // POSIX and on rename-less object stores alike (StoreFs has no
+    // rename). After the drain the crash window is simulated: an ORPHAN
+    // generation (fully written, never pointed at) carrying poisoned rows
+    // is planted next to a live bucket; the read path must serve exactly
+    // the committed generation set — ≡ the batch compaction of the
+    // replayed log, which the oracle asserts. A protocol bug that leaked
+    // an uncommitted generation (poison surfaces) or lost a committed one
+    // (rows vanish) breaks the hash.
+    "w39_stream_manifest_store" -> ((s, d) => {
+      val tmpPath = java.nio.file.Files.createTempDirectory("graft_w39_")
       Support.deleteOnExit(tmpPath)
       val tmp = tmpPath.toString
       val ch = Tables.eventsStream(s, d).select(
@@ -549,62 +550,19 @@ private[graft] object StreamingQueries {
           Seq("user_id"), "ts_us", s"$tmp/t", s"$tmp/ckpt",
           numBuckets = 8, tieBreakCols = Seq("event_id"))
         .start().awaitTermination()
-      // simulate the crash window on the first populated bucket (the degen
-      // world's single user fills exactly one; an EMPTY replay has no
-      // bucket to crash — the store is the empty relation)
-      graft.streaming.BucketedStore.existingBuckets(s"$tmp/t")
-        .headOption.foreach { victim =>
-          val dir = new java.io.File(
-            graft.streaming.BucketedStore.bucketDir(s"$tmp/t", victim))
-          require(dir.renameTo(new java.io.File(s"${dir.getPath}.old-99")),
-            s"crash simulation rename failed for $dir")
-        }
-      graft.streaming.BucketedStore.read(s, s"$tmp/t")
-        .getOrElse(Tables.events(s, d).select(col("user_id"),
-          col("event_type"), col("ts_us"),
-          lit(false).as("tombstone")).limit(0))
-        .filter(!col("tombstone"))
-        .select(col("user_id"), col("event_type"), col("ts_us"))
-        .orderBy("user_id")
-    }),
-
-    // THE MANIFEST (RENAME-LESS) COMMIT PROTOCOL UNDER THE ORACLE GATE
-    // (r14 — the StoreFs seam, r13 verdict #1): the w34/w36 ingest
-    // topology drains against ObjectStoreSimFs, whose rename THROWS — so
-    // bucket generations are immutable dirs committed solely by atomic
-    // pointer-file puts, the S3 model. After the drain the manifest crash
-    // window is simulated: an ORPHAN generation (fully written, never
-    // pointed at) carrying poisoned rows is planted next to a live
-    // bucket; the read path must serve exactly the committed generation
-    // set — ≡ the batch compaction of the replayed log, which the oracle
-    // asserts. A protocol bug that leaked an uncommitted generation
-    // (poison surfaces) or lost a committed one (rows vanish) breaks the
-    // hash; a protocol that still renames anywhere throws outright.
-    "w39_stream_manifest_store" -> ((s, d) => {
-      val tmpPath = java.nio.file.Files.createTempDirectory("graft_w39_")
-      Support.deleteOnExit(tmpPath)
-      val tmp = tmpPath.toString
-      val fs = graft.streaming.ObjectStoreSimFs
-      val ch = Tables.eventsStream(s, d).select(
-        col("user_id"), col("event_type"), col("ts_us"), col("event_id"),
-        (coalesce(col("value"), lit(0.0)) < 20.0).as("tombstone"))
-      graft.streaming.ChangelogStream.materializeLatestBucketed(ch,
-          Seq("user_id"), "ts_us", s"$tmp/t", s"$tmp/ckpt",
-          numBuckets = 8, tieBreakCols = Seq("event_id"), fs = fs)
-        .start().awaitTermination()
       // crash-window simulation (empty replay ⇒ no bucket to poison —
       // the store is the empty relation, empty-world gate)
-      graft.streaming.BucketedStore.existingBuckets(s"$tmp/t", fs)
+      graft.streaming.BucketedStore.existingBuckets(s"$tmp/t")
         .headOption.foreach { b =>
           val dir = graft.streaming.BucketedStore.bucketDir(s"$tmp/t", b)
-          graft.streaming.BucketedStore.read(s, s"$tmp/t", fs).get.limit(1)
+          graft.streaming.BucketedStore.read(s, s"$tmp/t").get.limit(1)
             .withColumn("event_type", lit("__LEAKED_UNCOMMITTED__"))
             // live + non-tombstoned: if the protocol leaked this
             // generation, the poison row MUST surface and break the hash
             .withColumn("tombstone", lit(false))
             .write.mode("overwrite").parquet(s"$dir.gen-999999")
         }
-      graft.streaming.BucketedStore.read(s, s"$tmp/t", fs)
+      graft.streaming.BucketedStore.read(s, s"$tmp/t")
         .getOrElse(Tables.events(s, d).select(col("user_id"),
           col("event_type"), col("ts_us"),
           lit(false).as("tombstone")).limit(0))
@@ -1301,18 +1259,6 @@ private[graft] object StreamingQueries {
         |SELECT user_id, event_type, ts_us FROM latest
         |WHERE rn = 1 AND NOT (COALESCE(value, 0) < 20)
         |  AND user_id = (SELECT MIN(user_id) FROM events)
-        |ORDER BY user_id""".stripMargin,
-
-    // recovery is invisible to the result: the rolled-back table is the
-    // plain latest-per-key compaction of the replayed log
-    "w36_stream_crash_rollback" ->
-      """WITH latest AS (SELECT user_id, event_type, value,
-        |    epoch_us(ts) AS ts_us,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id
-        |      ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
-        |  FROM events)
-        |SELECT user_id, event_type, ts_us FROM latest
-        |WHERE rn = 1 AND NOT (COALESCE(value, 0) < 20)
         |ORDER BY user_id""".stripMargin,
 
     // committed generations only: the drained manifest-protocol store ≡

@@ -59,9 +59,7 @@ object Gateway {
     * (core/.../actor/Group.scala:78-82, Murmur2Partitioner), vs the
     * [[Snapshot]] route's driver map over a SMALL store. Key types come
     * from the store's own schema, so URL segments always coerce to the
-    * STORED types (the murmur3 routing contract). `lastScanDirs` stamps
-    * the dirs the most recent request actually scanned — GatewaySpec's
-    * evidence that a point read touches one bucket, never the table. */
+    * STORED types (the murmur3 routing contract). */
   final class BucketedRoute(
       spark: org.apache.spark.sql.SparkSession,
       root: String,
@@ -73,12 +71,9 @@ object Gateway {
         .map(df => keyCols.map(c => df.schema(c).dataType))
         .getOrElse(throw new IllegalArgumentException(
           s"no bucketed table at $root"))
-    @volatile var lastScanDirs: Seq[String] = Nil
 
     def get(values: Seq[Any]): Option[org.apache.spark.sql.Row] =
       BucketedStore.pointLookup(spark, root, keyCols, values, fs).flatMap { df =>
-        lastScanDirs =
-          df.inputFiles.map(f => new java.io.File(f).getParent).distinct.toSeq
         // changelog semantics: a tombstoned key is a miss (404), same as
         // the snapshot route's compact-then-drop
         val live = if (df.columns.contains("tombstone"))

@@ -2,43 +2,38 @@ package graft.streaming
 
 import java.io.File
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe table swap for foreachBatch materializations (shared by
-  * ChangelogStream and GraphStream), over the [[StoreFs]] seam.
+/** Crash-safe table commit for foreachBatch materializations (shared by
+  * ChangelogStream, GraphStream, BucketedStore and the Changelog
+  * maintenance actions), over the [[StoreFs]] seam. ONE protocol on every
+  * filesystem — the pointer-file (manifest) commit:
   *
-  * Two commit protocols, selected by `fs.atomicRename`:
+  * data generations live at immutable dirs (`path.gen-B`, or any
+  * caller-staged dir via [[swapDir]]) and the live one is named by a
+  * pointer file `path.ptr`, committed with ONE atomic small-file write
+  * ([[StoreFs.writeString]]). Readers resolve the pointer ([[resolve]],
+  * [[read]]); a crash before the pointer flip leaves the old generation
+  * live (orphan data swept on recover), a crash after the flip leaves the
+  * new one live (superseded generation swept on recover). No data dir is
+  * ever renamed — [[StoreFs]] has no rename — so the same commit is
+  * correct on POSIX and on object stores (S3-style, where rename is
+  * copy+delete and never atomic). This is the metadata-handle commit of
+  * Flink's checkpoints (State Management in Apache Flink, VLDB 2017).
   *
-  * RENAME (POSIX/HDFS — the default [[LocalFs]]): write `path.tmp-B`,
-  * rename `path` → `path.old-B`, rename tmp → `path`, delete old. Every
-  * rename result is checked. The crash window between the two renames is
-  * closed by `recover`, which callers run before reading: if the table is
-  * missing but a backup exists, the backup is rolled back; stale tmp/old
-  * directories from interrupted batches are swept.
+  * Only this object knows where a table's files live: every reader of a
+  * committed table goes through [[read]] (or [[resolve]]).
   *
-  * MANIFEST (rename-less stores — S3-style, where rename is copy+delete
-  * and never atomic): data generations live at immutable dirs
-  * (`path.gen-B`, or any caller-staged dir via [[swapDir]]) and the live
-  * one is named by a pointer file `path.ptr`, committed with ONE atomic
-  * small-object put ([[StoreFs.writeString]]). Readers resolve the pointer
-  * ([[resolve]]); a crash before the pointer flip leaves the old
-  * generation live (orphan data swept on recover), a crash after the flip
-  * leaves the new one live (superseded generation swept on recover). No
-  * rename is ever issued on this branch — StoreFsSpec proves it with an
-  * fs whose rename throws.
-  *
-  * Both protocols: re-running a batch after recovery is idempotent (same
-  * batchId, deterministic result). Single writer per table path — same
-  * contract as the reference's per-partition store ownership
+  * Re-running a batch after a crash is idempotent (same batchId,
+  * deterministic result). Single writer per table path — same contract as
+  * the reference's per-partition store ownership
   * (reference: core/.../storage/KVStoreLocal.scala:477-513). */
 object AtomicSwap {
 
   private def ptrFile(path: String): String = s"$path.ptr"
 
-  /** The readable location of table `path`: the path itself (or, in the
-    * between-renames crash window, the newest backup) under the rename
-    * protocol, the pointed-to generation dir under the manifest protocol.
-    * None when the table has never been committed (or its data is gone).
+  /** The pointed-to generation dir of table `path`. None when the table
+    * has never been committed (or its data is gone).
     *
     * PASSIVE (r14 advice): performs ZERO metadata mutations. The old
     * sweep-on-read let a reader concurrent with the single writer delete
@@ -46,28 +41,28 @@ object AtomicSwap {
     * (`swap` writes `gen-B` BEFORE `commitPointer` flips the pointer; a
     * concurrent read's sweep saw it as superseded) — the writer then
     * committed a pointer to a deleted dir, an unrecoverable table.
-    * Rollback and sweeping belong to the WRITER/recovery entry
-    * ([[recover]], called by the maintenance batch paths); serving-tier
-    * reads (Gateway routes) only ever resolve. */
+    * Sweeping belongs to the WRITER ([[recover]], which [[swap]] runs
+    * first); serving-tier reads only ever resolve. */
   def resolve(path: String, fs: StoreFs = LocalFs): Option[String] =
-    if (fs.atomicRename) {
-      if (fs.exists(path)) Some(path)
-      else newestBackup(path, fs) // mid-crash window: serve the old generation in place
-    } else resolveManifest(path, fs, sweep = false)
+    fs.readString(ptrFile(path)).map(_.trim).filter(fs.exists)
 
-  /** Newest `path.old-<batchId>` backup dir (numeric id order), if any —
-    * the old generation a crashed two-rename swap left behind. */
-  private def newestBackup(path: String, fs: StoreFs): Option[String] = {
-    val target = new File(path)
-    val dir = Option(target.getParent).getOrElse(".")
-    val name = target.getName
-    fs.listNames(dir).filter(_.startsWith(s"$name.old-"))
-      .sortBy(n => n.stripPrefix(s"$name.old-").toLongOption.getOrElse(-1L))
-      .lastOption.map(n => s"$dir/$n")
+  /** The committed content of table `path`; None when never committed. */
+  def read(spark: SparkSession, path: String, fs: StoreFs = LocalFs): Option[DataFrame] =
+    readAll(spark, Seq(path), fs)
+
+  /** ONE scan over the committed content of every committed table in
+    * `paths` (never-committed ones contribute nothing) — the bucketed
+    * store's multi-bucket read. None when none is committed. */
+  private[streaming] def readAll(
+      spark: SparkSession, paths: Seq[String], fs: StoreFs): Option[DataFrame] = {
+    val dirs = paths.flatMap(resolve(_, fs))
+    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
   }
 
-  /** Roll back an interrupted swap and sweep leftovers; call before reading
-    * `path`. Returns true if the table exists after recovery. */
+  /** Sweep this table's crash leftovers (uncommitted or superseded
+    * generations). Returns true if the table is committed. A pointer whose
+    * target is gone means unrecoverable — nothing is swept then, the
+    * remaining dirs stay for forensics. */
   def recover(path: String, fs: StoreFs = LocalFs): Boolean =
     recover(path, fs, None)
 
@@ -75,71 +70,32 @@ object AtomicSwap {
     * batch writer recovering MANY tables under one root (BucketedStore)
     * pays ONE directory listing instead of one per bucket — a fixed-cost
     * hoist that matters on object stores where LIST is a metered API call
-    * (guide §6). The listing is only a candidate filter (names are
-    * re-checked per path), so a stale entry is harmless; entries created
-    * AFTER the capture belong to this writer and need no recovery
-    * (single-writer contract). */
+    * (guide §6). Entries created AFTER the capture belong to this writer
+    * and need no recovery (single-writer contract). */
   private[streaming] def recover(
       path: String, fs: StoreFs, parentListing: Option[Seq[String]]): Boolean = {
-    if (!fs.atomicRename) return resolveManifest(path, fs, sweep = true).isDefined
-    val target = new File(path)
-    val dir = Option(target.getParent).getOrElse(".")
-    val name = target.getName
-    def leftovers() = parentListing.getOrElse(fs.listNames(dir))
-      .filter(n => n.startsWith(s"$name.old-") || n.startsWith(s"$name.tmp-"))
-      .filter(n => fs.exists(s"$dir/$n"))
-    if (!fs.exists(path)) {
-      // crashed between the two renames: restore the newest backup
-      // newest backup by NUMERIC batch id — a lexicographic name sort would
-      // order "old-9" after "old-10" and restore the wrong generation
-      leftovers().filter(_.startsWith(s"$name.old-"))
-        .sortBy(n => n.stripPrefix(s"$name.old-").toLongOption.getOrElse(-1L))
-        .lastOption.foreach { backup =>
-          if (!fs.rename(s"$dir/$backup", path))
-            throw new java.io.IOException(s"recovery rename failed: $backup -> $path")
-        }
+    val ptr = fs.readString(ptrFile(path)).map(_.trim)
+    val live = ptr.filter(fs.exists)
+    if (ptr.isEmpty || live.isDefined) {
+      val target = new File(path)
+      val dir = Option(target.getParent).getOrElse(".")
+      // own generation dirs other than the live one; caller-staged dirs
+      // committed via swapDir are not ours to enumerate — their superseded
+      // generations are deleted at pointer-flip time and their staging
+      // roots are swept by the caller (BucketedStore)
+      parentListing.getOrElse(fs.listNames(dir))
+        .filter(_.startsWith(s"${target.getName}.gen-"))
+        .map(n => s"$dir/$n")
+        .filterNot(p => live.contains(p))
+        .foreach(fs.deleteRecursively)
     }
-    // sweep whatever remains (stale tmps, superseded backups)
-    leftovers().foreach(n => fs.deleteRecursively(s"$dir/$n"))
-    fs.exists(path)
-  }
-
-  /** Manifest resolution. `sweep = false` (read paths) is PASSIVE; only
-    * the recovery entry sweeps superseded/orphan generations — a read-side
-    * sweep raced the writer's not-yet-committed generation (see resolve). */
-  private def resolveManifest(path: String, fs: StoreFs, sweep: Boolean): Option[String] =
-    fs.readString(ptrFile(path)).map(_.trim) match {
-      case Some(t) if fs.exists(t) =>
-        if (sweep) sweepGens(path, keep = Some(t), fs)
-        Some(t)
-      case Some(_) =>
-        // pointer exists but its data is gone — unrecoverable; leave the
-        // remaining dirs in place for forensics rather than sweeping
-        None
-      case None =>
-        // never committed: any gen dir is an uncommitted orphan
-        if (sweep) sweepGens(path, keep = None, fs)
-        None
-    }
-
-  /** Delete OWN generation dirs (`path.gen-*`) other than `keep`. Caller-
-    * staged dirs committed via [[swapDir]] are not ours to enumerate —
-    * their superseded generations are deleted at pointer-flip time and
-    * their staging roots are swept by the caller (BucketedStore). */
-  private def sweepGens(path: String, keep: Option[String], fs: StoreFs): Unit = {
-    val target = new File(path)
-    val dir = Option(target.getParent).getOrElse(".")
-    val name = target.getName
-    fs.listNames(dir).filter(_.startsWith(s"$name.gen-"))
-      .map(n => s"$dir/$n")
-      .filterNot(p => keep.contains(p))
-      .foreach(fs.deleteRecursively)
+    live.isDefined
   }
 
   /** Commit `target` as the live generation of `path`: one atomic pointer
     * put, then delete the superseded generation. The crash window between
     * the two steps only ever leaks the OLD (already superseded) data dir,
-    * which the next recover/sweep collects — readers are correct in every
+    * which the next recover collects — readers are correct in every
     * window because the pointer is flipped atomically. */
   private def commitPointer(target: String, path: String, fs: StoreFs): Unit = {
     val old = fs.readString(ptrFile(path)).map(_.trim)
@@ -148,50 +104,26 @@ object AtomicSwap {
   }
 
   /** Write `df` as the new content of `path` with a checked commit. The
-    * WRITER is the recovery entry (reads are passive since r15): roll back
-    * / sweep this table's crash leftovers first — a re-run after a crash
-    * between the two renames would otherwise collide with its own
-    * `old-<batchId>` husk. */
-  def swap(df: DataFrame, path: String, batchId: Long, fs: StoreFs = LocalFs): Unit =
-    if (fs.atomicRename) {
-      recover(path, fs)
-      val tmp = s"$path.tmp-$batchId"
-      df.write.mode("overwrite").parquet(tmp)
-      swapDir(tmp, path, batchId, fs)
-    } else {
-      // never overwrite the LIVE generation: a re-run of a batch whose
-      // previous attempt already committed `gen-B` would delete the
-      // pointed-to dir before re-committing (dangling-pointer window —
-      // the r14-advice destructive-overwrite class). Pick the first
-      // attempt name the current pointer does not reference.
-      val live = fs.readString(ptrFile(path)).map(_.trim)
-      val gen = Iterator.from(0)
-        .map(k => if (k == 0) s"$path.gen-$batchId" else s"$path.gen-$batchId-a$k")
-        .find(g => !live.contains(g)).get
-      df.write.mode("overwrite").parquet(gen)
-      commitPointer(gen, path, fs)
-    }
+    * WRITER is the recovery entry (reads are passive): this table's crash
+    * leftovers are swept first. Never overwrites the LIVE generation: a
+    * re-run of a batch whose previous attempt already committed `gen-B`
+    * would delete the pointed-to dir before re-committing (dangling-pointer
+    * window — the r14-advice destructive-overwrite class), so the first
+    * attempt name the current pointer does not reference is used. */
+  def swap(df: DataFrame, path: String, batchId: Long, fs: StoreFs = LocalFs): Unit = {
+    recover(path, fs)
+    val live = fs.readString(ptrFile(path)).map(_.trim)
+    val gen = Iterator.from(0)
+      .map(k => if (k == 0) s"$path.gen-$batchId" else s"$path.gen-$batchId-a$k")
+      .find(g => !live.contains(g)).get
+    df.write.mode("overwrite").parquet(gen)
+    commitPointer(gen, path, fs)
+  }
 
   /** Commit an ALREADY-WRITTEN directory as the new content of `path` —
     * the commit half of [[swap]], for callers that stage many tables in
-    * one partitioned write (BucketedStore). Rename protocol: `src` must be
-    * on the same filesystem as `path` and is renamed into place. Manifest
-    * protocol: `src` becomes the pointed-to generation IN PLACE (object
-    * stores don't move data; the staged dir is the table). */
-  def swapDir(src: String, path: String, batchId: Long, fs: StoreFs = LocalFs): Unit =
-    if (!fs.atomicRename) commitPointer(src, path, fs)
-    else {
-      val old = s"$path.old-$batchId"
-      if (fs.exists(path) && !fs.rename(path, old))
-        throw new java.io.IOException(s"swap rename failed: $path -> $old")
-      if (!fs.rename(src, path)) {
-        // restore the backup before failing so readers still see the old table
-        if (fs.exists(old)) fs.rename(old, path)
-        throw new java.io.IOException(s"swap rename failed: $src -> $path")
-      }
-      fs.deleteRecursively(old)
-    }
-
-  private[streaming] def deleteRecursively(f: File): Unit =
-    LocalFs.deleteRecursively(f.getPath)
+    * one partitioned write (BucketedStore). `src` becomes the pointed-to
+    * generation IN PLACE (no data moves; the staged dir is the table). */
+  def swapDir(src: String, path: String, fs: StoreFs = LocalFs): Unit =
+    commitPointer(src, path, fs)
 }

@@ -19,13 +19,11 @@ import org.apache.spark.sql.functions._
   * scales and one that re-derives the corpus per batch (r12 verdict #1).
   *
   * Filesystem portability (r13 verdict #1): all metadata IO goes through
-  * the [[StoreFs]] seam. On the default [[LocalFs]] the layout and crash
-  * protocol are byte-identical to the pre-seam code (per-bucket two-rename
-  * swaps); on a rename-less store (`atomicRename = false`) each bucket is
-  * committed by an atomic pointer-file flip and the staged partition dirs
-  * ARE the bucket generations — no data ever moves. Single WRITER per
-  * store root (the streaming checkpoint already serializes batches);
-  * readers are safe in every crash window under both protocols.
+  * the [[StoreFs]] seam. Each bucket is committed by an atomic
+  * pointer-file flip (`root/b<i>.ptr`) and the staged partition dirs ARE
+  * the bucket generations — no data ever moves, on POSIX or on an object
+  * store. Single WRITER per store root (the streaming checkpoint already
+  * serializes batches); readers are safe in every crash window.
   *
   * Crash safety: per-bucket commits inherit the AtomicSwap protocol; a
   * crash between bucket commits re-runs the same micro-batch (checkpoint
@@ -43,33 +41,22 @@ object BucketedStore {
 
   def bucketDir(root: String, id: Int): String = s"$root/b$id"
 
-  private val BucketName = "^b(\\d+)$".r
-  private val BucketLeftover = "^b(\\d+)\\.(old|tmp|gen)-\\d+(?:-a\\d+)?$".r
   private val BucketPtr = "^b(\\d+)\\.ptr$".r
 
-  /** Bucket ids with an existing (or recoverable) table under `root` —
-    * live dirs, rename-protocol leftovers (recover() may roll them back to
-    * life), and manifest pointers/generations all count. */
+  /** Bucket ids with a committed pointer under `root`. */
   def existingBuckets(root: String, fs: StoreFs = LocalFs): Seq[Int] =
-    fs.listNames(root).flatMap {
-      case BucketName(i) => Some(i.toInt)
-      case BucketLeftover(i, _) => Some(i.toInt)
-      case BucketPtr(i) => Some(i.toInt)
-      case _ => None
-    }.distinct.sorted
+    fs.listNames(root).collect { case BucketPtr(i) => i.toInt }.sorted
 
-  /** Union of the given buckets' tables, each crash-recovered first.
-    * None when no bucket exists — the table has never been written. */
+  /** One scan over the given buckets' committed generations. None when no
+    * bucket is committed — the table has never been written. */
   def readBuckets(
       spark: SparkSession,
       root: String,
       ids: Seq[Int],
-      fs: StoreFs = LocalFs): Option[DataFrame] = {
-    val dirs = ids.flatMap(id => AtomicSwap.resolve(bucketDir(root, id), fs))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
+      fs: StoreFs = LocalFs): Option[DataFrame] =
+    AtomicSwap.readAll(spark, ids.map(bucketDir(root, _)), fs)
 
-  /** Full-table read: every existing bucket, recovered. */
+  /** Full-table read: every committed bucket. */
   def read(spark: SparkSession, root: String, fs: StoreFs = LocalFs): Option[DataFrame] =
     readBuckets(spark, root, existingBuckets(root, fs), fs)
 
@@ -127,27 +114,24 @@ object BucketedStore {
     }
   }
 
-  /** Staging dir of a batch's partitioned write. Under the manifest
-    * protocol its `__b=<id>` subdirs become live bucket generations. */
+  /** Staging dir of a batch's partitioned write. Its `__b=<id>` subdirs
+    * become live bucket generations. */
   private def stagingDir(root: String, batchId: Long): String =
     s"$root/.staging-$batchId"
 
-  // `-a<k>` suffixes are manifest-protocol RE-RUN attempts (see freshStaging)
+  // `-a<k>` suffixes are RE-RUN attempts (see freshStaging)
   private val StagingName = "^\\.staging-(\\d+)(?:-a\\d+)?$".r
 
-  /** Bucket-pointer targets under `root` (manifest protocol), from a
-    * pre-captured root listing. */
+  /** Bucket-pointer targets under `root`, from a pre-captured root
+    * listing. */
   private def pointerTargets(rootListing: Seq[String], root: String,
       fs: StoreFs): Set[String] =
     rootListing.collect { case n @ BucketPtr(_) =>
       fs.readString(s"$root/$n").map(_.trim)
     }.flatten.toSet
 
-  /** Staging dir for THIS attempt of `batchId`. Rename protocol: always
-    * `.staging-<batchId>` — committed subdirs were renamed OUT, so
-    * overwriting a same-batch leftover destroys only uncommitted data
-    * (equivalent to a crash at k=0). Manifest protocol: a previous attempt
-    * of this batch may have already committed bucket pointers INTO its
+  /** Staging dir for THIS attempt of `batchId`. A previous attempt of
+    * this batch may have already committed bucket pointers INTO its
     * staging (the staged subdirs ARE the live generations); Spark's
     * overwrite would delete those pointed-to dirs before the re-flip —
     * a dangling-pointer window where a second crash or a concurrent read
@@ -155,25 +139,23 @@ object BucketedStore {
     * Each attempt therefore stages to the first `.staging-<batchId>[-a<k>]`
     * no bucket pointer references into. `referenced` is the batch's one
     * pointer-target capture (see [[writeBuckets]]). */
-  private def freshStaging(root: String, batchId: Long, fs: StoreFs,
+  private def freshStaging(root: String, batchId: Long,
       referenced: Set[String]): String = {
     val base = stagingDir(root, batchId)
-    if (fs.atomicRename) return base
     def isReferenced(s: String) = referenced.exists(_.startsWith(s + "/"))
     Iterator.from(0)
       .map(k => if (k == 0) base else s"$base-a$k")
       .find(!isReferenced(_)).get
   }
 
-  /** Sweep stale staging dirs from interrupted batches. Rename protocol:
-    * any staging with a DIFFERENT batchId is dead (its subdirs were either
-    * all renamed out or the batch will re-run from the checkpoint).
-    * Manifest protocol: a staging subdir may be a LIVE bucket generation —
-    * only sweep stagings no bucket pointer references into. Never touches
-    * the current batch's staging (single-writer contract; a same-batch
-    * leftover is overwritten by the write itself). `rootListing` /
-    * `referenced` are the batch's one listing/pointer capture — sweeping
-    * never invalidates them for later use (only UNreferenced dirs go). */
+  /** Sweep stale staging dirs of earlier batches. A staging subdir may be
+    * a LIVE bucket generation — only stagings no bucket pointer references
+    * into are swept (a superseded subdir is deleted at its bucket's
+    * pointer flip, so a staging root goes once all its buckets moved on).
+    * Never touches the current batch's staging (single-writer contract;
+    * see [[freshStaging]]). `rootListing` / `referenced` are the batch's
+    * one listing/pointer capture — sweeping never invalidates them for
+    * later use (only UNreferenced dirs go). */
   private def sweepStagings(root: String, batchId: Long, fs: StoreFs,
       rootListing: Seq[String], referenced: Set[String]): Unit = {
     val stale = rootListing.collect {
@@ -186,9 +168,8 @@ object BucketedStore {
 
   /** Replace exactly the `touched` bucket dirs of `root` with `df`'s rows
     * (bucketed by `bexpr`). One partitioned write stages every touched
-    * bucket in a single job; each staged subdir is then committed under
-    * the AtomicSwap protocol (renamed into place, or pointer-flipped in
-    * place on a rename-less store). A touched bucket with NO staged rows
+    * bucket in a single job; each staged subdir is then committed in place
+    * by an AtomicSwap pointer flip. A touched bucket with NO staged rows
     * (every key tombstone-filtered out — the index-delta case) is swapped
     * to an empty table so stale rows vanish. `df` must not contain a
     * `__b` column. */
@@ -215,25 +196,19 @@ object BucketedStore {
     // per-call listings were 2 + |touched| LIST operations per batch, a
     // metered-API fixed cost on object stores (guide §6; r15 verdict #1).
     val rootListing = fs.listNames(root)
-    val referenced: Set[String] =
-      if (fs.atomicRename) Set.empty
-      else pointerTargets(rootListing, root, fs)
+    val referenced = pointerTargets(rootListing, root, fs)
     sweepStagings(root, batchId, fs, rootListing, referenced)
-    // the WRITER is the recovery entry (reads are passive since r15): roll
-    // back / sweep each touched bucket's crash leftovers before swapping
+    // the WRITER is the recovery entry (reads are passive since r15): sweep
+    // each touched bucket's crash leftovers before swapping
     touched.foreach(id =>
       AtomicSwap.recover(bucketDir(root, id), fs, Some(rootListing)))
-    val staging = freshStaging(root, batchId, fs, referenced)
+    val staging = freshStaging(root, batchId, referenced)
     df.withColumn("__b", bexpr)
       .write.partitionBy("__b").mode("overwrite").parquet(staging)
     touched.foreach { id =>
       val sub = s"$staging/__b=$id"
-      if (fs.isDir(sub)) AtomicSwap.swapDir(sub, bucketDir(root, id), batchId, fs)
+      if (fs.isDir(sub)) AtomicSwap.swapDir(sub, bucketDir(root, id), fs)
       else AtomicSwap.swap(df.limit(0), bucketDir(root, id), batchId, fs)
     }
-    // rename protocol: every committed subdir was renamed OUT of staging —
-    // the husk is dead. Manifest: the subdirs ARE the live generations;
-    // the staging root is swept once fully unreferenced (see sweepStagings).
-    if (fs.atomicRename) fs.deleteRecursively(staging)
   }
 }

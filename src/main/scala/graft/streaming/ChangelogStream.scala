@@ -96,13 +96,12 @@ object ChangelogStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val existing =
-          if (AtomicSwap.recover(tablePath)) Some(spark.read.parquet(tablePath)) else None
+        val existing = AtomicSwap.read(spark, tablePath)
         val all = existing.fold(batch)(e => e.unionByName(batch, allowMissingColumns = true))
         val latest = graft.core.Changelog.compact(all, keyCols, tsCol, tieBreakCols)
-        // crash-safe swap (see AtomicSwap): never overwrite the table we are
-        // reading from mid-plan; interrupted swaps roll back on the next
-        // batch before the table is read.
+        // crash-safe swap (see AtomicSwap): never overwrite the generation
+        // we are reading from mid-plan; an interrupted swap's leftovers are
+        // swept by the next swap.
         AtomicSwap.swap(latest, tablePath, batchId)
         ()
       }
@@ -117,8 +116,8 @@ object ChangelogStream {
     * de-indexing and stale-posting removal hold by construction — the
     * declarative dissolution of the reference's CDC-listener de-indexing
     * bugs (KVStoreLocal.scala:214 TODO #242/#248), now also live under
-    * streaming ingest. The index is re-read from the freshly swapped
-    * table path so its lineage never spans the swap. */
+    * streaming ingest. The index is re-read from the freshly committed
+    * table generation so its lineage never spans the swap. */
   def maintainIndexed(
       changelog: DataFrame,
       keyCols: Seq[String],
@@ -134,13 +133,11 @@ object ChangelogStream {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val existing =
-          if (AtomicSwap.recover(tablePath)) Some(spark.read.parquet(tablePath)) else None
+        val existing = AtomicSwap.read(spark, tablePath)
         val all = existing.fold(batch)(e => e.unionByName(batch, allowMissingColumns = true))
         val latest = graft.core.Changelog.compact(all, keyCols, tsCol, tieBreakCols)
         AtomicSwap.swap(latest, tablePath, batchId)
-        val live = spark.read.parquet(tablePath).filter(!col("tombstone"))
-        AtomicSwap.recover(indexPath)
+        val live = AtomicSwap.read(spark, tablePath).get.filter(!col("tombstone"))
         AtomicSwap.swap(
           graft.state.SecondaryIndex.build(live, keyCols, indexFn),
           indexPath, batchId)

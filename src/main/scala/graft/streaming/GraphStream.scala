@@ -50,15 +50,13 @@ object GraphStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val edgesPath = s"$root/edges"
         val compPath = s"$root/components"
-        val prior =
-          if (AtomicSwap.recover(edgesPath)) Some(spark.read.parquet(edgesPath)) else None
+        val prior = AtomicSwap.read(spark, edgesPath)
         val all = prior.fold(canonical(batch))(p =>
           p.unionByName(canonical(batch), allowMissingColumns = true))
         val latest = graft.core.Changelog.compact(all, Seq("src", "dst"), "ts_us", tieBreakCols)
         AtomicSwap.swap(latest, edgesPath, batchId)
         val live = graft.core.Changelog.dropTombstones(
-          spark.read.parquet(edgesPath), "tombstone")
-        AtomicSwap.recover(compPath)
+          AtomicSwap.read(spark, edgesPath).get, "tombstone")
         val components = GraphAlgorithms.connectedComponents(spark, live)
         AtomicSwap.swap(components, compPath, batchId)
         ()

@@ -2,33 +2,29 @@ package graft.streaming
 
 import java.io.File
 
-/** Filesystem seam under the bucketed-store commit protocol (r13 verdict
-  * #1). The reference keeps its stores pluggable behind an SPI for exactly
-  * this reason (reference: api/src/main/java/io/amient/affinity/core/
+/** Filesystem seam under the table-commit protocol (r13 verdict #1). The
+  * reference keeps its stores pluggable behind an SPI for exactly this
+  * reason (reference: api/src/main/java/io/amient/affinity/core/
   * storage/MemStore.java:41 — RocksDB/SimpleMap/SortedMap bindings); here
   * the pluggable surface is the METADATA half of a table commit: listing,
-  * rename, recursive delete, and small-text-file (pointer/metadata) IO.
+  * recursive delete, and small-text-file (pointer/metadata) IO.
   *
   * Bulk DATA writes (parquet) stay on Spark's own Hadoop IO — on a real
   * object store those go through Spark's cloud committers, which is a
-  * solved problem outside this seam. What the seam ports is OUR protocol:
-  * [[AtomicSwap]] picks the two-rename swap when [[atomicRename]] holds
-  * (POSIX, HDFS) and the pointer-file (manifest) commit when it does not
-  * (S3-style stores, where rename is copy+delete and never atomic).
+  * solved problem outside this seam. What the seam ports is OUR protocol,
+  * [[AtomicSwap]]'s pointer-file commit. The seam has no rename: the
+  * protocol never moves a data dir, so it needs nothing an object store
+  * (S3-style, where rename is copy+delete and never atomic) lacks. A real
+  * S3/GCS binding implements this trait with client calls (list/exists/
+  * delete + one atomic small-object PUT for [[writeString]]); everything
+  * above the seam is identical.
   *
-  * Contract notes:
-  *   - [[writeString]] must be an atomic single-object put — it is the
-  *     manifest protocol's commit primitive (an object-store PUT is
-  *     atomic at object granularity; the local impl writes a temp file
-  *     and renames, which is atomic on POSIX).
-  *   - [[rename]] may simply return false (or throw) on a store without
-  *     it; the manifest branch never calls it.
+  * Contract note: [[writeString]] must be an atomic single-object put — it
+  * is the protocol's commit primitive (an object-store PUT is atomic at
+  * object granularity; the local impl writes a temp file and renames,
+  * which is atomic on POSIX).
   */
 trait StoreFs {
-
-  /** True when rename(src, dst) is atomic and O(1) — POSIX/HDFS. False
-    * selects the pointer-file commit protocol in [[AtomicSwap]]. */
-  def atomicRename: Boolean
 
   /** Child names (not paths) of `dir`; empty when absent. */
   def listNames(dir: String): Seq[String]
@@ -36,9 +32,6 @@ trait StoreFs {
   def exists(path: String): Boolean
 
   def isDir(path: String): Boolean
-
-  /** Atomic move; false on failure. Never called by the manifest branch. */
-  def rename(src: String, dst: String): Boolean
 
   def deleteRecursively(path: String): Unit
 
@@ -51,33 +44,8 @@ trait StoreFs {
   def writeString(path: String, content: String): Unit
 }
 
-/** Rename-less [[StoreFs]] over local disk — the S3 atomicity model for
-  * environments without an object store (this container has none): rename
-  * is UNSUPPORTED and THROWS, proving at runtime that the manifest commit
-  * protocol never issues one; all other ops delegate to [[LocalFs]]. A
-  * real S3/GCS binding implements the same trait with client calls
-  * (list/exists/delete + one atomic small-object PUT for [[writeString]]);
-  * everything above the seam is identical. Used by w39's oracle-gated
-  * drain and StoreFsSpec's crash-window matrix. */
-object ObjectStoreSimFs extends StoreFs {
-  override def atomicRename: Boolean = false
-  override def rename(src: String, dst: String): Boolean =
-    throw new UnsupportedOperationException(
-      s"rename on a rename-less store: $src -> $dst")
-  override def listNames(dir: String): Seq[String] = LocalFs.listNames(dir)
-  override def exists(path: String): Boolean = LocalFs.exists(path)
-  override def isDir(path: String): Boolean = LocalFs.isDir(path)
-  override def deleteRecursively(path: String): Unit = LocalFs.deleteRecursively(path)
-  override def mkdirs(path: String): Unit = LocalFs.mkdirs(path)
-  override def readString(path: String): Option[String] = LocalFs.readString(path)
-  override def writeString(path: String, content: String): Unit =
-    LocalFs.writeString(path, content)
-}
-
-/** Local-POSIX [[StoreFs]]: byte-identical to the pre-seam java.io.File
-  * code paths — the existing AtomicSwap/BucketedStore specs pin that. */
+/** Local-disk [[StoreFs]] over java.io.File. */
 object LocalFs extends StoreFs {
-  override def atomicRename: Boolean = true
 
   override def listNames(dir: String): Seq[String] =
     Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
@@ -86,9 +54,6 @@ object LocalFs extends StoreFs {
   override def exists(path: String): Boolean = new File(path).exists()
 
   override def isDir(path: String): Boolean = new File(path).isDirectory
-
-  override def rename(src: String, dst: String): Boolean =
-    new File(src).renameTo(new File(dst))
 
   override def deleteRecursively(path: String): Unit = del(new File(path))
 
@@ -113,7 +78,7 @@ object LocalFs extends StoreFs {
   override def writeString(path: String, content: String): Unit = {
     // temp-write + fsync + rename (+ parent-dir fsync): atomic on POSIX
     // against process crash AND durable against OS crash/power loss — an
-    // object-store PUT is durable on ack, and this is the manifest
+    // object-store PUT is durable on ack, and this is the table-commit
     // protocol's COMMIT primitive, so the rename must not be reordered
     // past the data flush (r14 advice). The parent-dir fsync makes the
     // rename itself durable; skipped silently where the OS refuses a

@@ -5,58 +5,32 @@ import java.nio.file.Files
 
 import graft.streaming.AtomicSwap
 
+/** [[AtomicSwap]]'s writer-side contract: a swap leaves exactly the live
+  * generation and its pointer behind, and recover reports a table that
+  * was never committed. The crash windows of the pointer-file commit are
+  * probed in StoreFsSpec and ProtocolCrashFuzzSpec. */
 class AtomicSwapSpec extends SparkSpec {
   import spark.implicits._
 
-  private def write(path: String, v: String): Unit =
-    Seq(v).toDF("v").write.mode("overwrite").parquet(path)
   private def readV(path: String): String =
-    spark.read.parquet(path).as[String].head()
+    AtomicSwap.read(spark, path).get.as[String].head()
 
   "swap" should "replace the table and clean up, leaving no leftovers" in {
     val root = Files.createTempDirectory("swap1").toFile.getAbsolutePath
     val t = s"$root/table"
-    write(t, "v1")
-    AtomicSwap.swap(Seq("v2").toDF("v"), t, batchId = 1)
+    AtomicSwap.swap(Seq("v1").toDF("v"), t, batchId = 1)
+    // a crashed writer's fully-written but never-committed generation
+    Seq("v2-partial").toDF("v").write.parquet(s"$t.gen-7")
+    AtomicSwap.swap(Seq("v2").toDF("v"), t, batchId = 2)
     readV(t) shouldBe "v2"
-    new File(root).listFiles().map(_.getName).toSeq shouldBe Seq("table")
+    // the superseded gen-1 and the orphan gen-7 are both gone
+    new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
+      Seq("table.gen-2", "table.ptr")
   }
 
-  "recover" should "restore the backup when a crash hit between the two renames" in {
-    val root = Files.createTempDirectory("swap2").toFile.getAbsolutePath
-    val t = s"$root/table"
-    write(t, "v1")
-    // simulate the crash window: target renamed away, tmp written, no swap-in
-    write(s"$t.tmp-7", "v2-partial")
-    new File(t).renameTo(new File(s"$t.old-7")) shouldBe true
-    AtomicSwap.recover(t) shouldBe true
-    readV(t) shouldBe "v1" // prior state restored, nothing lost
-    new File(root).listFiles().map(_.getName).toSeq shouldBe Seq("table") // swept
-  }
-
-  it should "sweep stale tmp dirs when the table survived" in {
-    val root = Files.createTempDirectory("swap3").toFile.getAbsolutePath
-    val t = s"$root/table"
-    write(t, "v1")
-    write(s"$t.tmp-3", "junk")
-    AtomicSwap.recover(t) shouldBe true
-    readV(t) shouldBe "v1"
-    new File(root).listFiles().map(_.getName).toSeq shouldBe Seq("table")
-  }
-
-  it should "report a missing table with no backup as unrecoverable" in {
+  "recover" should "report a missing table with no backup as unrecoverable" in {
     val root = Files.createTempDirectory("swap4").toFile.getAbsolutePath
     AtomicSwap.recover(s"$root/table") shouldBe false
-  }
-
-  it should "restore the numerically newest backup, not the lexicographic one" in {
-    val root = Files.createTempDirectory("swap5").toFile.getAbsolutePath
-    val t = s"$root/table"
-    // batch 9 vs batch 10: "old-9" > "old-10" lexicographically but 10 is newer
-    write(s"$t.old-9", "gen9")
-    write(s"$t.old-10", "gen10")
-    AtomicSwap.recover(t) shouldBe true
-    readV(t) shouldBe "gen10"
-    new File(root).listFiles().map(_.getName).toSeq shouldBe Seq("table")
+    AtomicSwap.read(spark, s"$root/table") shouldBe None
   }
 }

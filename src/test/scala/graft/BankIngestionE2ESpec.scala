@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.core.TimeRange
 import graft.state.KVTable
-import graft.streaming.ChangelogStream
+import graft.streaming.{AtomicSwap, ChangelogStream}
 
 /** Full-system flow mirroring the reference's gateway tests
   * (ExampleBankSpec): transactions stream in (changelog), state is
@@ -33,7 +33,7 @@ class BankIngestionE2ESpec extends SparkSpec {
       q.awaitTermination()
     }
     def state = KVTable(
-      spark.read.parquet(table),
+      AtomicSwap.read(spark, table).get,
       Seq("sortcode", "account", "txn"), "ts_us", tombstoneCol = Some("tombstone"))
 
     // ingest the 6-transaction fixture

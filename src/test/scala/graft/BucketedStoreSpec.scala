@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{BucketedStore, ChangelogStream}
+import graft.streaming.{AtomicSwap, BucketedStore, ChangelogStream}
 import org.apache.spark.sql.functions._
 
 /** Incremental bucketed table/index maintenance (r12 verdict #1): a
@@ -15,6 +15,14 @@ class BucketedStoreSpec extends SparkSpec {
 
   private val ddl = "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN"
   private val NumBuckets = 4
+
+  /** The one committed generation dir a routed scan read. */
+  private def scannedDir(df: org.apache.spark.sql.DataFrame): String = {
+    val dirs = df.inputFiles
+      .map(f => new java.io.File(new java.net.URI(f)).getParent).toSet
+    dirs.size shouldBe 1
+    dirs.head
+  }
 
   /** Bucket id of an int key under the store's routing (same expression). */
   private def bucketOf(keys: Seq[Int]): Map[Int, Int] =
@@ -77,9 +85,9 @@ class BucketedStoreSpec extends SparkSpec {
 
     // (a) table and index ≡ the full re-derivation
     canonT(BucketedStore.read(spark, s"$root/bt").get) shouldBe
-      canonT(spark.read.parquet(s"$root/ft"))
+      canonT(AtomicSwap.read(spark, s"$root/ft").get)
     val idx = canonI(BucketedStore.read(spark, s"$root/bidx").get)
-    idx shouldBe canonI(spark.read.parquet(s"$root/fidx"))
+    idx shouldBe canonI(AtomicSwap.read(spark, s"$root/fidx").get)
     // …and ≡ the batch index of the replayed log
     val replayed = graft.state.SecondaryIndex.build(
       graft.core.Changelog.compact(spark.read.parquet(in),
@@ -88,6 +96,10 @@ class BucketedStoreSpec extends SparkSpec {
     idx shouldBe canonI(replayed)
     // term move applied: the seed x-term of the updated key is gone
     idx.filter(_._2 == hotKeys.head).map(_._1) shouldBe Seq("y")
+    // the live generations are staging subdirs — the staging roots that
+    // still back a pointer survived the per-batch staging sweeps
+    for (store <- Seq(s"$root/bt", s"$root/bidx"); b <- 0 until NumBuckets)
+      AtomicSwap.resolve(BucketedStore.bucketDir(store, b)) shouldBe defined
 
     // (b) the drain really was multi-batch, and batches 2/3 read back only
     // the hot bucket — strictly less than the table
@@ -125,7 +137,7 @@ class BucketedStoreSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(in)
     drainBoth()
     canon(BucketedStore.read(spark, s"$root/bt").get) shouldBe
-      canon(spark.read.parquet(s"$root/ft"))
+      canon(AtomicSwap.read(spark, s"$root/ft").get)
 
     // restart with an update + insert on the same checkpoints
     Seq((1, "a2", 200L, false), (3, "c1", 150L, false))
@@ -133,38 +145,21 @@ class BucketedStoreSpec extends SparkSpec {
       .coalesce(1).write.mode("append").parquet(in)
     drainBoth()
     val got = canon(BucketedStore.read(spark, s"$root/bt").get)
-    got shouldBe canon(spark.read.parquet(s"$root/ft"))
+    got shouldBe canon(AtomicSwap.read(spark, s"$root/ft").get)
     got.map(r => (r._1, r._2)) shouldBe Seq((1, "a2"), (2, "b1"), (3, "c1"))
 
-    // routed point lookup: right row, and the scan touches ONE bucket dir
+    // routed point lookup: right row, and the scan touches ONE bucket —
+    // key 1's committed generation
     BucketedStore.numBuckets(s"$root/bt") shouldBe Some(NumBuckets)
     val pl = BucketedStore.pointLookup(spark, s"$root/bt", Seq("key"), Seq(1))
     pl shouldBe defined
     pl.get.select("key", "value").as[(Int, String)].collect().toSeq shouldBe
       Seq((1, "a2"))
-    val scannedDirs = pl.get.inputFiles
-      .map(f => f.split('/').takeRight(2).head).toSet
-    scannedDirs.size shouldBe 1
-    scannedDirs.head should fullyMatch regex "b\\d+"
+    scannedDir(pl.get) shouldBe AtomicSwap.resolve(
+      BucketedStore.bucketDir(s"$root/bt", bucketOf(Seq(1))(1))).get
   }
 
-  "BucketedStore.read" should "recover a bucket caught mid-swap (crash between the two renames)" in {
-    val root = Files.createTempDirectory("graft-bstore4").toFile.getAbsolutePath
-    Seq((1, "a"), (2, "b")).toDF("key", "value")
-      .write.parquet(BucketedStore.bucketDir(root, 0))
-    Seq((3, "c")).toDF("key", "value")
-      .write.parquet(BucketedStore.bucketDir(root, 1))
-    // simulate the crash window: bucket 1 renamed to its backup, new dir
-    // never arrived
-    new java.io.File(BucketedStore.bucketDir(root, 1))
-      .renameTo(new java.io.File(s"${BucketedStore.bucketDir(root, 1)}.old-7")) shouldBe true
-    BucketedStore.existingBuckets(root) shouldBe Seq(0, 1) // backup counts
-    BucketedStore.read(spark, root).get
-      .orderBy("key").as[(Int, String)].collect().toSeq shouldBe
-      Seq((1, "a"), (2, "b"), (3, "c"))
-  }
-
-  it should "swap a fully-tombstoned bucket's index to empty (stale postings vanish)" in {
+  "BucketedStore.read" should "swap a fully-tombstoned bucket's index to empty (stale postings vanish)" in {
     val root = Files.createTempDirectory("graft-bstore2").toFile.getAbsolutePath
     val in = s"$root/in"
     new java.io.File(in).mkdirs()
@@ -203,21 +198,20 @@ class BucketedStoreSpec extends SparkSpec {
           spark.readStream.schema(ddl).parquet(in), Seq("key"), "ts_us",
           t, s"$root/ckpt", numBuckets = NumBuckets)
         .start().awaitTermination()
-    def serve(k: Int): (String, String) = {
-      // the w37/Gateway read path: driver-routed single-bucket scan
+    val bucket = BucketedStore.bucketDir(t, bucketOf(Seq(7))(7))
+    def serve(k: Int): String = {
+      // the w37/Gateway read path: driver-routed single-bucket scan of the
+      // bucket's committed generation — the same bucket every generation
       val df = BucketedStore.pointLookup(spark, t, Seq("key"), Seq(k)).get
-      val dirs = df.inputFiles.map(f =>
-        new java.io.File(f).getParentFile.getName).toSet
-      dirs.size shouldBe 1
-      (df.select("value").as[String].head(), dirs.head)
+      scannedDir(df) shouldBe AtomicSwap.resolve(bucket).get
+      df.select("value").as[String].head()
     }
 
     // generation 1
     Seq((7, "g1", 100L, false)).toDF("key", "value", "ts_us", "tombstone")
       .coalesce(1).write.mode("append").parquet(in)
     drain()
-    val (v1, dir1) = serve(7)
-    v1 shouldBe "g1"
+    serve(7) shouldBe "g1"
 
     // generation 2: a read taken AFTER the next drain sees the new value
     // through the same route (concurrent-reader guarantee across swaps)
@@ -225,22 +219,20 @@ class BucketedStoreSpec extends SparkSpec {
     Seq((7, "g2", 200L, false)).toDF("key", "value", "ts_us", "tombstone")
       .coalesce(1).write.mode("append").parquet(in)
     drain()
-    val (v2, dir2) = serve(7)
-    v2 shouldBe "g2"
-    dir2 shouldBe dir1 // same key routes to the same bucket, every generation
+    serve(7) shouldBe "g2"
 
     // generation 3
     Thread.sleep(20)
     Seq((7, "g3", 300L, false)).toDF("key", "value", "ts_us", "tombstone")
       .coalesce(1).write.mode("append").parquet(in)
     drain()
-    serve(7)._1 shouldBe "g3"
+    serve(7) shouldBe "g3"
 
-    // a read DURING the crash window w36 simulates (bucket renamed to its
-    // backup, replacement never arrived): the routed read recovers and
-    // serves the last COMMITTED generation, never a torn one
-    val bdir = new java.io.File(s"$t/$dir2")
-    bdir.renameTo(new java.io.File(s"$t/$dir2.old-99")) shouldBe true
-    serve(7)._1 shouldBe "g3"
+    // a read DURING the crash window (a writer's next generation fully
+    // written, pointer never flipped): the routed read serves the last
+    // COMMITTED generation, never the uncommitted one
+    Seq((7, "uncommitted", 400L, false)).toDF("key", "value", "ts_us", "tombstone")
+      .write.parquet(s"$bucket.gen-99")
+    serve(7) shouldBe "g3"
   }
 }

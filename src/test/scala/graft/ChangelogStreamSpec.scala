@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.ChangelogStream
+import graft.streaming.{AtomicSwap, ChangelogStream}
 import org.apache.spark.sql.functions._
 
 /** End-to-end file-backed changelog streaming: ingest → latest-per-key
@@ -28,7 +28,7 @@ class ChangelogStreamSpec extends SparkSpec {
       ChangelogStream.fromFiles(spark, in, schemaDdl), Seq("key"), "ts_us", table, ckpt))
     q1.awaitTermination()
 
-    spark.read.parquet(table).orderBy("key")
+    AtomicSwap.read(spark, table).get.orderBy("key")
       .select("key", "value").as[(Int, String)].collect() shouldBe
       Seq((1, "a1"), (2, "b1"))
 
@@ -40,7 +40,7 @@ class ChangelogStreamSpec extends SparkSpec {
       ChangelogStream.fromFiles(spark, in, schemaDdl), Seq("key"), "ts_us", table, ckpt))
     q2.awaitTermination()
 
-    spark.read.parquet(table).orderBy("key")
+    AtomicSwap.read(spark, table).get.orderBy("key")
       .select("key", "value").as[(Int, String)].collect() shouldBe
       Seq((1, "a2"), (2, "b1"), (3, "c1")) // last writer won; old keys kept
   }
@@ -60,7 +60,7 @@ class ChangelogStreamSpec extends SparkSpec {
       Seq("key"), "ts_us", s"$root/table", s"$root/ckpt",
       tieBreakCols = Seq("offset")))
     q.awaitTermination()
-    spark.read.parquet(s"$root/table")
+    AtomicSwap.read(spark, s"$root/table").get
       .select("value").as[String].collect() shouldBe Array("newer")
   }
 
@@ -77,7 +77,7 @@ class ChangelogStreamSpec extends SparkSpec {
     q.awaitTermination()
     // materialized table keeps the tombstone record (changelog semantics);
     // the serving view filters it, mirroring compaction-then-read
-    val live = graft.core.Changelog.dropTombstones(spark.read.parquet(table), "tombstone")
+    val live = graft.core.Changelog.dropTombstones(AtomicSwap.read(spark, table).get, "tombstone")
     live.select("key").as[Int].collect() shouldBe Seq(1)
   }
 }

@@ -110,7 +110,7 @@ class GatewaySpec extends SparkSpec {
   }
 
   it should "serve /kv through the bucketed route, scanning exactly ONE bucket dir per request (r13 verdict #6)" in {
-    import graft.streaming.BucketedStore
+    import graft.streaming.{AtomicSwap, BucketedStore}
     val root = java.nio.file.Files.createTempDirectory("graft-gwb")
       .toFile.getAbsolutePath
     val df = Seq(
@@ -129,11 +129,15 @@ class GatewaySpec extends SparkSpec {
       val ok = get(s"$base/kv/2")
       ok.statusCode() shouldBe 200
       ok.body() should include(""""owner":"robert"""")
-      // the stamped scan metric: one bucket dir, never the table — the
-      // reference's partition-routed read cost model (Group.scala:78-82)
-      route.lastScanDirs.size shouldBe 1
-      new java.io.File(route.lastScanDirs.head).getName should
-        fullyMatch regex "b\\d+"
+      // the route's scan: key 2's one committed bucket generation, never
+      // the table — the reference's partition-routed read cost model
+      // (Group.scala:78-82)
+      val id = Seq(2L).toDF("account")
+        .select(BucketedStore.bucketCol(Seq("account"), 4)).as[Int].head()
+      BucketedStore.pointLookup(spark, root, Seq("account"), Seq(2L)).get
+        .inputFiles.map(f => new java.io.File(new java.net.URI(f)).getParent)
+        .distinct.toSeq shouldBe
+        Seq(AtomicSwap.resolve(BucketedStore.bucketDir(root, id)).get)
       get(s"$base/kv/3").statusCode() shouldBe 404 // tombstoned
       get(s"$base/kv/99").statusCode() shouldBe 404 // miss
       get(s"$base/kv/not-a-long").statusCode() shouldBe 404 // uncoercible

@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{ChangelogStream, GraphStream}
+import graft.streaming.{AtomicSwap, ChangelogStream, GraphStream}
 
 /** Port of the reference's incremental graph scenario
   * (AnalyticsSystemSpec.scala:47-101 / ApiSystemTest): connect(1,2),
@@ -23,7 +23,7 @@ class GraphStreamSpec extends SparkSpec {
       q.awaitTermination()
     }
     def components(): Map[String, String] =
-      spark.read.parquet(s"$rootDir/state/components")
+      AtomicSwap.read(spark, s"$rootDir/state/components").get
         .as[(String, String)].collect().toMap
 
     // batch 1: 1-2, 3-4

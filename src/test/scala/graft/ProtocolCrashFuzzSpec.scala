@@ -2,13 +2,12 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{AtomicSwap, BucketedStore, LocalFs, ObjectStoreSimFs, StoreFs}
-import org.apache.spark.sql.functions._
+import graft.streaming.{AtomicSwap, BucketedStore, LocalFs, StoreFs}
 
-/** EXHAUSTIVE crash-point fuzz over both table-commit protocols (r14 —
-  * generalizing the hand-picked windows of AtomicSwapSpec/StoreFsSpec):
-  * a [[CrashFs]] wrapper throws at the k-th metadata MUTATION
-  * (rename/delete/writeString/mkdirs — reads don't advance the clock),
+/** EXHAUSTIVE crash-point fuzz over the pointer-file table commit (r14 —
+  * generalizing the hand-picked windows of StoreFsSpec): a [[CrashFs]]
+  * wrapper throws at the k-th metadata MUTATION
+  * (delete/writeString/mkdirs — reads don't advance the clock),
   * and the spec iterates k over EVERY index a full batch performs, so
   * every between-steps crash window the protocol has is visited, not
   * just the ones someone thought of. After each injected crash:
@@ -24,8 +23,8 @@ import org.apache.spark.sql.functions._
   * stronger whole-table old-XOR-new assertion. Data writes (Spark
   * parquet) are outside the seam; a crash during a FIRST attempt's data
   * write is equivalent to k=0 (nothing committed). A batch RE-RUN's data
-  * write is NOT (r14 advice, high): under the manifest protocol the
-  * previous attempt's committed generations live inside its staging dir,
+  * write is NOT (r14 advice, high): the previous attempt's committed
+  * generations live inside its staging dir,
   * so the re-run must never overwrite it — the third fuzz drives every
   * crash point of a re-run after a maximally-committed first crash and
   * asserts no window dangles a bucket pointer. */
@@ -39,14 +38,10 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
   private final class CrashFs(delegate: StoreFs, failAfter: Int) extends StoreFs {
     var ops = 0
     private def step(): Unit = { ops += 1; if (ops > failAfter) throw new Crash }
-    override def atomicRename: Boolean = delegate.atomicRename
     override def listNames(dir: String): Seq[String] = delegate.listNames(dir)
     override def exists(path: String): Boolean = delegate.exists(path)
     override def isDir(path: String): Boolean = delegate.isDir(path)
     override def readString(path: String): Option[String] = delegate.readString(path)
-    override def rename(src: String, dst: String): Boolean = {
-      step(); delegate.rename(src, dst)
-    }
     override def deleteRecursively(path: String): Unit = {
       step(); delegate.deleteRecursively(path)
     }
@@ -77,7 +72,8 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     Seq(k).toDF("key")
       .select(BucketedStore.bucketCol(Seq("key"), NumBuckets)).as[Int].head()
 
-  private def fuzzProtocol(base: StoreFs, label: String): Unit = {
+  "the manifest protocol" should "be per-bucket atomic and re-run-healable at EVERY crash point" in {
+    val base: StoreFs = LocalFs
     val keys = (1 to 12).toSeq
     keys.map(bucketOf).toSet should have size NumBuckets.toLong.toInt
     val oldRows = keys.map(k => (k, s"old$k"))
@@ -85,7 +81,7 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     val byBucket: Map[Int, Seq[Int]] = keys.groupBy(bucketOf)
 
     // total mutations of batch 2 alone
-    val proto = Files.createTempDirectory(s"fz-$label-probe").toFile.getAbsolutePath
+    val proto = Files.createTempDirectory("fz-probe").toFile.getAbsolutePath
     writeBatch(proto, oldRows, 1L, base)
     val counter = new CrashFs(base, Int.MaxValue)
     writeBatch(proto, newRows, 2L, counter)
@@ -94,17 +90,17 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
 
     var mixedSeen = false
     for (k <- 0 until batchOps) {
-      val root = Files.createTempDirectory(s"fz-$label-$k").toFile.getAbsolutePath
+      val root = Files.createTempDirectory(s"fz-$k").toFile.getAbsolutePath
       writeBatch(root, oldRows, 1L, base)
       intercept[Crash] { writeBatch(root, newRows, 2L, new CrashFs(base, k)) }
 
-      // 1. per-bucket atomicity through the CLEAN fs (read = recovery)
+      // 1. per-bucket atomicity, read through the CLEAN fs
       val state = readState(root, base)
       val bucketStates = byBucket.map { case (b, bk) =>
         val got = bk.map(kk => kk -> state.get(kk)).toMap
         val isOld = bk.forall(kk => got(kk).contains(s"old$kk"))
         val isNew = bk.forall(kk => got(kk).contains(s"new$kk"))
-        withClue(s"$label k=$k bucket $b torn: $got ") {
+        withClue(s"k=$k bucket $b torn: $got ") {
           isOld || isNew shouldBe true
         }
         isNew
@@ -117,18 +113,10 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     }
     // the fuzz actually exercised the interesting region: some crash
     // points left a legal mixed-generation table that the re-run healed
-    withClue(s"$label: no crash point produced a mixed state — " +
+    withClue("no crash point produced a mixed state — " +
       "the sweep is not visiting the between-bucket windows ") {
       mixedSeen shouldBe true
     }
-  }
-
-  "the rename protocol" should "be per-bucket atomic and re-run-healable at EVERY crash point" in {
-    fuzzProtocol(LocalFs, "rename")
-  }
-
-  "the manifest protocol" should "be per-bucket atomic and re-run-healable at EVERY crash point" in {
-    fuzzProtocol(ObjectStoreSimFs, "manifest")
   }
 
   it should "survive every crash point of a batch RE-RUN after a maximally-committed first crash" in {
@@ -139,7 +127,7 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     // staging), so at every crash point j of the re-run each bucket still
     // reads exactly OLD or NEW — no window dangles a pointer into a
     // deleted staging (the old code's silent-loss window).
-    val base: StoreFs = ObjectStoreSimFs
+    val base: StoreFs = LocalFs
     val keys = (1 to 12).toSeq
     val oldRows = keys.map(k => (k, s"old$k"))
     val newRows = keys.map(k => (k, s"new$k"))
@@ -187,33 +175,29 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     }
   }
 
-  "AtomicSwap.swap" should "leave the table exactly OLD or exactly NEW at every crash point, both protocols" in {
-    for ((base, label) <- Seq((LocalFs: StoreFs, "rename"),
-        (ObjectStoreSimFs: StoreFs, "manifest"))) {
-      val proto = Files.createTempDirectory(s"fzs-$label-probe").toFile.getAbsolutePath
-      AtomicSwap.swap(Seq("A").toDF("v"), s"$proto/t", 1L, base)
-      val counter = new CrashFs(base, Int.MaxValue)
-      AtomicSwap.swap(Seq("B").toDF("v"), s"$proto/t", 2L, counter)
-      val batchOps = counter.ops
-      batchOps should be > 1
-      for (k <- 0 until batchOps) {
-        val root = Files.createTempDirectory(s"fzs-$label-$k").toFile.getAbsolutePath
-        val t = s"$root/t"
-        AtomicSwap.swap(Seq("A").toDF("v"), t, 1L, base)
-        intercept[Crash] {
-          AtomicSwap.swap(Seq("B").toDF("v"), t, 2L, new CrashFs(base, k))
-        }
-        val dir = AtomicSwap.resolve(t, base)
-        withClue(s"$label k=$k: table unreadable after crash ") {
-          dir shouldBe defined
-        }
-        val v = spark.read.parquet(dir.get).as[String].head()
-        withClue(s"$label k=$k: ") { Set("A", "B") should contain(v) }
-        // healing
-        AtomicSwap.swap(Seq("B").toDF("v"), t, 2L, base)
-        spark.read.parquet(AtomicSwap.resolve(t, base).get)
-          .as[String].head() shouldBe "B"
+  "AtomicSwap.swap" should "leave the table exactly OLD or exactly NEW at every crash point" in {
+    val proto = Files.createTempDirectory("fzs-probe").toFile.getAbsolutePath
+    AtomicSwap.swap(Seq("A").toDF("v"), s"$proto/t", 1L)
+    val counter = new CrashFs(LocalFs, Int.MaxValue)
+    AtomicSwap.swap(Seq("B").toDF("v"), s"$proto/t", 2L, counter)
+    val batchOps = counter.ops
+    batchOps should be > 1
+    for (k <- 0 until batchOps) {
+      val root = Files.createTempDirectory(s"fzs-$k").toFile.getAbsolutePath
+      val t = s"$root/t"
+      AtomicSwap.swap(Seq("A").toDF("v"), t, 1L)
+      intercept[Crash] {
+        AtomicSwap.swap(Seq("B").toDF("v"), t, 2L, new CrashFs(LocalFs, k))
       }
+      val table = AtomicSwap.read(spark, t)
+      withClue(s"k=$k: table unreadable after crash ") {
+        table shouldBe defined
+      }
+      val v = table.get.as[String].head()
+      withClue(s"k=$k: ") { Set("A", "B") should contain(v) }
+      // healing
+      AtomicSwap.swap(Seq("B").toDF("v"), t, 2L)
+      AtomicSwap.read(spark, t).get.as[String].head() shouldBe "B"
     }
   }
 }

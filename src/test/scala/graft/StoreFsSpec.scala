@@ -3,38 +3,33 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import graft.streaming.{AtomicSwap, BucketedStore, ChangelogStream, LocalFs, ObjectStoreSimFs, StoreFs}
-import org.apache.spark.sql.functions._
+import graft.streaming.{AtomicSwap, BucketedStore, LocalFs, StoreFs}
 
-/** The [[StoreFs]] seam (r13 verdict #1): a rename-less filesystem (the
-  * S3 model — rename is copy+delete, never atomic) must get the manifest
-  * (pointer-file) commit protocol, survive the same crash windows
-  * AtomicSwapSpec probes for the rename protocol, and carry the full
-  * bucketed maintenance drain to the same result. [[ObjectStoreSimFs]]'s
-  * rename THROWS, so any rename issued on the manifest branch fails the
-  * test — not just "works without", but "provably never renames". (Spark's
-  * parquet data writes go through Hadoop, outside the seam — on a real
-  * object store that's the cloud committer's job.) */
+/** The pointer-file (manifest) table commit over the [[StoreFs]] seam
+  * (r13 verdict #1): the crash windows of [[AtomicSwap]]'s one protocol,
+  * the passive read, and the bucketed store's metadata guards. The seam
+  * has no rename, so no commit can issue one — the protocol needs nothing
+  * an object store (S3 model: rename is copy+delete, never atomic) lacks.
+  * (Spark's parquet data writes go through Hadoop, outside the seam — on
+  * a real object store that's the cloud committer's job.) */
 class StoreFsSpec extends SparkSpec {
   import spark.implicits._
 
-  private val NoRenameFs: StoreFs = ObjectStoreSimFs
-
-  private def write(path: String, v: String, fs: StoreFs): Unit =
-    AtomicSwap.swap(Seq(v).toDF("v"), path, batchId = 1, fs)
-  private def readV(path: String, fs: StoreFs): String = {
-    val dir = AtomicSwap.resolve(path, fs)
-    dir shouldBe defined
-    spark.read.parquet(dir.get).as[String].head()
+  private def write(path: String, v: String): Unit =
+    AtomicSwap.swap(Seq(v).toDF("v"), path, batchId = 1)
+  private def readV(path: String): String = {
+    val df = AtomicSwap.read(spark, path)
+    df shouldBe defined
+    df.get.as[String].head()
   }
 
   "manifest swap" should "replace the table content and sweep the superseded generation, never renaming" in {
     val root = Files.createTempDirectory("mfs1").toFile.getAbsolutePath
     val t = s"$root/table"
-    write(t, "v1", NoRenameFs)
-    readV(t, NoRenameFs) shouldBe "v1"
-    AtomicSwap.swap(Seq("v2").toDF("v"), t, batchId = 2, NoRenameFs)
-    readV(t, NoRenameFs) shouldBe "v2"
+    write(t, "v1")
+    readV(t) shouldBe "v1"
+    AtomicSwap.swap(Seq("v2").toDF("v"), t, batchId = 2)
+    readV(t) shouldBe "v2"
     // superseded gen-1 deleted at commit; only gen-2 + the pointer remain
     new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
       Seq("table.gen-2", "table.ptr")
@@ -43,13 +38,12 @@ class StoreFsSpec extends SparkSpec {
   it should "leave the OLD generation live when a crash hits before the pointer flip, and sweep the orphan" in {
     val root = Files.createTempDirectory("mfs2").toFile.getAbsolutePath
     val t = s"$root/table"
-    write(t, "v1", NoRenameFs)
+    write(t, "v1")
     // simulate the crash window: new generation fully written, pointer
-    // never flipped (the manifest analogue of AtomicSwapSpec's
-    // between-the-two-renames window)
+    // never flipped
     Seq("v2-uncommitted").toDF("v").write.parquet(s"$t.gen-9")
-    AtomicSwap.recover(t, NoRenameFs) shouldBe true
-    readV(t, NoRenameFs) shouldBe "v1" // prior state intact, nothing lost
+    AtomicSwap.recover(t) shouldBe true
+    readV(t) shouldBe "v1" // prior state intact, nothing lost
     new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
       Seq("table.gen-1", "table.ptr") // orphan gen-9 swept
   }
@@ -60,14 +54,14 @@ class StoreFsSpec extends SparkSpec {
     // both generations on disk, pointer already flipped to gen-2
     Seq("v1").toDF("v").write.parquet(s"$t.gen-1")
     Seq("v2").toDF("v").write.parquet(s"$t.gen-2")
-    NoRenameFs.writeString(s"$t.ptr", s"$t.gen-2")
-    readV(t, NoRenameFs) shouldBe "v2"
+    LocalFs.writeString(s"$t.ptr", s"$t.gen-2")
+    readV(t) shouldBe "v2"
     // resolve (a READ) is passive since r15 — the superseded gen-1 stays
     // until the recovery entry sweeps it (a read-side sweep could delete
     // a concurrent writer's not-yet-committed generation)
     new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
       Seq("table.gen-1", "table.gen-2", "table.ptr")
-    AtomicSwap.recover(t, NoRenameFs) shouldBe true
+    AtomicSwap.recover(t) shouldBe true
     new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
       Seq("table.gen-2", "table.ptr") // superseded gen-1 swept on recover
   }
@@ -75,126 +69,50 @@ class StoreFsSpec extends SparkSpec {
   it should "report a never-committed table as unrecoverable and sweep uncommitted generations on recover" in {
     val root = Files.createTempDirectory("mfs4").toFile.getAbsolutePath
     val t = s"$root/table"
-    AtomicSwap.recover(t, NoRenameFs) shouldBe false
+    AtomicSwap.recover(t) shouldBe false
     // a generation with no pointer is an uncommitted orphan; a passive
     // resolve leaves it (forensics/writer-race safety), recover sweeps it
     Seq("junk").toDF("v").write.parquet(s"$t.gen-3")
-    AtomicSwap.resolve(t, NoRenameFs) shouldBe None
+    AtomicSwap.resolve(t) shouldBe None
     new File(s"$t.gen-3").isDirectory shouldBe true
-    AtomicSwap.recover(t, NoRenameFs) shouldBe false
+    AtomicSwap.recover(t) shouldBe false
     new File(root).listFiles() shouldBe empty
   }
 
-  it should "resolve with ZERO metadata mutations under both protocols (passive reads)" in {
+  it should "resolve with ZERO metadata mutations (passive reads)" in {
     // a reader concurrent with the single writer must never delete the
     // writer's fully-written-but-not-yet-committed generation (r14 advice,
     // medium): any mutation issued by resolve throws here
     final class NoMutationFs(delegate: StoreFs) extends StoreFs {
       private def mutation(op: String): Nothing =
         throw new IllegalStateException(s"resolve issued a mutation: $op")
-      override def atomicRename: Boolean = delegate.atomicRename
       override def listNames(dir: String): Seq[String] = delegate.listNames(dir)
       override def exists(path: String): Boolean = delegate.exists(path)
       override def isDir(path: String): Boolean = delegate.isDir(path)
       override def readString(path: String): Option[String] = delegate.readString(path)
-      override def rename(src: String, dst: String): Boolean = mutation(s"rename $src")
       override def deleteRecursively(path: String): Unit = mutation(s"delete $path")
       override def mkdirs(path: String): Unit = mutation(s"mkdirs $path")
       override def writeString(path: String, content: String): Unit =
         mutation(s"writeString $path")
     }
-    // manifest: live gen + a writer's in-flight (unreferenced) gen + an orphan
+    // live gen + a writer's in-flight (unreferenced) gen
     val root = Files.createTempDirectory("mfs-passive").toFile.getAbsolutePath
     val t = s"$root/table"
-    write(t, "v1", NoRenameFs)
+    write(t, "v1")
     Seq("in-flight").toDF("v").write.parquet(s"$t.gen-7") // writer mid-swap
-    AtomicSwap.resolve(t, new NoMutationFs(NoRenameFs)) shouldBe defined
-    readV(t, NoRenameFs) shouldBe "v1"
+    AtomicSwap.resolve(t, new NoMutationFs(LocalFs)) shouldBe defined
+    AtomicSwap.read(spark, t, new NoMutationFs(LocalFs)).get
+      .as[String].head() shouldBe "v1"
     new File(s"$t.gen-7").isDirectory shouldBe true // the in-flight gen survived the read
-    // rename protocol: mid-crash window (table missing, backup present) —
-    // a passive read serves the newest backup IN PLACE, no rollback
-    val root2 = Files.createTempDirectory("mfs-passive2").toFile.getAbsolutePath
-    val t2 = s"$root2/table"
-    Seq("old").toDF("v").write.parquet(s"$t2.old-3")
-    val served = AtomicSwap.resolve(t2, new NoMutationFs(LocalFs))
-    served shouldBe Some(s"$t2.old-3")
-    spark.read.parquet(served.get).as[String].head() shouldBe "old"
   }
 
   it should "not sweep data when the pointer's target is missing (forensics, not destruction)" in {
     val root = Files.createTempDirectory("mfs5").toFile.getAbsolutePath
     val t = s"$root/table"
     Seq("v1").toDF("v").write.parquet(s"$t.gen-1")
-    NoRenameFs.writeString(s"$t.ptr", s"$t.gen-99") // dangling pointer
-    AtomicSwap.resolve(t, NoRenameFs) shouldBe None
+    LocalFs.writeString(s"$t.ptr", s"$t.gen-99") // dangling pointer
+    AtomicSwap.resolve(t) shouldBe None
     new File(s"$t.gen-1").isDirectory shouldBe true // left in place
-  }
-
-  private val ddl = "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN"
-  private val NumBuckets = 4
-
-  "bucketed maintenance over a rename-less store" should "equal the rename-protocol drain, route point reads to one generation, and keep staged generations live" in {
-    val root = Files.createTempDirectory("mfs6").toFile.getAbsolutePath
-    val in = s"$root/in"
-    new File(in).mkdirs()
-
-    val keys = (1 to 20).toSeq
-    val bmap = keys.toDF("key")
-      .select(col("key"), BucketedStore.bucketCol(Seq("key"), NumBuckets).as("b"))
-      .as[(Int, Int)].collect().toMap
-    val hotBucket = bmap(keys.head)
-    val hotKeys = keys.filter(bmap(_) == hotBucket)
-
-    def writeFile(rows: Seq[(Int, String, Long, Boolean)]): Unit = {
-      rows.toDF("key", "value", "ts_us", "tombstone")
-        .coalesce(1).write.mode("append").parquet(in)
-      Thread.sleep(20)
-    }
-    writeFile(keys.map(k => (k, s"x$k", 100L, false)))
-    writeFile(Seq(
-      (hotKeys.head, s"y${hotKeys.head}", 200L, false),
-      (hotKeys(1), null.asInstanceOf[String], 200L, true)))
-    writeFile(Seq((hotKeys(1), s"z${hotKeys(1)}", 300L, false)))
-
-    def stream() = spark.readStream.schema(ddl)
-      .option("maxFilesPerTrigger", "1").parquet(in)
-    val indexFn = array(substring(col("value"), 1, 1))
-
-    ChangelogStream.maintainIndexedBucketed(stream(), Seq("key"), "ts_us",
-        indexFn, s"$root/mt", s"$root/midx", s"$root/mckpt",
-        numBuckets = NumBuckets, fs = NoRenameFs)
-      .start().awaitTermination()
-    ChangelogStream.maintainIndexedBucketed(stream(), Seq("key"), "ts_us",
-        indexFn, s"$root/rt", s"$root/ridx", s"$root/rckpt",
-        numBuckets = NumBuckets)
-      .start().awaitTermination()
-
-    def canonT(df: org.apache.spark.sql.DataFrame) =
-      df.select("key", "value", "ts_us", "tombstone").orderBy("key")
-        .as[(Int, String, Long, Boolean)].collect().toSeq
-    def canonI(df: org.apache.spark.sql.DataFrame) =
-      df.select("index_key", "key").orderBy("index_key", "key")
-        .as[(String, Int)].collect().toSeq
-
-    canonT(BucketedStore.read(spark, s"$root/mt", NoRenameFs).get) shouldBe
-      canonT(BucketedStore.read(spark, s"$root/rt").get)
-    canonI(BucketedStore.read(spark, s"$root/midx", NoRenameFs).get) shouldBe
-      canonI(BucketedStore.read(spark, s"$root/ridx").get)
-
-    // routed point read resolves through the pointer to ONE generation dir
-    val pl = BucketedStore.pointLookup(
-      spark, s"$root/mt", Seq("key"), Seq(hotKeys.head), NoRenameFs)
-    pl shouldBe defined
-    pl.get.select("key", "value").as[(Int, String)].collect().toSeq shouldBe
-      Seq((hotKeys.head, s"y${hotKeys.head}"))
-    val gens = pl.get.inputFiles.map(f => new File(f).getParent).toSet
-    gens.size shouldBe 1
-
-    // the live generations are staging subdirs — the staging roots that
-    // still back a pointer must have survived the per-batch sweeps
-    val ptrs = NoRenameFs.listNames(s"$root/mt").filter(_.endsWith(".ptr"))
-      .flatMap(n => NoRenameFs.readString(s"$root/mt/$n"))
-    ptrs.foreach(p => new File(p).isDirectory shouldBe true)
   }
 
   "writeBuckets" should "refuse a bucket-count mismatch against the persisted arity" in {

@@ -1,32 +1,9 @@
 package graft
 
-import graft.state.Bucketed
 import graft.streaming.StreamingWindows
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-
-/** Bucketing ≙ the reference's murmur2 co-partitioning (README.md:84-90):
-  * joins between equally-bucketed tables run with zero shuffle. */
-class BucketedSpec extends SparkSpec {
-  import spark.implicits._
-
-  "bucketed tables" should "join with zero shuffle exchanges" in {
-    val left = (1L to 1000L).map(i => (i, s"l$i")).toDF("k", "lv")
-    val right = (1L to 1000L).map(i => (i, i * 2)).toDF("k", "rv")
-    Bucketed.write(left, "bkt_left", "k", 8)
-    Bucketed.write(right, "bkt_right", "k", 8)
-
-    val joined = Bucketed.read(spark, "bkt_left")
-      .join(Bucketed.read(spark, "bkt_right"), "k")
-    Bucketed.isShuffleFree(joined) shouldBe true
-    joined.count() shouldBe 1000L
-
-    // the same join on unbucketed frames shuffles (sanity: detector works)
-    val plain = left.join(right.hint("merge"), "k")
-    Bucketed.isShuffleFree(plain) shouldBe false
-  }
-}
 
 /** Watermarked event-time windows — SS state stays bounded and late data is
   * dropped (the principled form of the reference's min.timestamp.ms TTL). */
