@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    regime (each copy keeps its internal near-dup structure; cross-copy
   *    similarity is zero). This is the regime where d19's lossless prefix
   *    join is near-linear; its quadratic saturation curve is measured
-  *    separately by [[CandidateProbe]] and documented in PLANS.md;
+  *    separately and documented in PLANS.md (d19_prefix_join);
   *  - embeddings get a small deterministic per-copy perturbation (cosine
   *    structure within a copy is preserved; copies are near-coincident in
   *    vector space, the worst case for fixed-centroid IVF cells).

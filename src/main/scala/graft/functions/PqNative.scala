@@ -28,6 +28,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
   */
 object PqNative {
 
+  /** `m`, once `codes` holds exactly one code per codebook. A mismatch
+    * means codes and codebooks come from different encoders (wrong m, or
+    * stale codes against refreshed codebooks): a plausible-but-wrong score,
+    * so it fails instead of truncating to the shorter of the two. */
+  private[functions] def codeCount(codes: ArrayData, m: Int): Int = {
+    require(codes.numElements() == m,
+      s"PQ codes have ${codes.numElements()} entries for $m codebooks")
+    m
+  }
+
   /** argmin_i (‖c_i‖² − 2·⟨v[off..off+subDim), c_i⟩): ‖v‖² is constant per
     * row so this ranks exactly ‖v−c_i‖²; strict `<` keeps the lowest index
     * on ties. `cb` is the flat ksub×subDim centroid table, `norms` its
@@ -157,7 +167,7 @@ case class PqApproxDot(left: Expression, right: Expression,
 
   /** qv: quantized query vector; codes: m PQ codes. */
   def compute(qv: ArrayData, codes: ArrayData): Long = {
-    val m = math.min(flat.length, codes.numElements())
+    val m = PqNative.codeCount(codes, flat.length)
     val qLen = qv.numElements()
     var total = 0L
     var s = 0
@@ -211,7 +221,7 @@ case class PqSubDistortions(left: Expression, right: Expression,
     }.toArray
 
   def compute(v: ArrayData, codes: ArrayData): ArrayData = {
-    val m = math.min(flat.length, codes.numElements())
+    val m = PqNative.codeCount(codes, flat.length)
     val vLen = v.numElements()
     val out = new Array[Long](m)
     var s = 0

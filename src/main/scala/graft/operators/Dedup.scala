@@ -379,7 +379,8 @@ object Dedup {
     * never materializes a quadratic intermediate). Results are identical up
     * to 60-bit hash collisions (~|A||B|/2^60 per pair, never in practice). */
   /** `gramsFrame`: a caller-shared `(doc, <blockCols>, grams, ng)` frame
-    * (ng > 0 rows only, same gram universe) — lets a consensus query
+    * (same gram universe; its ng = 0 rows are dropped here as for the
+    * computed frame, a no-op on a pre-filtered one) — lets a consensus query
     * compute the per-doc gram sets ONCE for several blockers instead of
     * once per member (one corpus scan + gram pass instead of one each);
     * None reproduces the original plan byte-identically. */
@@ -404,10 +405,11 @@ object Dedup {
     // gram-less docs (normalized text shorter than n) cannot be near-dups;
     // dropping them BEFORE the self-join also kills the 0/0 = NaN jaccard a
     // pair of empty sets would produce (NaN >= threshold is TRUE in Spark's
-    // NaN ordering — it would emit spurious pairs the oracle never has)
+    // NaN ordering — it would emit spurious pairs the oracle never has);
+    // a caller-supplied frame gets the same filter
     val withGrams0 = gramsFrame.getOrElse(
-      (if (materializeGramSets) gramsLazy.localCheckpoint(true) else gramsLazy)
-        .filter(col("ng") > 0))
+      if (materializeGramSets) gramsLazy.localCheckpoint(true) else gramsLazy)
+      .filter(col("ng") > 0)
     val withGrams = capBuckets(withGrams0, blockCols, maxBlockSize)
     val a = withGrams.select(blockCols.map(col) :+ col("doc").as("id_a") :+
       col("grams").as("ga") :+ col("ng").as("na"): _*)
@@ -489,8 +491,9 @@ object Dedup {
     * NaN would leak pairs past the threshold), so ranks are contiguous
     * over verifiable docs — mirrored in the oracle. */
   /** `gramsFrame`: a caller-shared, already-checkpointed
-    * `(doc, <partitionCols>, sk, grams, ng)` frame (ng > 0 rows only, same
-    * gram universe and key length) — see [[ngramJaccardBlocked]];
+    * `(doc, <partitionCols>, sk, grams, ng)` frame (same gram universe and
+    * key length; its ng = 0 rows are dropped here, as for the computed
+    * frame) — see [[ngramJaccardBlocked]];
     * None reproduces the original plan byte-identically. */
   def sortedNeighborhoodJaccard(
       docs: DataFrame,
@@ -503,7 +506,7 @@ object Dedup {
       minJaccard: Double = 0.5,
       gramsFrame: Option[DataFrame] = None): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    val grams = gramsFrame.getOrElse(Par.fanOut(docs).select(
+    val grams = gramsFrame.map(_.filter(col("ng") > 0)).getOrElse(Par.fanOut(docs).select(
       (col(idCol).as("doc") +: partitionCols.map(col)) :+
         substring(normalizeText(col(textCol)), 1, keyLen).as("sk") :+
         charNgramHashSet(normalizeText(col(textCol)), n).as("grams"): _*)
@@ -675,7 +678,7 @@ object Dedup {
     * DEFINITION (e.g. near-dups within a language — the standard dedup
     * practice), which shrinks every posting bucket by the block's share.
     *
-    * GROWTH BOUND (measured, graft.CandidateProbe): candidate volume is
+    * GROWTH BOUND (measured; numbers in PLANS.md, d19_prefix_join): candidate volume is
     * data-dependent — ∝ Σ prefix-bucket². On a corpus whose vocabulary
     * keeps growing (real text: rare grams stay rare), prefix buckets stay
     * small and growth is near-linear. On a vocabulary-SATURATED corpus

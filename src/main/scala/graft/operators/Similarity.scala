@@ -331,6 +331,23 @@ object Similarity {
     centroids
   }
 
+  /** Most norm rows [[itemCosine]] forces to broadcast. An attached norm
+    * row is (item, n2), two longs: 24 B as an UnsafeRow (8 B null bitset +
+    * 2 × 8 B), so the cap is ~24 MB of rows per broadcast before hash-map
+    * overhead. The cap counts rows of that width: a norm frame that gains
+    * columns must revisit it. */
+  val NormBroadcastMaxRows: Long = 1000000L
+
+  /** Norm-table join side for [[itemCosine]], from the MEASURED item
+    * count, not an estimate: a provably small norm table broadcasts (zero
+    * pair-side exchanges — the fast plan at gate scale, where AQE's own
+    * BHJ conversion also lands); past [[NormBroadcastMaxRows]] it
+    * shuffle-hashes — per-partition build side (items/numPartitions),
+    * never a sort of the pair frame, safe at any item count where a
+    * forced broadcast would OOM (r6 rule). */
+  private[graft] def attachNorm(nItems: Long, side: DataFrame): DataFrame =
+    if (nItems <= NormBroadcastMaxRows) broadcast(side) else side.hint("shuffle_hash")
+
   /** Below this many corpus vectors, Lloyd training iterates on the driver
     * (the per-iteration reduction collects there regardless). */
   val LocalTrainThreshold: Long = 65536L
@@ -1080,20 +1097,14 @@ object Similarity {
       .agg(sum(col("a.q") * col("b.q")).as("dot"))
     // norm attach: the pair frame is O(items·cap) rows and nrm O(items) —
     // the planner's SMJ sorts the PAIR side twice just to join a frame
-    // that is always the smaller of the two (S19Probe at sf1: stages sum
-    // ~11 s, full query 38 s — the gap was exactly these two sorts; the
-    // plain plan measured 53.6 s vs 14.7 s under shuffle_hash). Strategy
-    // is picked from the MEASURED item count, not an estimate: a provably
-    // small norm table broadcasts (zero pair-side exchanges — the fast
-    // plan at gate scale, where AQE's own BHJ conversion also lands);
-    // past the threshold it shuffle-hashes — per-partition build side
-    // (items/numPartitions), never a sort of the pair frame, safe at any
-    // item count where a forced broadcast would OOM (r6 rule).
-    def attachNorm(side: DataFrame): DataFrame =
-      if (nItems <= 1000000L) broadcast(side) else side.hint("shuffle_hash")
+    // that is always the smaller of the two (the r16 sf1 stage
+    // decomposition, OPTIMIZATION_r16.md: stages sum ~11 s, full query
+    // 38 s — the gap was exactly these two sorts; the plain plan measured
+    // 53.6 s vs 14.7 s under shuffle_hash). Strategy is picked from the
+    // MEASURED item count, see [[attachNorm]].
     val scored = dots
-      .join(attachNorm(nrm.select(col("__i").as("item_a"), col("n2").as("na"))), "item_a")
-      .join(attachNorm(nrm.select(col("__i").as("item_b"), col("n2").as("nb"))), "item_b")
+      .join(attachNorm(nItems, nrm.select(col("__i").as("item_a"), col("n2").as("na"))), "item_a")
+      .join(attachNorm(nItems, nrm.select(col("__i").as("item_b"), col("n2").as("nb"))), "item_b")
       .withColumn("cosine",
         col("dot").cast("double") / sqrt(col("na").cast("double") * col("nb").cast("double")))
     scored.orderBy(col("cosine").desc, col("item_a"), col("item_b")).limit(k)

@@ -685,12 +685,17 @@ private[graft] object CoreQueries2 {
       // strings (measured ~1.3x on the full query); labels decode to the
       // reference's 'c:'/'s:' strings only at the very end, so component =
       // min ENCODED vertex (the oracle mins the same encoding)
-      // shared with graft.Q107Probe (Support.q107EdgeLog) — the join
-      // projection is re-read by CC (count + collect + vertices) and the
-      // contraction, so the builder checkpoints the JOINED frame once and
-      // both halves slice from it (checkpointing each half separately ran
-      // the lineitem⋈orders join twice, the dominant cost here)
-      val ec = Support.q107EdgeLog(s, d)
+      // the edge frame (src = cust·2, dst = supp·2+1, odate_us) is re-read
+      // by CC (count + collect + vertices) and the contraction, so the
+      // JOINED frame is checkpointed once and both halves slice from it
+      // (checkpointing each half separately ran the lineitem⋈orders join
+      // twice, the dominant cost here)
+      val ec = Tables.lineitem(s, d)
+        .join(Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
+        .select((col("o_custkey") * 2L).as("src"),
+          (col("l_suppkey") * 2L + 1L).as("dst"),
+          Tables.epochUs(col("o_orderdate")).as("odate_us"))
+        .localCheckpoint(true)
       val base = ec.filter(col("odate_us") < lit(Jan1_00)).select("src", "dst")
       val delta = ec.filter(col("odate_us") >= lit(Jan1_00)).select("src", "dst")
       def decode(c: String) = expr(

@@ -31,21 +31,6 @@ private[graft] object Support {
   private[graft] val Jan1_98 = 883612800000000L // 1998-01-01T00:00:00Z
   private[graft] val Jan1_00 = 946684800000000L // 2000-01-01T00:00:00Z
 
-  /** q107's long-encoded customer–supplier edge frame (src = cust·2,
-    * dst = supp·2+1, odate_us), checkpointed — SHARED by the
-    * q107_incremental_cc query and graft.Q107Probe so the committed
-    * scaling evidence can never quietly measure a different edge
-    * definition than the gated query. */
-  private[graft] def q107EdgeLog(
-      s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions._
-    graft.core.Tables.lineitem(s, d)
-      .join(graft.core.Tables.orders(s, d), col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2L).as("src"),
-        (col("l_suppkey") * 2L + 1L).as("dst"),
-        graft.core.Tables.epochUs(col("o_orderdate")).as("odate_us"))
-      .localCheckpoint(true)
-  }
   private[graft] val Jan1_97 = 852076800000000L // 1997-01-01T00:00:00Z
   private[graft] val Jan1_24 = 1704067200000000L // 2024-01-01T00:00:00Z
   private[graft] val Jan10_24 = 1704844800000000L // 2024-01-10T00:00:00Z

@@ -14,7 +14,10 @@ import graft.state.Snapshot
   * data-plane of the reference's gateway (core/.../actor/GatewayHttp.scala,
   * Partition.scala:155-192 KeyValueMediator) without the actor system:
   *
-  *   - `GET /kv/{key}`              point read from a [[Snapshot]] (J8/P1)
+  *   - `GET /kv/{key}`              point read from a bucketed store
+  *     ([[Gateway.BucketedRoute]]) or, without one, a [[Snapshot]] (J8/P1)
+  *   - `GET /index/{t1,t2,…}`        AND-lookup over a bucketed inverted
+  *     index ([[Gateway.IndexRoute]], R5)
   *   - `GET /stats`                 key count (P10 over the snapshot)
   *   - `GET /watch/{key}?from=N`    buffered CDC feed for one key (R7/R8) —
   *     the WebSocket push flattened to poll-the-buffer transport; a
@@ -24,10 +27,16 @@ import graft.state.Snapshot
   *     (§2.6h, exactly the reference's TimeCryptoProof gateway check;
   *     clock injectable so specs are deterministic)
   *
-  * Scale contract: this serves SNAPSHOT-sized (global/dimension) stores and
-  * bounded change buffers — the reference's gateway likewise serves its
-  * local memstore, not a fact scan. Fact-table point reads belong to
-  * `KVTable.get` (predicate pushdown), not a web tier. JDK-only
+  * Serving model: `/kv` and `/index` answer from the process-wide
+  * [[graft.streaming.BucketCache]] of committed bucket generations — a hit
+  * is one pointer read, one directory listing and a hash lookup, with no
+  * Spark job. An entry is valid exactly while the bucket's pointer names
+  * the generation it was loaded from, identified by its dir AND its file
+  * names (a reused staging dir name never matches an older load); a
+  * commit makes the next read load the new generation once. The cache is
+  * bounded by bytes and evicts whole buckets, least recently used first.
+  * Requests run on a fixed pool sized from the core count, so a read
+  * loading one bucket does not hold up the others. JDK-only
   * (`com.sun.net.httpserver`), zero new dependencies. */
 final class ChangeFeed(keepLastN: Int = 256, maxKeys: Int = 65536) {
   // LinkedHashMap: insertion order backs the key-eviction bound below
@@ -53,18 +62,19 @@ final class ChangeFeed(keepLastN: Int = 256, maxKeys: Int = 65536) {
 object Gateway {
 
   /** Partition-routed `/kv` backend (r13 verdict #6): the key murmur3-
-    * routes DRIVER-SIDE to its one [[graft.streaming.BucketedStore]]
-    * bucket and the serving scan reads exactly 1/N of the table — the
-    * reference's partition-routed point read
-    * (core/.../actor/Group.scala:78-82, Murmur2Partitioner), vs the
-    * [[Snapshot]] route's driver map over a SMALL store. Key types come
-    * from the store's own schema, so URL segments always coerce to the
-    * STORED types (the murmur3 routing contract). */
+    * routes DRIVER-SIDE ([[graft.streaming.BucketedStore.bucketOf]]) to
+    * its one bucket, and the read is answered from that bucket's committed
+    * generation in the [[graft.streaming.BucketCache]] — the reference's
+    * partition-routed MemStore read (core/.../actor/Group.scala:78-82,
+    * KVStoreLocal.apply). A hit runs no Spark job; a miss loads the one
+    * bucket. Key types come from the store's own schema, so URL segments
+    * always coerce to the STORED types (the murmur3 routing contract). */
   final class BucketedRoute(
       spark: org.apache.spark.sql.SparkSession,
       root: String,
       val keyCols: Seq[String],
-      fs: graft.streaming.StoreFs = graft.streaming.LocalFs) {
+      fs: graft.streaming.StoreFs = graft.streaming.LocalFs,
+      cache: graft.streaming.BucketCache = graft.streaming.BucketCache.shared) {
     import graft.streaming.BucketedStore
     val keyTypes: Seq[org.apache.spark.sql.types.DataType] =
       BucketedStore.read(spark, root, fs)
@@ -72,49 +82,66 @@ object Gateway {
         .getOrElse(throw new IllegalArgumentException(
           s"no bucketed table at $root"))
 
-    def get(values: Seq[Any]): Option[org.apache.spark.sql.Row] =
-      BucketedStore.pointLookup(spark, root, keyCols, values, fs).flatMap { df =>
-        // changelog semantics: a tombstoned key is a miss (404), same as
-        // the snapshot route's compact-then-drop
-        val live = if (df.columns.contains("tombstone"))
-          df.filter(!org.apache.spark.sql.functions.col("tombstone"))
-        else df
-        live.collect().headOption
+    /** The live row of key `values`: None for a miss or a tombstoned key
+      * (404), as [[BucketedStore.pointLookup]] plus a tombstone filter
+      * answers. A null key component never matches (SQL equality). */
+    def get(values: Seq[Any]): Option[org.apache.spark.sql.Row] = {
+      require(keyCols.size == values.size, "keyCols and values must align")
+      BucketedStore.checkProbeTypes(keyCols, keyTypes, values)
+      if (values.contains(null)) None
+      else BucketedStore.numBuckets(root, fs).flatMap { n =>
+        val bucket = BucketedStore.bucketDir(root, BucketedStore.bucketOf(values, n))
+        cache.liveRows(spark, bucket, keyCols, fs).flatMap(_.get(values))
       }
+    }
   }
 
-  /** R5 secondary-index lookup route over the LIVE bucketed index
-    * (w35's topology behind HTTP — the reference gateway's index query,
+  /** R5 secondary-index lookup route over the LIVE bucketed index (w35's
+    * topology behind HTTP — the reference gateway's index query,
     * KVStoreIndex.scala:20-66): `GET /index/{t1,t2,…}` answers the
-    * multi-term AND intersection. The postings scan is pruned to the
-    * queried terms before any shuffle (`isin` pushdown) and the hit set
-    * broadcasts into the primary semi-join; responses are bounded by
-    * `maxHits` (a serving tier returns a page, not a table). Tombstoned
-    * primary rows never serve. */
+    * multi-term AND intersection from the cached bucket generations. A
+    * key's postings all live in its own index bucket, so the intersection
+    * runs per bucket; each hit's row comes through the table cache
+    * (tombstoned primary rows never serve), in primary-key order, at most
+    * `maxHits` (a serving tier returns a page, not a table) — the same
+    * page as `multiLookup(...).orderBy(keys).limit(maxHits)`. */
   final class IndexRoute(
       spark: org.apache.spark.sql.SparkSession,
       tableRoot: String,
       indexRoot: String,
       keyCols: Seq[String],
       maxHits: Int = 256,
-      fs: graft.streaming.StoreFs = graft.streaming.LocalFs) {
+      fs: graft.streaming.StoreFs = graft.streaming.LocalFs,
+      cache: graft.streaming.BucketCache = graft.streaming.BucketCache.shared) {
     import graft.streaming.BucketedStore
-    def lookup(terms: Seq[String]): Seq[org.apache.spark.sql.Row] =
-      (BucketedStore.read(spark, indexRoot, fs),
-        BucketedStore.read(spark, tableRoot, fs)) match {
-        case (Some(idx), Some(tbl)) if terms.nonEmpty =>
-          val live = if (tbl.columns.contains("tombstone"))
-            tbl.filter(!org.apache.spark.sql.functions.col("tombstone"))
-          else tbl
-          // deterministic pagination: an unordered limit returns an
-          // arbitrary page when hits > maxHits; ordering by the primary
-          // key costs nothing at page size (r14 verdict #2)
-          graft.state.SecondaryIndex
-            .multiLookup(idx, live, keyCols, terms)
-            .orderBy(keyCols.map(org.apache.spark.sql.functions.col): _*)
-            .limit(maxHits).collect().toSeq
+    def lookup(terms: Seq[String]): Seq[org.apache.spark.sql.Row] = {
+      import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+      val want = terms.distinct
+      val postings = if (want.isEmpty) Nil
+        else BucketedStore.existingBuckets(indexRoot, fs).flatMap(id =>
+          cache.postings(spark, BucketedStore.bucketDir(indexRoot, id), keyCols, fs))
+      val hits = postings.flatMap { p =>
+        val sets = want.map(p.byTerm.getOrElse(_, Set.empty[Seq[Any]]))
+        sets.minBy(_.size).filter(k => sets.forall(_.contains(k)))
+      }.filterNot(_.contains(null)) // SQL equality: a null key never joins
+      (hits.nonEmpty, BucketedStore.numBuckets(tableRoot, fs)) match {
+        case (true, Some(n)) =>
+          // deterministic pagination (r14 verdict #2): hits in primary-key
+          // order, by Spark's own ordering of the key types (as orderBy)
+          val ord = org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
+            .forSchema(postings.find(_.keyTypes.nonEmpty).get.keyTypes)
+          val sorted = hits
+            .map(k => InternalRow.fromSeq(k.map(CatalystTypeConverters.convertToCatalyst)) -> k)
+            .sortWith((a, b) => ord.lt(a._1, b._1)).map(_._2)
+          val tables = scala.collection.mutable.Map.empty[Int, Map[Seq[Any], org.apache.spark.sql.Row]]
+          sorted.iterator.flatMap { k =>
+            val id = BucketedStore.bucketOf(k, n)
+            tables.getOrElseUpdate(id, cache.liveRows(spark,
+              BucketedStore.bucketDir(tableRoot, id), keyCols, fs).getOrElse(Map.empty)).get(k)
+          }.take(maxHits).toSeq
         case _ => Seq.empty
       }
+    }
   }
 }
 
@@ -128,6 +155,12 @@ final class Gateway(
 
   private val mapper = new ObjectMapper
   private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(
+    math.max(2, Runtime.getRuntime.availableProcessors), { (r: Runnable) =>
+      val t = new Thread(r, "gateway-request")
+      t.setDaemon(true)
+      t
+    })
 
   def port: Int = server.getAddress.getPort
 
@@ -232,10 +265,13 @@ final class Gateway(
 
   def start(): Gateway = {
     server.createContext("/", (ex: HttpExchange) => handle(ex))
-    server.setExecutor(null) // current thread of the default dispatcher
+    server.setExecutor(pool)
     server.start()
     this
   }
 
-  def stop(): Unit = server.stop(0)
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+  }
 }

@@ -44,7 +44,13 @@ object AtomicSwap {
     * Sweeping belongs to the WRITER ([[recover]], which [[swap]] runs
     * first); serving-tier reads only ever resolve. */
   def resolve(path: String, fs: StoreFs = LocalFs): Option[String] =
-    fs.readString(ptrFile(path)).map(_.trim).filter(fs.exists)
+    pointer(path, fs).filter(fs.exists)
+
+  /** The generation dir `path.ptr` names, whether or not it still exists
+    * (a reader racing a commit may see the superseded one, deleted right
+    * after the flip). None when the table has never been committed. */
+  def pointer(path: String, fs: StoreFs = LocalFs): Option[String] =
+    fs.readString(ptrFile(path)).map(_.trim)
 
   /** The committed content of table `path`; None when never committed. */
   def read(spark: SparkSession, path: String, fs: StoreFs = LocalFs): Option[DataFrame] =
@@ -74,7 +80,7 @@ object AtomicSwap {
     * and need no recovery (single-writer contract). */
   private[streaming] def recover(
       path: String, fs: StoreFs, parentListing: Option[Seq[String]]): Boolean = {
-    val ptr = fs.readString(ptrFile(path)).map(_.trim)
+    val ptr = pointer(path, fs)
     val live = ptr.filter(fs.exists)
     if (ptr.isEmpty || live.isDefined) {
       val target = new File(path)
@@ -98,7 +104,7 @@ object AtomicSwap {
     * which the next recover collects — readers are correct in every
     * window because the pointer is flipped atomically. */
   private def commitPointer(target: String, path: String, fs: StoreFs): Unit = {
-    val old = fs.readString(ptrFile(path)).map(_.trim)
+    val old = pointer(path, fs)
     fs.writeString(ptrFile(path), target)
     old.filter(_ != target).foreach(fs.deleteRecursively)
   }
@@ -112,7 +118,7 @@ object AtomicSwap {
     * attempt name the current pointer does not reference is used. */
   def swap(df: DataFrame, path: String, batchId: Long, fs: StoreFs = LocalFs): Unit = {
     recover(path, fs)
-    val live = fs.readString(ptrFile(path)).map(_.trim)
+    val live = pointer(path, fs)
     val gen = Iterator.from(0)
       .map(k => if (k == 0) s"$path.gen-$batchId" else s"$path.gen-$batchId-a$k")
       .find(g => !live.contains(g)).get

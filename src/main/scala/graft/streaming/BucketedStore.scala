@@ -2,6 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Key-hash-bucketed directory layout for incrementally-maintained tables.
   *
@@ -65,16 +66,40 @@ object BucketedStore {
   def numBuckets(root: String, fs: StoreFs = LocalFs): Option[Int] =
     fs.readString(s"$root/.buckets").flatMap(_.trim.toIntOption)
 
+  /** Bucket of a key tuple: the driver-side twin of [[bucketCol]] (the
+    * same Catalyst Murmur3Hash the write path plans, seed 42), so a key
+    * routes to the bucket its rows were written to. Values must carry the
+    * STORED key types (a Long key probed with an Int hashes differently —
+    * same contract as Kafka's serialized-key routing); see
+    * [[checkProbeTypes]]. */
+  def bucketOf(values: Seq[Any], numBuckets: Int): Int = {
+    import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, Murmur3Hash}
+    val h = Murmur3Hash(values.map(CLit(_)), 42).eval(null).asInstanceOf[Int]
+    java.lang.Math.floorMod(h, numBuckets)
+  }
+
+  /** Routing-correctness guard: a probe value whose type differs from the
+    * stored column hashes differently and would route to the wrong bucket
+    * — fail loudly instead of returning a silent miss (cheap, driver-side
+    * type comparison only). */
+  def checkProbeTypes(keyCols: Seq[String], storedTypes: Seq[DataType],
+      values: Seq[Any]): Unit =
+    keyCols.lazyZip(storedTypes).lazyZip(values).foreach { (c, stored, v) =>
+      val probe = org.apache.spark.sql.catalyst.expressions.Literal(v).dataType
+      if (v != null && probe != stored)
+        throw new IllegalArgumentException(
+          s"pointLookup probe type mismatch on '$c': probe $probe " +
+            s"vs stored $stored — the murmur3 route would be wrong")
+    }
+
   /** P1 point read with the reference's routing cost model
     * (Murmur2Partitioner: key → ONE partition, api/.../Coordinator): the
-    * key tuple is murmur3-hashed DRIVER-SIDE (same Catalyst Murmur3Hash
-    * the write path's [[bucketCol]] plans, seed 42), and the scan reads
+    * key tuple is routed DRIVER-SIDE by [[bucketOf]] and the scan reads
     * exactly that one bucket dir — 1/N of the table by construction, at
-    * any table size. Values must carry the STORED key types (a Long key
-    * probed with an Int hashes differently — same contract as Kafka's
-    * serialized-key routing); a mistyped probe throws rather than
-    * returning a silent empty result. None when the table has never been
-    * written. */
+    * any table size. A mistyped probe throws ([[checkProbeTypes]]) — checked
+    * against the routed bucket, or ANY bucket when the routed one was never
+    * written (a mistyped probe routing to a hole must still throw, not
+    * miss). None when the table has never been written. */
   def pointLookup(
       spark: SparkSession,
       root: String,
@@ -84,25 +109,9 @@ object BucketedStore {
     require(keyCols.nonEmpty && keyCols.size == values.size,
       "keyCols and values must align")
     numBuckets(root, fs).flatMap { n =>
-      import org.apache.spark.sql.catalyst.expressions.{Literal => CLit, Murmur3Hash}
-      val lits = values.map(CLit(_))
-      val h = Murmur3Hash(lits, 42).eval(null).asInstanceOf[Int]
-      val id = java.lang.Math.floorMod(h, n)
-      // routing-correctness guard: a probe literal whose type differs from
-      // the stored column hashes differently and would route to the wrong
-      // bucket — fail loudly instead of returning empty (cheap,
-      // driver-side schema comparison only). Checked against the routed
-      // bucket, or ANY bucket when the routed one was never written (a
-      // mistyped probe routing to a hole must still throw, not miss).
       def checkTypes(df: DataFrame): Unit =
-        keyCols.zip(lits).foreach { case (c, l) =>
-          val stored = df.schema(c).dataType
-          if (l.value != null && l.dataType != stored)
-            throw new IllegalArgumentException(
-              s"pointLookup probe type mismatch on '$c': probe ${l.dataType} " +
-                s"vs stored $stored — the murmur3 route would be wrong")
-        }
-      readBuckets(spark, root, Seq(id), fs) match {
+        checkProbeTypes(keyCols, keyCols.map(df.schema(_).dataType), values)
+      readBuckets(spark, root, Seq(bucketOf(values, n)), fs) match {
         case Some(df) =>
           checkTypes(df)
           Some(keyCols.zip(values).foldLeft(df) { case (d, (c, v)) =>

@@ -40,6 +40,15 @@ class BlockingOpsSpec extends AnyFlatSpec with Matchers {
     all(perDoc) should be <= 6 // as id_a via least(): own window + arrivals
   }
 
+  it should "drop the gram-less rows of a caller-supplied gramsFrame" in {
+    val docs = Seq((1L, "en", "a"), (2L, "en", "b")).toDF("doc_id", "lang", "text")
+    val grams = Seq((1L, "en", "a"), (2L, "en", "b")).toDF("doc", "lang", "sk")
+      .withColumn("grams", typedLit(Seq.empty[Long])).withColumn("ng", lit(0))
+    Dedup.sortedNeighborhoodJaccard(docs, "doc_id", "text",
+      partitionCols = Seq("lang"), keyLen = 24, window = 4, n = 3,
+      minJaccard = 0.5, gramsFrame = Some(grams)).count() shouldBe 0L
+  }
+
   "assignToIndex" should "equal full re-assignment against the same centroids" in {
     val vecs = (0L until 40L).map { i =>
       (i, Array.tabulate(64)(dd => ((i * 7 + dd) % 13).toFloat / 13f))

@@ -175,4 +175,53 @@ class GatewaySpec extends SparkSpec {
       get(s"$base/index/nope").body() shouldBe "[]"
     } finally gw.stop()
   }
+
+  it should "answer other requests while one read is blocked in its bucket's pointer read" in {
+    import graft.streaming.{BucketCache, BucketedStore, LocalFs}
+    val root = java.nio.file.Files.createTempDirectory("graft-gwp")
+      .toFile.getAbsolutePath
+    val df = (1L to 8L).map(k => (k, s"owner$k", false)).toDF("account", "owner", "tombstone")
+    BucketedStore.writeBuckets(df, BucketedStore.bucketCol(Seq("account"), 4),
+      root, Seq(0, 1, 2, 3), 0L, arity = 4)
+    def bucket(k: Long) = BucketedStore.bucketOf(Seq(k), 4)
+    val other = (2L to 8L).find(k => bucket(k) != bucket(1L)).get
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    @volatile var armed = false
+    // holds the first pointer read of key 1's bucket until released
+    object LatchFs extends ForwardingFs {
+      override def readString(path: String): Option[String] = {
+        if (armed && path == s"${BucketedStore.bucketDir(root, bucket(1L))}.ptr") {
+          armed = false
+          entered.countDown()
+          release.await()
+        }
+        LocalFs.readString(path)
+      }
+    }
+    val route = new Gateway.BucketedRoute(spark, root, Seq("account"), LatchFs,
+      new BucketCache(1L << 26))
+    val gw = new Gateway(Snapshot.of(store), bucketed = Some(route)).start()
+    val base = s"http://127.0.0.1:${gw.port}"
+    def timed(url: String) = client.send(HttpRequest.newBuilder(URI.create(url))
+      .timeout(java.time.Duration.ofSeconds(30)).GET().build(),
+      HttpResponse.BodyHandlers.ofString())
+    try {
+      armed = true
+      val blocked = client.sendAsync(HttpRequest.newBuilder(URI.create(s"$base/kv/1")).GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+      entered.await(30, java.util.concurrent.TimeUnit.SECONDS) shouldBe true
+      timed(s"$base/stats").statusCode() shouldBe 200
+      val ok = timed(s"$base/kv/$other")
+      ok.statusCode() shouldBe 200
+      ok.body() should include(s""""owner":"owner$other"""")
+      blocked.isDone shouldBe false
+      release.countDown()
+      blocked.get(30, java.util.concurrent.TimeUnit.SECONDS).body() should include(
+        """"owner":"owner1"""")
+    } finally {
+      release.countDown()
+      gw.stop()
+    }
+  }
 }

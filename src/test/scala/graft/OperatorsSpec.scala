@@ -171,6 +171,14 @@ class DedupSpec extends SparkSpec {
       .count() shouldBe 0L
   }
 
+  it should "drop the gram-less rows of a caller-supplied gramsFrame too" in {
+    val tiny = Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text").withColumn("blk", lit(1))
+    val grams = Seq(1L, 2L).toDF("doc").withColumn("blk", lit(1))
+      .withColumn("grams", typedLit(Seq.empty[Long])).withColumn("ng", lit(0))
+    Dedup.ngramJaccardBlocked(tiny, "doc_id", "text", Seq("blk"), 3, 0.5,
+      gramsFrame = Some(grams)).count() shouldBe 0L
+  }
+
   it should "agree with the relational ngramJaccard formulation" in {
     val blocked = docs.withColumn("blk", lit(1))
     def canon(df: org.apache.spark.sql.DataFrame) =

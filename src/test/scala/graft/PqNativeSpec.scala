@@ -114,4 +114,17 @@ class PqNativeSpec extends SparkSpec {
       }
     }
   }
+
+  "PqApproxDot and PqSubDistortions" should "refuse codes whose length differs from the codebook count" in {
+    val short = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.fill(m - 1)(0))
+    val qv = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.fill(m * subDim)(1L))
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val cbs = codebooks.map(_.map(_.toSeq).toSeq).toSeq
+    val dot = graft.functions.PqApproxDot(Literal(0), Literal(0), cbs, subDim)
+    val dist = graft.functions.PqSubDistortions(Literal(0), Literal(0), cbs, subDim)
+    val full = org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array.fill(m)(0))
+    dot.compute(qv, full) shouldBe codebooks.map(_(0).sum).sum
+    an[IllegalArgumentException] should be thrownBy dot.compute(qv, short)
+    an[IllegalArgumentException] should be thrownBy dist.compute(qv, short)
+  }
 }

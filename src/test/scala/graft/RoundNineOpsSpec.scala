@@ -84,4 +84,14 @@ class RoundNineOpsSpec extends SparkSpec {
     a.toSeq shouldBe b.toSeq
     a.head shouldBe ((1, "a", "b", 3L * 4L + 1L * 2L))
   }
+
+  "itemCosine's norm attach" should "broadcast up to NormBroadcastMaxRows norm rows and shuffle-hash beyond" in {
+    import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, ResolvedHint, SHUFFLE_HASH}
+    val side = Seq((1L, 2L)).toDF("item_a", "na") // the attached (item, n2) row: two longs
+    def strategy(nItems: Long) = Similarity.attachNorm(nItems, side).queryExecution.analyzed
+      .collect { case h: ResolvedHint => h.hints.strategy }.flatten
+    Similarity.NormBroadcastMaxRows shouldBe 1000000L // × 24 B rows ≈ 24 MB per broadcast
+    strategy(Similarity.NormBroadcastMaxRows) shouldBe Seq(BROADCAST)
+    strategy(Similarity.NormBroadcastMaxRows + 1) shouldBe Seq(SHUFFLE_HASH)
+  }
 }
