@@ -8,22 +8,6 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      // join-strategy A/B knob (guide §3.1): false lets the planner pick
-      // shuffled-hash joins when a side's per-partition build fits — SMJ
-      // pays two sorts SHJ doesn't. Overridable for measurement.
-      .config("spark.sql.join.preferSortMergeJoin",
-        sys.env.getOrElse("SPARK_GRAFT_PREFER_SMJ", "true"))
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_LOCALMAP", "0"))
-      // AQE partition-coalescing A/B knobs (guide §2.2): parallelismFirst
-      // false makes AQE honor advisoryPartitionSizeInBytes instead of
-      // stopping at defaultParallelism × minPartitionSize — the setting
-      // Spark's own docs recommend for right-sizing. Defaults are Spark's
-      // defaults; overridable for measurement.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_ADVISORY", "64MB"))
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -28,13 +28,15 @@ import graft.state.Snapshot
   *     clock injectable so specs are deterministic)
   *
   * Serving model: `/kv` and `/index` answer from the process-wide
-  * [[graft.streaming.BucketCache]] of committed bucket generations — a hit
-  * is one pointer read, one directory listing and a hash lookup, with no
-  * Spark job. An entry is valid exactly while the bucket's pointer names
-  * the generation it was loaded from, identified by its dir AND its file
-  * names (a reused staging dir name never matches an older load); a
-  * commit makes the next read load the new generation once. The cache is
-  * bounded by bytes and evicts whole buckets, least recently used first.
+  * [[graft.streaming.BucketCache]] of committed bucket generations — a
+  * `/kv` hit is one pointer read and a hash lookup, with no Spark job. An
+  * entry is valid exactly while the bucket's pointer names the generation
+  * it holds (every write attempt names its generation uniquely). The
+  * bucketed writer publishes each table bucket it commits into the cache
+  * right after the pointer flip, so a read after a commit is a hit too;
+  * a read that misses the publication loads the new generation once. The
+  * cache is bounded by bytes and evicts whole buckets, least recently
+  * used first.
   * Requests run on a fixed pool sized from the core count, so a read
   * loading one bucket does not hold up the others. JDK-only
   * (`com.sun.net.httpserver`), zero new dependencies. */
@@ -67,7 +69,8 @@ object Gateway {
     * generation in the [[graft.streaming.BucketCache]] — the reference's
     * partition-routed MemStore read (core/.../actor/Group.scala:78-82,
     * KVStoreLocal.apply). A hit runs no Spark job; a miss loads the one
-    * bucket. Key types come from the store's own schema, so URL segments
+    * bucket. Key types and the bucket count come from the store once, at
+    * construction (`writeBuckets` refuses another arity), so URL segments
     * always coerce to the STORED types (the murmur3 routing contract). */
   final class BucketedRoute(
       spark: org.apache.spark.sql.SparkSession,
@@ -81,6 +84,8 @@ object Gateway {
         .map(df => keyCols.map(c => df.schema(c).dataType))
         .getOrElse(throw new IllegalArgumentException(
           s"no bucketed table at $root"))
+    private val numBuckets = BucketedStore.numBuckets(root, fs).getOrElse(
+      throw new IllegalArgumentException(s"no bucket count at $root"))
 
     /** The live row of key `values`: None for a miss or a tombstoned key
       * (404), as [[BucketedStore.pointLookup]] plus a tombstone filter
@@ -89,10 +94,9 @@ object Gateway {
       require(keyCols.size == values.size, "keyCols and values must align")
       BucketedStore.checkProbeTypes(keyCols, keyTypes, values)
       if (values.contains(null)) None
-      else BucketedStore.numBuckets(root, fs).flatMap { n =>
-        val bucket = BucketedStore.bucketDir(root, BucketedStore.bucketOf(values, n))
-        cache.liveRows(spark, bucket, keyCols, fs).flatMap(_.get(values))
-      }
+      else cache.liveRows(spark,
+        BucketedStore.bucketDir(root, BucketedStore.bucketOf(values, numBuckets)),
+        keyCols, fs).flatMap(_.get(values))
     }
   }
 
@@ -114,6 +118,9 @@ object Gateway {
       fs: graft.streaming.StoreFs = graft.streaming.LocalFs,
       cache: graft.streaming.BucketCache = graft.streaming.BucketCache.shared) {
     import graft.streaming.BucketedStore
+    // the table's bucket count, read once it exists (it never changes)
+    @volatile private var tableBuckets = BucketedStore.numBuckets(tableRoot, fs)
+
     def lookup(terms: Seq[String]): Seq[org.apache.spark.sql.Row] = {
       import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
       val want = terms.distinct
@@ -124,7 +131,9 @@ object Gateway {
         val sets = want.map(p.byTerm.getOrElse(_, Set.empty[Seq[Any]]))
         sets.minBy(_.size).filter(k => sets.forall(_.contains(k)))
       }.filterNot(_.contains(null)) // SQL equality: a null key never joins
-      (hits.nonEmpty, BucketedStore.numBuckets(tableRoot, fs)) match {
+      if (hits.nonEmpty && tableBuckets.isEmpty)
+        tableBuckets = BucketedStore.numBuckets(tableRoot, fs)
+      (hits.nonEmpty, tableBuckets) match {
         case (true, Some(n)) =>
           // deterministic pagination (r14 verdict #2): hits in primary-key
           // order, by Spark's own ordering of the key types (as orderBy)

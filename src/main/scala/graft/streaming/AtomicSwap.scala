@@ -9,7 +9,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * maintenance actions), over the [[StoreFs]] seam. ONE protocol on every
   * filesystem — the pointer-file (manifest) commit:
   *
-  * data generations live at immutable dirs (`path.gen-B`, or any
+  * data generations live at immutable dirs (`path.gen-B-<uuid>`, or any
   * caller-staged dir via [[swapDir]]) and the live one is named by a
   * pointer file `path.ptr`, committed with ONE atomic small-file write
   * ([[StoreFs.writeString]]). Readers resolve the pointer ([[resolve]],
@@ -23,6 +23,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Only this object knows where a table's files live: every reader of a
   * committed table goes through [[read]] (or [[resolve]]).
+  *
+  * Every write attempt names its generation uniquely (batch id plus a
+  * random UUID), so a pointer's content names exactly one generation's
+  * bytes for the life of the store: a re-run batch or a restarted stream
+  * that counts batch ids from 0 again never reuses a name. That is what
+  * lets [[BucketCache]] key its entries by the pointer's content alone.
   *
   * Re-running a batch after a crash is idempotent (same batchId,
   * deterministic result). Single writer per table path — same contract as
@@ -103,33 +109,31 @@ object AtomicSwap {
     * the two steps only ever leaks the OLD (already superseded) data dir,
     * which the next recover collects — readers are correct in every
     * window because the pointer is flipped atomically. */
-  private def commitPointer(target: String, path: String, fs: StoreFs): Unit = {
+  private def commitPointer(target: String, path: String, fs: StoreFs): Option[String] = {
     val old = pointer(path, fs)
     fs.writeString(ptrFile(path), target)
     old.filter(_ != target).foreach(fs.deleteRecursively)
+    old
   }
 
   /** Write `df` as the new content of `path` with a checked commit. The
     * WRITER is the recovery entry (reads are passive): this table's crash
-    * leftovers are swept first. Never overwrites the LIVE generation: a
-    * re-run of a batch whose previous attempt already committed `gen-B`
-    * would delete the pointed-to dir before re-committing (dangling-pointer
-    * window — the r14-advice destructive-overwrite class), so the first
-    * attempt name the current pointer does not reference is used. */
+    * leftovers are swept first. The generation's name is unique to this
+    * attempt, so a re-run of a batch whose previous attempt already
+    * committed never writes over the live generation. */
   def swap(df: DataFrame, path: String, batchId: Long, fs: StoreFs = LocalFs): Unit = {
     recover(path, fs)
-    val live = pointer(path, fs)
-    val gen = Iterator.from(0)
-      .map(k => if (k == 0) s"$path.gen-$batchId" else s"$path.gen-$batchId-a$k")
-      .find(g => !live.contains(g)).get
-    df.write.mode("overwrite").parquet(gen)
+    val gen = s"$path.gen-$batchId-${java.util.UUID.randomUUID}"
+    df.write.parquet(gen)
     commitPointer(gen, path, fs)
+    ()
   }
 
   /** Commit an ALREADY-WRITTEN directory as the new content of `path` —
     * the commit half of [[swap]], for callers that stage many tables in
     * one partitioned write (BucketedStore). `src` becomes the pointed-to
-    * generation IN PLACE (no data moves; the staged dir is the table). */
-  def swapDir(src: String, path: String, fs: StoreFs = LocalFs): Unit =
+    * generation IN PLACE (no data moves; the staged dir is the table).
+    * Returns the generation the pointer named before, now deleted. */
+  def swapDir(src: String, path: String, fs: StoreFs = LocalFs): Option[String] =
     commitPointer(src, path, fs)
 }

@@ -123,14 +123,6 @@ object BucketedStore {
     }
   }
 
-  /** Staging dir of a batch's partitioned write. Its `__b=<id>` subdirs
-    * become live bucket generations. */
-  private def stagingDir(root: String, batchId: Long): String =
-    s"$root/.staging-$batchId"
-
-  // `-a<k>` suffixes are RE-RUN attempts (see freshStaging)
-  private val StagingName = "^\\.staging-(\\d+)(?:-a\\d+)?$".r
-
   /** Bucket-pointer targets under `root`, from a pre-captured root
     * listing. */
   private def pointerTargets(rootListing: Seq[String], root: String,
@@ -139,49 +131,32 @@ object BucketedStore {
       fs.readString(s"$root/$n").map(_.trim)
     }.flatten.toSet
 
-  /** Staging dir for THIS attempt of `batchId`. A previous attempt of
-    * this batch may have already committed bucket pointers INTO its
-    * staging (the staged subdirs ARE the live generations); Spark's
-    * overwrite would delete those pointed-to dirs before the re-flip —
-    * a dangling-pointer window where a second crash or a concurrent read
-    * loses the bucket's pre-batch rows permanently (r14 advice, high).
-    * Each attempt therefore stages to the first `.staging-<batchId>[-a<k>]`
-    * no bucket pointer references into. `referenced` is the batch's one
-    * pointer-target capture (see [[writeBuckets]]). */
-  private def freshStaging(root: String, batchId: Long,
-      referenced: Set[String]): String = {
-    val base = stagingDir(root, batchId)
-    def isReferenced(s: String) = referenced.exists(_.startsWith(s + "/"))
-    Iterator.from(0)
-      .map(k => if (k == 0) base else s"$base-a$k")
-      .find(!isReferenced(_)).get
-  }
-
-  /** Sweep stale staging dirs of earlier batches. A staging subdir may be
-    * a LIVE bucket generation — only stagings no bucket pointer references
-    * into are swept (a superseded subdir is deleted at its bucket's
-    * pointer flip, so a staging root goes once all its buckets moved on).
-    * Never touches the current batch's staging (single-writer contract;
-    * see [[freshStaging]]). `rootListing` / `referenced` are the batch's
-    * one listing/pointer capture — sweeping never invalidates them for
-    * later use (only UNreferenced dirs go). */
-  private def sweepStagings(root: String, batchId: Long, fs: StoreFs,
-      rootListing: Seq[String], referenced: Set[String]): Unit = {
-    val stale = rootListing.collect {
-      case n @ StagingName(id) if id.toLong != batchId => s"$root/$n"
+  /** Sweep stale staging dirs of earlier attempts. A staging subdir may be
+    * a LIVE bucket generation, so only stagings no bucket pointer
+    * references into are swept (a superseded subdir is deleted at its
+    * bucket's pointer flip, so a staging root goes once all its buckets
+    * moved on). `rootListing` is the batch's one root listing, taken
+    * before this attempt's staging exists. */
+  private def sweepStagings(root: String, fs: StoreFs, rootListing: Seq[String]): Unit = {
+    val stale = rootListing.filter(_.startsWith(".staging-")).map(n => s"$root/$n")
+    if (stale.nonEmpty) {
+      val referenced = pointerTargets(rootListing, root, fs)
+      stale.filterNot(s => referenced.exists(_.startsWith(s + "/")))
+        .foreach(fs.deleteRecursively)
     }
-    if (stale.isEmpty) return
-    stale.filterNot(s => referenced.exists(_.startsWith(s + "/")))
-      .foreach(fs.deleteRecursively)
   }
 
   /** Replace exactly the `touched` bucket dirs of `root` with `df`'s rows
     * (bucketed by `bexpr`). One partitioned write stages every touched
-    * bucket in a single job; each staged subdir is then committed in place
-    * by an AtomicSwap pointer flip. A touched bucket with NO staged rows
-    * (every key tombstone-filtered out — the index-delta case) is swapped
-    * to an empty table so stale rows vanish. `df` must not contain a
-    * `__b` column. */
+    * bucket in a single job, to `.staging-<batchId>-<uuid>`: a name unique
+    * to this attempt, so a re-run never writes over a generation an
+    * earlier attempt already committed. Each staged subdir is then
+    * committed in place by an AtomicSwap pointer flip, and `onCommit`
+    * hears `(bucket id, generation before, generation now)` right after
+    * each flip. A touched bucket with NO staged rows (every key
+    * tombstone-filtered out — the index-delta case) is committed as an
+    * empty table so stale rows vanish. `df` must not contain a `__b`
+    * column. */
   def writeBuckets(
       df: DataFrame,
       bexpr: Column,
@@ -189,7 +164,8 @@ object BucketedStore {
       touched: Seq[Int],
       batchId: Long,
       arity: Int,
-      fs: StoreFs = LocalFs): Unit = {
+      fs: StoreFs = LocalFs,
+      onCommit: (Int, Option[String], String) => Unit = (_, _, _) => ()): Unit = {
     fs.mkdirs(root)
     // persist the routing arity once; reopening an existing store with a
     // DIFFERENT bucket count would strand rows in old-arity buckets and
@@ -200,24 +176,22 @@ object BucketedStore {
           s"$arity — reopening with a different arity would corrupt routing")
       case None => fs.writeString(s"$root/.buckets", arity.toString)
     }
-    // ONE root listing + ONE pointer-target capture serve the whole batch's
-    // staging sweep, per-bucket recovery and staging election — the old
-    // per-call listings were 2 + |touched| LIST operations per batch, a
-    // metered-API fixed cost on object stores (guide §6; r15 verdict #1).
+    // ONE root listing serves the whole batch's staging sweep and
+    // per-bucket recovery — per-call listings would be 2 + |touched| LIST
+    // operations per batch, a metered-API fixed cost on object stores
+    // (guide §6; r15 verdict #1).
     val rootListing = fs.listNames(root)
-    val referenced = pointerTargets(rootListing, root, fs)
-    sweepStagings(root, batchId, fs, rootListing, referenced)
+    sweepStagings(root, fs, rootListing)
     // the WRITER is the recovery entry (reads are passive since r15): sweep
     // each touched bucket's crash leftovers before swapping
     touched.foreach(id =>
       AtomicSwap.recover(bucketDir(root, id), fs, Some(rootListing)))
-    val staging = freshStaging(root, batchId, referenced)
-    df.withColumn("__b", bexpr)
-      .write.partitionBy("__b").mode("overwrite").parquet(staging)
+    val staging = s"$root/.staging-$batchId-${java.util.UUID.randomUUID}"
+    df.withColumn("__b", bexpr).write.partitionBy("__b").parquet(staging)
     touched.foreach { id =>
       val sub = s"$staging/__b=$id"
-      if (fs.isDir(sub)) AtomicSwap.swapDir(sub, bucketDir(root, id), fs)
-      else AtomicSwap.swap(df.limit(0), bucketDir(root, id), batchId, fs)
+      if (!fs.isDir(sub)) df.limit(0).write.parquet(sub)
+      onCommit(id, AtomicSwap.swapDir(sub, bucketDir(root, id), fs), sub)
     }
   }
 }

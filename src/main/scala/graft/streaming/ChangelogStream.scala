@@ -162,9 +162,13 @@ object ChangelogStream {
     * latest-per-key table and its inverted index live in `numBuckets`
     * key-hash bucket dirs ([[BucketedStore]]); each micro-batch
     *
-    *   1. routes its keys to bucket ids (one small distinct over the batch),
+    *   1. routes its keys to bucket ids (one narrow collect of the batch's
+    *      key columns and bucket ids),
     *   2. reads back ONLY those buckets, compacts batch ∪ touched buckets,
-    *   3. swaps exactly the touched table buckets, and
+    *   3. swaps exactly the touched table buckets, publishing each into
+    *      `cache` right after its pointer flip (the final rows of the
+    *      batch's keys, collected before the flips: [[BucketCache.publish]]),
+    *      so a read after the commit runs no Spark load, and
     *   4. re-derives index postings for exactly the touched buckets
     *      (delete+insert per bucket — an untouched bucket's postings are
     *      untouched by construction, since postings are a row-local
@@ -194,10 +198,11 @@ object ChangelogStream {
       numBuckets: Int = 16,
       tieBreakCols: Seq[String] = Nil,
       stats: Option[scala.collection.mutable.Buffer[BucketBatchStats]] = None,
-      fs: StoreFs = LocalFs)
+      fs: StoreFs = LocalFs,
+      cache: BucketCache = BucketCache.shared)
       : DataStreamWriter[Row] =
     bucketedWriter(changelog, keyCols, tsCol, tablePath, checkpoint,
-      numBuckets, tieBreakCols, Some((indexFn, indexPath)), stats, fs)
+      numBuckets, tieBreakCols, Some((indexFn, indexPath)), stats, fs, cache)
 
   /** [[materializeLatest]] with the bucketed touched-buckets-only rewrite
     * and no index — same O(batch + touched buckets) per-batch contract as
@@ -211,10 +216,11 @@ object ChangelogStream {
       numBuckets: Int = 16,
       tieBreakCols: Seq[String] = Nil,
       stats: Option[scala.collection.mutable.Buffer[BucketBatchStats]] = None,
-      fs: StoreFs = LocalFs)
+      fs: StoreFs = LocalFs,
+      cache: BucketCache = BucketCache.shared)
       : DataStreamWriter[Row] =
     bucketedWriter(changelog, keyCols, tsCol, tablePath, checkpoint,
-      numBuckets, tieBreakCols, None, stats, fs)
+      numBuckets, tieBreakCols, None, stats, fs, cache)
 
   private def bucketedWriter(
       changelog: DataFrame,
@@ -226,7 +232,8 @@ object ChangelogStream {
       tieBreakCols: Seq[String],
       index: Option[(org.apache.spark.sql.Column, String)],
       stats: Option[scala.collection.mutable.Buffer[BucketBatchStats]],
-      fs: StoreFs = LocalFs)
+      fs: StoreFs,
+      cache: BucketCache)
       : DataStreamWriter[Row] = {
     require(numBuckets > 0, "numBuckets must be positive")
     val spark = changelog.sparkSession
@@ -236,8 +243,10 @@ object ChangelogStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch0: DataFrame, batchId: Long) =>
         val bexpr = BucketedStore.bucketCol(keyCols, numBuckets)
-        val touched = batch0.select(bexpr.cast("int").as("__b")).distinct()
-          .collect().map(_.getInt(0)).toSeq.sorted // ≤ numBuckets ids
+        // the batch's keys with their bucket ids: one narrow job, no shuffle
+        val bucketOfKey = batch0.select(keyCols.map(col) :+ bexpr.cast("int"): _*)
+          .collect().iterator.map(r => r.toSeq.init -> r.getInt(keyCols.size)).toMap
+        val touched = bucketOfKey.values.toSeq.distinct.sorted // ≤ numBuckets ids
         if (touched.nonEmpty) {
           val existing = BucketedStore.readBuckets(spark, tablePath, touched, fs)
           val all = existing.fold(batch0)(
@@ -247,12 +256,16 @@ object ChangelogStream {
           // index never reads through the swapped table path
           val latest = graft.core.Changelog
             .compact(all, keyCols, tsCol, tieBreakCols).localCheckpoint(true)
+          val published =
+            publishable(latest, batch0, keyCols, bucketOfKey, tablePath, cache)
           // spec-only evidence counts run BEFORE the swap replaces the
           // files `existing` lazily points at
           val preSwap = stats.map(_ =>
             (batch0.count(), existing.map(_.count()).getOrElse(0L)))
           BucketedStore.writeBuckets(latest, bexpr, tablePath, touched,
-            batchId, numBuckets, fs)
+            batchId, numBuckets, fs, onCommit = (id, from, to) =>
+              cache.publish(BucketedStore.bucketDir(tablePath, id), from, to,
+                keyCols, published.map(_.getOrElse(id, Nil))))
           index.foreach { case (indexFn, indexPath) =>
             val idx = graft.state.SecondaryIndex.build(
               latest.filter(!col("tombstone")), keyCols, indexFn)
@@ -268,6 +281,27 @@ object ChangelogStream {
         ()
       }
   }
+
+  /** The final rows of the batch's keys in `latest`, by bucket id, for
+    * [[BucketCache.publish]]: one narrow job over the checkpointed
+    * compaction. None, and the touched entries are then dropped, not
+    * rebuilt, when the cache holds no touched bucket of `tablePath`
+    * (nothing to rebuild, so no job), when the batch's key types differ
+    * from the compaction's (a narrower batch type is widened there, so
+    * the batch's keys would match none of its rows), or when the keys
+    * alone exceed the cache's byte bound (the rows would too). */
+  private def publishable(latest: DataFrame, batch: DataFrame, keyCols: Seq[String],
+      bucketOfKey: Map[Seq[Any], Int], tablePath: String,
+      cache: BucketCache): Option[Map[Int, Seq[Row]]] =
+    Option.when(
+      bucketOfKey.valuesIterator.exists(id =>
+        cache.holds(BucketedStore.bucketDir(tablePath, id), keyCols)) &&
+        keyCols.forall(c => batch.schema(c).dataType == latest.schema(c).dataType) &&
+        org.apache.spark.util.SizeEstimator.estimate(bucketOfKey) <= cache.maxBytes) {
+      val keyIdx = keyCols.map(latest.schema.fieldIndex)
+      latest.filter((r: Row) => bucketOfKey.contains(keyIdx.map(r.get)))
+        .collect().toSeq.groupBy(r => bucketOfKey(keyIdx.map(r.get)))
+    }
 
   def start(w: DataStreamWriter[Row]): StreamingQuery = w.start()
 }

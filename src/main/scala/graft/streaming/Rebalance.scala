@@ -6,8 +6,8 @@ package graft.streaming
   *
   * The reference reads cluster state from ZooKeeper, computes a target
   * assignment, prints the diff, and emits the
-  * kafka-reassign-partitions.sh JSON plan. ZooKeeper/Kafka wire I/O is
-  * impossible in this container (same closure as TopicAdmin), so — same
+  * kafka-reassign-partitions.sh JSON plan. The build has no ZooKeeper or
+  * Kafka client (see README), so — the usual
   * seam pattern — ALL of the decision logic lives here as pure functions
   * over an explicit cluster snapshot, unit-tested; a deployment feeds it
   * from AdminClient.describeTopics/describeCluster (~15 lines).

@@ -1,6 +1,5 @@
 package graft
 
-import java.io.File
 import java.nio.file.Files
 
 import graft.streaming.AtomicSwap
@@ -24,8 +23,7 @@ class AtomicSwapSpec extends SparkSpec {
     AtomicSwap.swap(Seq("v2").toDF("v"), t, batchId = 2)
     readV(t) shouldBe "v2"
     // the superseded gen-1 and the orphan gen-7 are both gone
-    new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
-      Seq("table.gen-2", "table.ptr")
+    Generations.onlyLive(root, "table", batchId = 2)
   }
 
   "recover" should "report a missing table with no backup as unrecoverable" in {

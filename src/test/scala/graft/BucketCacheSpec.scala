@@ -8,39 +8,37 @@ import scala.util.Random
 
 import graft.serving.Gateway
 import graft.state.SecondaryIndex
-import graft.streaming.{AtomicSwap, BucketCache, BucketedStore, LocalFs}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.streaming.{AtomicSwap, BucketCache, BucketedStore, ChangelogStream, LocalFs}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** The serving cache of committed bucket generations ([[BucketCache]])
   * behind `Gateway.BucketedRoute` and `Gateway.IndexRoute`: commits that
-  * land mid-read (driven by `StoreFs` hooks, never by timing), reuse of
-  * a generation dir name, the byte bound, answers equal to the Spark read
-  * path, and zero Spark jobs on a hit. */
+  * land mid-read (driven by `StoreFs` hooks, never by timing), restarted
+  * batch ids, the byte bound, the writer's publications racing readers,
+  * answers equal to the Spark read path, and zero Spark jobs on a hit. */
 class BucketCacheSpec extends SparkSpec {
   import spark.implicits._
 
   private val N = 4
   private val kv = Seq("k")
 
-  /** LocalFs with one-shot hooks run right after a read of a matching path. */
+  /** LocalFs with one-shot hooks run right before or right after a read
+    * of a matching path. */
   private final class HookFs extends ForwardingFs {
+    @volatile private var beforeRead: Option[(String => Boolean, () => Unit)] = None
     @volatile private var afterRead: Option[(String => Boolean, () => Unit)] = None
-    @volatile private var afterList: Option[(String => Boolean, () => Unit)] = None
     def onRead(p: String => Boolean)(body: => Unit): Unit = afterRead = Some((p, () => body))
-    def onList(p: String => Boolean)(body: => Unit): Unit = afterList = Some((p, () => body))
+    def onNextRead(p: String => Boolean)(body: => Unit): Unit =
+      beforeRead = Some((p, () => body))
     private def fire(hook: Option[(String => Boolean, () => Unit)], path: String,
         clear: () => Unit): Unit =
       hook.filter(_._1(path)).foreach { case (_, body) => clear(); body() }
     override def readString(path: String): Option[String] = {
+      fire(beforeRead, path, () => beforeRead = None)
       val r = LocalFs.readString(path)
       fire(afterRead, path, () => afterRead = None)
-      r
-    }
-    override def listNames(dir: String): Seq[String] = {
-      val r = LocalFs.listNames(dir)
-      fire(afterList, dir, () => afterList = None)
       r
     }
   }
@@ -56,30 +54,33 @@ class BucketCacheSpec extends SparkSpec {
   private def store(name: String): String =
     Files.createTempDirectory(name).toFile.getAbsolutePath
 
-  "the cached route" should "serve a commit that lands between its pointer read and its listing" in {
+  private def ptrOf(root: String, k: Long): String =
+    s"${BucketedStore.bucketDir(root, BucketedStore.bucketOf(Seq(k), N))}.ptr"
+
+  "the cached route" should "serve a commit that lands between its pointer read and its load" in {
     val root = store("graft-bc-a")
     commit(root, 0L, 1L -> "old", 2L -> "x", 3L -> "y", 4L -> "z")
     val fs = new HookFs
     val cache = new BucketCache(1L << 26)
     val route = new Gateway.BucketedRoute(spark, root, kv, fs, cache)
-    val ptr = s"${BucketedStore.bucketDir(root, BucketedStore.bucketOf(Seq(1L), N))}.ptr"
-    fs.onRead(_ == ptr)(commit(root, 1L, 1L -> "new"))
+    fs.onRead(_ == ptrOf(root, 1L))(commit(root, 1L, 1L -> "new"))
     value(route.get(Seq(1L))) shouldBe Some("new")
     cache.loads.get shouldBe 1 // the superseded generation was never loaded
   }
 
-  it should "serve a commit that lands between its listing and its load" in {
+  it should "serve a commit that lands during its load, caught by the post-load pointer check" in {
     val root = store("graft-bc-b")
     commit(root, 0L, 1L -> "old", 2L -> "x", 3L -> "y", 4L -> "z")
     val fs = new HookFs
     val cache = new BucketCache(1L << 26)
     val route = new Gateway.BucketedRoute(spark, root, kv, fs, cache)
-    val gen = AtomicSwap.pointer(BucketedStore.bucketDir(root,
-      BucketedStore.bucketOf(Seq(1L), N))).get
-    fs.onList(_ == gen)(commit(root, 1L, 1L -> "new"))
+    val ptr = ptrOf(root, 1L)
+    // the read after the resolving one is the load's own pointer check:
+    // the old generation was read whole, then the commit lands
+    fs.onRead(_ == ptr)(fs.onNextRead(_ == ptr)(commit(root, 1L, 1L -> "new")))
     value(route.get(Seq(1L))) shouldBe Some("new")
     value(route.get(Seq(1L))) shouldBe Some("new") // and then from the cache
-    cache.loads.get shouldBe 1
+    cache.loads.get shouldBe 1 // the old generation's rows were dropped
     cache.hits.get shouldBe 1
   }
 
@@ -90,12 +91,14 @@ class BucketCacheSpec extends SparkSpec {
     val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
     val bucket = BucketedStore.bucketDir(root, BucketedStore.bucketOf(Seq(1L), N))
     val first = AtomicSwap.pointer(bucket).get
-    value(route.get(Seq(1L))) shouldBe Some("v0") // cached under .staging-0
+    value(route.get(Seq(1L))) shouldBe Some("v0") // cached under batch 0's generation
     commit(root, 1L, 1L -> "v1")
-    // a restarted stream counts batch ids from 0 again
+    // a restarted stream counts batch ids from 0 again: the generation
+    // name still differs, so the pointer never names the cached entry
     commit(root, 0L, 1L -> "v2")
-    AtomicSwap.pointer(bucket) shouldBe Some(first) // the same dir name again
+    AtomicSwap.pointer(bucket) should not be Some(first)
     value(route.get(Seq(1L))) shouldBe Some("v2")
+    cache.loads.get shouldBe 2
   }
 
   it should "stay correct and within its byte bound under a tiny bound" in {
@@ -120,32 +123,198 @@ class BucketCacheSpec extends SparkSpec {
     }
   }
 
-  /** Spark jobs started while `body` runs on this thread, counted once the
-    * listener bus has delivered a marker job started after it. */
-  private def jobsDuring(body: => Unit): Int = {
+  private val ddl = "k BIGINT, v STRING, ts_us BIGINT, tombstone BOOLEAN"
+
+  /** A streamed store seeded with keys 1..`keys` at value "v0". */
+  private def seeded(cache: BucketCache, keys: Int, n: Int = N,
+      index: Boolean = false): StreamedStore = {
+    val s = new StreamedStore(spark, ddl, kv, n, cache,
+      Option.when(index)(split(col("v"), " ")))
+    s.append((1L to keys.toLong).map(k => (k, "v0", 100L, false))
+      .toDF("k", "v", "ts_us", "tombstone"))
+    s.drain()
+    s
+  }
+
+  private def changes(rows: (Long, String, Long, Boolean)*) =
+    rows.toDF("k", "v", "ts_us", "tombstone")
+
+  /** LocalFs that runs a one-shot hook right after a write of a matching
+    * path (a pointer flip, when the path is a `.ptr`). */
+  private final class AfterWriteFs(p: String => Boolean)(body: => Unit) extends ForwardingFs {
+    @volatile private var armed = true
+    override def writeString(path: String, content: String): Unit = {
+      super.writeString(path, content)
+      if (armed && p(path)) { armed = false; body }
+    }
+  }
+
+  "a publication" should "reach a reader whose pointer read lands between the flip and the publication" in {
+    val cache = new BucketCache(1L << 26)
+    val s = seeded(cache, 8)
+    val route = new Gateway.BucketedRoute(spark, s.table, kv, LocalFs, cache)
+    (1L to 8L).foreach(k => value(route.get(Seq(k))) shouldBe Some("v0"))
+    val loads = cache.loads.get
+    @volatile var seen: Option[String] = None
+    s.append(changes((1L, "v1", 200L, false)))
+    // the writer's publication follows this pointer write; the read lands
+    // between the two and finds the cache still on the old generation
+    s.drain(new AfterWriteFs(_ == ptrOf(s.table, 1L))({ seen = value(route.get(Seq(1L))) }))
+    seen shouldBe Some("v1")
+    cache.loads.get shouldBe loads + 1 // the reader loaded the new generation
+    cache.published.get shouldBe 0 // which the late publication left alone
+    cache.invalidated.get shouldBe 0
+    value(route.get(Seq(1L))) shouldBe Some("v1")
+    cache.loads.get shouldBe loads + 1
+  }
+
+  /** Rows shaped as [[commit]] writes them, as a writer would publish them. */
+  private def rowsOf(rows: (Long, String)*): Option[Seq[Row]] =
+    Some(rows.toDF("k", "v").withColumn("tombstone", lit(false)).collect().toSeq)
+
+  it should "change nothing once a reader already loaded the new generation" in {
+    val root = store("graft-bc-late")
+    val cache = new BucketCache(1L << 26)
+    commit(root, 0L, 1L -> "v0")
+    val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
+    val bucket = BucketedStore.bucketDir(root, BucketedStore.bucketOf(Seq(1L), N))
+    value(route.get(Seq(1L))) shouldBe Some("v0")
+    val from = AtomicSwap.pointer(bucket)
+    commit(root, 1L, 1L -> "v1")
+    val to = AtomicSwap.pointer(bucket).get
+    value(route.get(Seq(1L))) shouldBe Some("v1")
+    val (bytes, loads) = (cache.bytes, cache.loads.get)
+    cache.publish(bucket, from, to, kv, rowsOf(1L -> "stale"))
+    value(route.get(Seq(1L))) shouldBe Some("v1")
+    (cache.bytes, cache.loads.get) shouldBe ((bytes, loads))
+    cache.published.get shouldBe 0
+    cache.invalidated.get shouldBe 0
+  }
+
+  it should "invalidate, never fill, a bucket with no entry for the superseded generation" in {
+    val root = store("graft-bc-inval")
+    val b1 = BucketedStore.bucketOf(Seq(1L), N)
+    val mate = (2L to 100L).find(k => BucketedStore.bucketOf(Seq(k), N) == b1).get
+    val bucket = BucketedStore.bucketDir(root, b1)
+    val gens = (0L to 2L).map { b =>
+      commit(root, b, 1L -> s"v$b", mate -> "w0")
+      AtomicSwap.pointer(bucket).get
+    }
+    val rows = rowsOf(1L -> "v2")
+
+    // no entry at all: nothing is filled in, and the next read loads
+    val empty = new BucketCache(1L << 26)
+    empty.publish(bucket, Some(gens(1)), gens(2), kv, rows)
+    empty.bytes shouldBe 0L
+    (empty.published.get, empty.invalidated.get) shouldBe ((0L, 0L))
+    value(new Gateway.BucketedRoute(spark, root, kv, LocalFs, empty)
+      .get(Seq(1L))) shouldBe Some("v2")
+    empty.loads.get shouldBe 1
+
+    // an entry for neither side of the flip is dropped
+    val cache = new BucketCache(1L << 26)
+    val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
+    value(route.get(Seq(mate))) shouldBe Some("w0") // resident for gens(2)
+    cache.publish(bucket, Some(gens(0)), gens(1), kv, rows)
+    (cache.published.get, cache.invalidated.get, cache.bytes) shouldBe ((0L, 1L, 0L))
+
+    // and so is one whose rebuilt entry would not fit the bound
+    route.get(Seq(mate))
+    val tight = new BucketCache(cache.bytes)
+    val tightRoute = new Gateway.BucketedRoute(spark, root, kv, LocalFs, tight)
+    value(tightRoute.get(Seq(mate))) shouldBe Some("w0")
+    tight.bytes should be > 0L
+    tight.publish(bucket, Some(gens(2)), s"${gens(2)}-next", kv,
+      rowsOf((1L to 64L).map(k => k -> s"wide-$k"): _*))
+    (tight.published.get, tight.invalidated.get, tight.bytes) shouldBe ((0L, 1L, 0L))
+
+    // and so is one whose rows lack a column the batch brought: the files
+    // now carry it on every row of the bucket
+    value(route.get(Seq(mate))) shouldBe Some("w0")
+    cache.publish(bucket, Some(gens(2)), s"${gens(2)}-next", kv, Some(Seq((1L, "v3", "new"))
+      .toDF("k", "v", "extra").withColumn("tombstone", lit(false)).collect().toSeq))
+    (cache.published.get, cache.invalidated.get, cache.bytes) shouldBe ((0L, 2L, 0L))
+  }
+
+  it should "drop, not rebuild, entries when the batch's key type is narrower than the table's" in {
+    val cache = new BucketCache(1L << 26)
+    val s = seeded(cache, 20) // BIGINT keys over all 4 buckets
+    val route = new Gateway.BucketedRoute(spark, s.table, kv, LocalFs, cache)
+    (1L to 20L).foreach(k => value(route.get(Seq(k))) shouldBe Some("v0"))
+    // a second stream with INT keys: the compaction widens them to BIGINT,
+    // so the batch's own key values match none of the rows it wrote
+    val in = s"${s.root}/in-int"
+    (1 to 20).map(k => (k, "v1", 200L, false)).toDF("k", "v", "ts_us", "tombstone")
+      .coalesce(1).write.parquet(in)
+    ChangelogStream.materializeLatestBucketed(
+        spark.readStream.schema("k INT, v STRING, ts_us BIGINT, tombstone BOOLEAN").parquet(in),
+        kv, "ts_us", s.table, s"${s.root}/ckpt-int", N, cache = cache)
+      .start().awaitTermination()
+    (1L to 20L).foreach(k => value(route.get(Seq(k))) shouldBe Some("v1"))
+    (cache.published.get, cache.invalidated.get) shouldBe ((0L, N.toLong))
+  }
+
+  /** Spark jobs, and stages that wrote shuffle output, of every thread
+    * while `body` runs: the events between two marker jobs, counted once
+    * the listener bus has delivered the second. */
+  private def sparkWork(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
-    val counted = new AtomicInteger
-    val marker = new CountDownLatch(1)
+    val jobs = new AtomicInteger
+    val shuffles = new AtomicInteger
+    @volatile var open = false
+    val end = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         Option(e.properties).map(_.getProperty("graft.spec.tag")).orNull match {
-          case "measured" => counted.incrementAndGet()
-          case "marker" => marker.countDown()
-          case _ => ()
+          case "begin" => open = true
+          case "end" => open = false; end.countDown()
+          case _ => if (open) jobs.incrementAndGet()
         }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (open && e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten > 0)
+          shuffles.incrementAndGet()
+    }
+    def marker(tag: String): Unit = {
+      sc.setLocalProperty("graft.spec.tag", tag)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.spec.tag", null)
     }
     sc.addSparkListener(listener)
     try {
-      sc.setLocalProperty("graft.spec.tag", "measured")
+      marker("begin")
       body
-      sc.setLocalProperty("graft.spec.tag", "marker")
-      spark.range(1).count()
-      marker.await(60, TimeUnit.SECONDS) shouldBe true
-      counted.get
-    } finally {
-      sc.setLocalProperty("graft.spec.tag", null)
-      sc.removeSparkListener(listener)
-    }
+      marker("end")
+      end.await(60, TimeUnit.SECONDS) shouldBe true
+      (jobs.get, shuffles.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def jobsDuring(body: => Unit): Int = sparkWork(body)._1
+
+  "the bucketed writer" should "publish at most one job beyond a writer that does not, add no shuffle stage, and leave the next read no job" in {
+    val cache = new BucketCache(1L << 28)
+    val s = seeded(cache, 400, n = 16, index = true)
+    val route = new Gateway.BucketedRoute(spark, s.table, kv, LocalFs, cache)
+    (1L to 400L).foreach(k => value(route.get(Seq(k))) shouldBe Some("v0"))
+    s.append(changes((3L, "v1 x", 200L, false), (5L, "v1", 200L, false),
+      (7L, null, 200L, true), (11L, "v1 y", 200L, false), (13L, "v1", 50L, false),
+      (401L, "new", 200L, false), (17L, "v1", 200L, false), (19L, "v1 z", 200L, false)))
+    val loads = cache.loads.get
+    val (jobs, shuffles) = sparkWork(s.drain())
+    // the same batch through the writer before publication, which found its
+    // touched buckets with a distinct() and collected no rows, ran 8 jobs,
+    // 3 of their stages writing shuffle output (counted as here)
+    jobs should be <= 8 + 1
+    shuffles should be <= 3
+    cache.published.get shouldBe (Seq(3L, 5L, 7L, 11L, 13L, 401L, 17L, 19L)
+      .map(k => BucketedStore.bucketOf(Seq(k), 16)).distinct.size)
+    cache.invalidated.get shouldBe 0
+    jobsDuring {
+      value(route.get(Seq(3L))) shouldBe Some("v1 x")
+      route.get(Seq(7L)) shouldBe None
+      value(route.get(Seq(13L))) shouldBe Some("v0") // the older update lost
+      value(route.get(Seq(401L))) shouldBe Some("new")
+    } shouldBe 0
+    cache.loads.get shouldBe loads
   }
 
   "the cached routes" should "answer as the Spark read path does, and run no Spark job on a hit" in {

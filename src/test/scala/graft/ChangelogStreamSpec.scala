@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{AtomicSwap, ChangelogStream}
+import scala.util.Random
+
+import graft.serving.Gateway
+import graft.streaming.{AtomicSwap, BucketCache, ChangelogStream, LocalFs}
 import org.apache.spark.sql.functions._
 
 /** End-to-end file-backed changelog streaming: ingest → latest-per-key
@@ -79,6 +82,127 @@ class ChangelogStreamSpec extends SparkSpec {
     // the serving view filters it, mirroring compaction-then-read
     val live = graft.core.Changelog.dropTombstones(AtomicSwap.read(spark, table).get, "tombstone")
     live.select("key").as[Int].collect() shouldBe Seq(1)
+  }
+}
+
+/** The bucketed writer's publications into the serving cache
+  * ([[BucketCache.publish]]) against the files it commits: after every
+  * batch of a randomized tombstoned drain, crashes and re-runs included,
+  * each published entry equals the entry a fresh load of the committed
+  * generation decodes, key by key and row by row. */
+class BucketPublicationSpec extends SparkSpec {
+  import spark.implicits._
+
+  private val ddl = "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN"
+
+  /** Forwards to LocalFs and throws once, at the first write or delete
+    * `crashAt(op, path)` picks, before the call is made. */
+  private final class CrashOnceFs(crashAt: (String, String) => Boolean) extends ForwardingFs {
+    private var armed = true
+    private def step(op: String, path: String): Unit =
+      if (armed && crashAt(op, path)) {
+        armed = false
+        throw new IllegalStateException(s"injected crash at $op $path")
+      }
+    override def writeString(path: String, content: String): Unit = {
+      step("write", path); super.writeString(path, content)
+    }
+    override def deleteRecursively(path: String): Unit = {
+      step("delete", path); super.deleteRecursively(path)
+    }
+  }
+
+  "the bucketed writer" should "publish entries equal to the committed files on a tombstoned drain with crashes and re-runs" in {
+    val rnd = new Random(29)
+    val n = 8
+    val kc = Seq("key")
+    val cache = new BucketCache(1L << 28)
+    val s = new StreamedStore(spark, ddl, kc, n, cache,
+      Some(array(substring(col("value"), 1, 1))))
+    val keys = 1 to 48
+    // the model: latest (ts, value, tombstone) per key; timestamps never tie
+    val model = scala.collection.mutable.Map.empty[Int, (Long, String, Boolean)]
+    def batch(rows: Seq[(Int, String, Long, Boolean)]): Unit = {
+      rows.foreach { case (k, v, ts, t) =>
+        if (model.get(k).forall(_._1 < ts)) model(k) = (ts, v, t) }
+      s.append(rows.toDF("key", "value", "ts_us", "tombstone"))
+    }
+    val route = {
+      batch(keys.map(k => (k, s"a$k", 100L, false)))
+      s.drain()
+      new Gateway.BucketedRoute(spark, s.table, kc, LocalFs, cache)
+    }
+    val buckets = (0 until n).map(s.bucket)
+    buckets.foreach(cache.liveRows(spark, _, kc, LocalFs) shouldBe defined)
+
+    var dropped = cache.invalidated.get
+    def check(label: String): Unit = withClue(s"$label: ") {
+      val loads = cache.loads.get
+      val fresh = new BucketCache(1L << 28)
+      for (b <- buckets) {
+        val got = cache.liveRows(spark, b, kc, LocalFs).get
+        val want = fresh.liveRows(spark, b, kc, LocalFs).get
+        got.keySet shouldBe want.keySet
+        for ((k, row) <- want) {
+          got(k).schema.fieldNames.toSeq shouldBe row.schema.fieldNames.toSeq
+          got(k).toSeq shouldBe row.toSeq
+        }
+      }
+      // every bucket was served from a publication, except those a
+      // publication dropped
+      cache.loads.get - loads shouldBe cache.invalidated.get - dropped
+      dropped = cache.invalidated.get
+      for (k <- keys)
+        route.get(Seq(k)).map(_.getAs[String]("value")) shouldBe
+          model.get(k).filterNot(_._3).map(_._2)
+    }
+    check("seed")
+
+    val doomed = keys(3)
+    val tablePtr = s"${s.table}/b"
+    for (b <- 1 to 6) {
+      val base = 1000L * b
+      val rows = rnd.shuffle(keys.filterNot(_ == doomed)).take(7).zipWithIndex.map {
+        case (k, i) => rnd.nextInt(4) match {
+          case 0 => (k, null, base + i, true)
+          case 1 => (k, s"stale$b", 50L + 10 * b + i, false) // older than the seed
+          case _ => (k, s"${"abc" (rnd.nextInt(3))}$b-$k", base + i, false)
+        }
+      }
+      batch(rows ++ (b match {
+        case 1 => Seq((doomed, null, base + 100, true))
+        case 2 => Seq((doomed, "late", 1050L, false)) // older than the tombstone
+        case _ => Nil
+      }))
+      b match {
+        case 3 => // crash at the second table pointer flip: the re-run finds
+          // the first flip's generation published and moves it on
+          var flips = 0
+          intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+            s.drain(new CrashOnceFs((op, p) => op == "write" && p.startsWith(tablePtr) &&
+              p.endsWith(".ptr") && { flips += 1; flips == 2 }))
+          }
+          flips shouldBe 2
+          s.drain()
+        case 5 => // crash between a flip and the delete of the superseded
+          // generation: that bucket was never published, and the re-run
+          // finds its entry on neither side of its flip
+          var flipped = false
+          intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+            s.drain(new CrashOnceFs((op, p) =>
+              if (op == "write") { flipped ||= p.startsWith(tablePtr) && p.endsWith(".ptr"); false }
+              else flipped))
+          }
+          flipped shouldBe true
+          s.drain()
+        case _ => s.drain()
+      }
+      check(s"batch $b")
+    }
+    model(doomed)._3 shouldBe true
+    route.get(Seq(doomed)) shouldBe None
+    cache.published.get should be > 10L
+    cache.invalidated.get should be >= 1L
   }
 }
 

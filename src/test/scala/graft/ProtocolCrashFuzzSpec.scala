@@ -122,9 +122,9 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
   it should "survive every crash point of a batch RE-RUN after a maximally-committed first crash" in {
     // the destructive-overwrite class (r14 advice, high): the first attempt
     // of batch 2 crashes at its LAST metadata mutation — every bucket
-    // pointer it managed to flip targets `.staging-2/__b=i`. The re-run
-    // stages to a FRESH attempt dir (never overwriting the referenced
-    // staging), so at every crash point j of the re-run each bucket still
+    // pointer it managed to flip targets `.staging-2-<uuid>/__b=i`. The
+    // re-run stages to its own uniquely named dir (never overwriting the
+    // referenced staging), so at every crash point j of the re-run each bucket still
     // reads exactly OLD or NEW — no window dangles a pointer into a
     // deleted staging (the old code's silent-loss window).
     val base: StoreFs = LocalFs

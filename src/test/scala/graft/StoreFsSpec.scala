@@ -31,8 +31,7 @@ class StoreFsSpec extends SparkSpec {
     AtomicSwap.swap(Seq("v2").toDF("v"), t, batchId = 2)
     readV(t) shouldBe "v2"
     // superseded gen-1 deleted at commit; only gen-2 + the pointer remain
-    new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
-      Seq("table.gen-2", "table.ptr")
+    Generations.onlyLive(root, "table", batchId = 2)
   }
 
   it should "leave the OLD generation live when a crash hits before the pointer flip, and sweep the orphan" in {
@@ -44,8 +43,7 @@ class StoreFsSpec extends SparkSpec {
     Seq("v2-uncommitted").toDF("v").write.parquet(s"$t.gen-9")
     AtomicSwap.recover(t) shouldBe true
     readV(t) shouldBe "v1" // prior state intact, nothing lost
-    new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
-      Seq("table.gen-1", "table.ptr") // orphan gen-9 swept
+    Generations.onlyLive(root, "table", batchId = 1) // orphan gen-9 swept
   }
 
   it should "serve the NEW generation when a crash hits after the flip but before the old delete" in {
