@@ -387,8 +387,9 @@ private[graft] object StreamingQueries {
     // leave the index and superseded postings vanish BY CONSTRUCTION
     // (the q174 de-index rule, live); the drained index ≡ the batch
     // index of the replayed log, which is what the oracle asserts —
-    // BucketedStoreSpec additionally pins ≡ the full per-batch
-    // re-derivation on a multi-batch tombstoned drain.
+    // BucketedStoreSpec pins the same (table and index ≡ Changelog.compact
+    // + SecondaryIndex.build of the replayed log) on a multi-batch
+    // tombstoned drain.
     "w34_stream_index_maintain" -> ((s, d) => {
       val tmpPath = java.nio.file.Files.createTempDirectory("graft_w34_")
       Support.deleteOnExit(tmpPath)

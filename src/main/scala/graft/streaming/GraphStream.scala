@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.operators.GraphAlgorithms
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
@@ -12,9 +12,10 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * (examples/example-distributed-graph/.../GraphApi.scala:48-117 — BFS +
   * rewrite on every connect/disconnect). The Spark re-expression: edges
   * arrive as a changelog (src, dst, ts_us, tombstone); each micro-batch
-  * folds them into the edge table (last-writer-wins per undirected edge,
-  * tombstone = disconnect) and recomputes components with the
-  * large-star/small-star algorithm, atomically swapping the components
+  * folds them into the edge table through the bucketed writer's step
+  * (last-writer-wins per undirected edge, tombstone = disconnect; one
+  * bucket, so the table is rewritten whole) and recomputes components
+  * with the large-star/small-star algorithm, atomically swapping the components
   * table. Per-batch recompute is the right batch trade: component merges
   * are global (an edge can fuse two giant components), so "incremental"
   * means incremental *input*, with output recomputed from the maintained
@@ -32,7 +33,8 @@ object GraphStream {
       .withColumnRenamed("_dst", "dst")
 
   /** Stream (src, dst, ts_us, tombstone) edge changes; maintain
-    * `<root>/edges` (latest-per-edge) and `<root>/components`
+    * `<root>/edges` (latest-per-edge, a one-bucket [[BucketedStore]]
+    * committed by [[ChangelogStream.commitBatch]]) and `<root>/components`
     * (vertex, component). `tieBreakCols` orders same-timestamp mutations of
     * one edge (e.g. a log offset/sequence column) — without it a connect +
     * disconnect in the same timestamp unit resolves arbitrarily across
@@ -43,23 +45,22 @@ object GraphStream {
       checkpoint: String,
       tieBreakCols: Seq[String] = Nil): DataStreamWriter[Row] = {
     val spark = edgeChangelog.sparkSession
+    val edgesPath = s"$root/edges"
     edgeChangelog.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val edgesPath = s"$root/edges"
-        val compPath = s"$root/components"
-        val prior = AtomicSwap.read(spark, edgesPath)
-        val all = prior.fold(canonical(batch))(p =>
-          p.unionByName(canonical(batch), allowMissingColumns = true))
-        val latest = graft.core.Changelog.compact(all, Seq("src", "dst"), "ts_us", tieBreakCols)
-        AtomicSwap.swap(latest, edgesPath, batchId)
-        val live = graft.core.Changelog.dropTombstones(
-          AtomicSwap.read(spark, edgesPath).get, "tombstone")
-        val components = GraphAlgorithms.connectedComponents(spark, live)
-        AtomicSwap.swap(components, compPath, batchId)
-        ()
+        // one bucket: every batch rereads and rewrites the whole edge
+        // table, as the global component recompute needs it anyway
+        ChangelogStream.commitBatch(canonical(batch), batchId, Seq("src", "dst"),
+          "ts_us", edgesPath, numBuckets = 1, tieBreakCols, index = None,
+          stats = None, LocalFs, BucketCache.shared)
+        // no table yet only when the batch was empty: no edges then
+        val edges = BucketedStore.read(spark, edgesPath).getOrElse(canonical(batch))
+        val live = graft.core.Changelog.dropTombstones(edges, "tombstone")
+        AtomicSwap.swap(GraphAlgorithms.connectedComponents(spark, live),
+          s"$root/components", batchId)
       }
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import graft.core.TimeRange
 import graft.state.KVTable
-import graft.streaming.{AtomicSwap, ChangelogStream}
+import graft.streaming.{BucketedStore, ChangelogStream}
 
 /** Full-system flow mirroring the reference's gateway tests
   * (ExampleBankSpec): transactions stream in (changelog), state is
@@ -26,14 +26,14 @@ class BankIngestionE2ESpec extends SparkSpec {
     val table = s"$root/transactions"
     new java.io.File(in).mkdirs()
     def ingest(): Unit = {
-      val q = ChangelogStream.start(ChangelogStream.materializeLatest(
-        ChangelogStream.fromFiles(spark, in, ddl),
-        keyCols = Seq("sortcode", "account", "txn"), tsCol = "ts_us",
-        tablePath = table, checkpoint = s"$root/ckpt"))
-      q.awaitTermination()
+      ChangelogStream.materializeLatestBucketed(
+          ChangelogStream.fromFiles(spark, in, ddl),
+          keyCols = Seq("sortcode", "account", "txn"), tsCol = "ts_us",
+          tablePath = table, checkpoint = s"$root/ckpt", numBuckets = 4)
+        .start().awaitTermination()
     }
     def state = KVTable(
-      AtomicSwap.read(spark, table).get,
+      BucketedStore.read(spark, table).get,
       Seq("sortcode", "account", "txn"), "ts_us", tombstoneCol = Some("tombstone"))
 
     // ingest the 6-transaction fixture

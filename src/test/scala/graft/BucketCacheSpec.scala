@@ -4,6 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.{CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
 import scala.util.Random
 
 import graft.serving.Gateway
@@ -236,24 +237,6 @@ class BucketCacheSpec extends SparkSpec {
     (cache.published.get, cache.invalidated.get, cache.bytes) shouldBe ((0L, 2L, 0L))
   }
 
-  it should "drop, not rebuild, entries when the batch's key type is narrower than the table's" in {
-    val cache = new BucketCache(1L << 26)
-    val s = seeded(cache, 20) // BIGINT keys over all 4 buckets
-    val route = new Gateway.BucketedRoute(spark, s.table, kv, LocalFs, cache)
-    (1L to 20L).foreach(k => value(route.get(Seq(k))) shouldBe Some("v0"))
-    // a second stream with INT keys: the compaction widens them to BIGINT,
-    // so the batch's own key values match none of the rows it wrote
-    val in = s"${s.root}/in-int"
-    (1 to 20).map(k => (k, "v1", 200L, false)).toDF("k", "v", "ts_us", "tombstone")
-      .coalesce(1).write.parquet(in)
-    ChangelogStream.materializeLatestBucketed(
-        spark.readStream.schema("k INT, v STRING, ts_us BIGINT, tombstone BOOLEAN").parquet(in),
-        kv, "ts_us", s.table, s"${s.root}/ckpt-int", N, cache = cache)
-      .start().awaitTermination()
-    (1L to 20L).foreach(k => value(route.get(Seq(k))) shouldBe Some("v1"))
-    (cache.published.get, cache.invalidated.get) shouldBe ((0L, N.toLong))
-  }
-
   /** Spark jobs, and stages that wrote shuffle output, of every thread
     * while `body` runs: the events between two marker jobs, counted once
     * the listener bus has delivered the second. */
@@ -315,6 +298,85 @@ class BucketCacheSpec extends SparkSpec {
       value(route.get(Seq(401L))) shouldBe Some("new")
     } shouldBe 0
     cache.loads.get shouldBe loads
+  }
+
+  /** Every file under `root` by relative path, with each pointer's target. */
+  private def tree(root: String): Map[String, String] = {
+    val base = java.nio.file.Paths.get(root)
+    val walk = Files.walk(base)
+    try walk.iterator.asScala.filter(Files.isRegularFile(_)).map { f =>
+      val rel = base.relativize(f).toString
+      rel -> (if (rel.endsWith(".ptr")) Files.readString(f) else "")
+    }.toMap finally walk.close()
+  }
+
+  /** Drain `rows` as INT-keyed changelog from a second stream into `s`'s
+    * BIGINT-keyed table: the writer must refuse the batch before staging
+    * anything, leaving the files and the cache as they were. */
+  private def refusedIntBatch(s: StreamedStore, cache: BucketCache,
+      rows: (Int, String, Long, Boolean)*): Unit = {
+    val in = s"${s.root}/in-int"
+    rows.toDF("k", "v", "ts_us", "tombstone").coalesce(1).write.parquet(in)
+    val files = tree(s.table)
+    val counters = Seq(cache.loads, cache.hits, cache.published, cache.invalidated,
+      cache.evictions).map(_.get) :+ cache.bytes
+    val intDdl = "k INT, v STRING, ts_us BIGINT, tombstone BOOLEAN"
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      ChangelogStream.materializeLatestBucketed(spark.readStream.schema(intDdl).parquet(in),
+          kv, "ts_us", s.table, s"${s.root}/ckpt-int", N, cache = cache)
+        .start().awaitTermination()
+    }
+    val refusal = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae.getMessage }
+    refusal.get should (include("'k'") and include("IntegerType") and include("LongType"))
+    tree(s.table) shouldBe files
+    (Seq(cache.loads, cache.hits, cache.published, cache.invalidated,
+      cache.evictions).map(_.get) :+ cache.bytes) shouldBe counters
+  }
+
+  it should "refuse a one-key update whose key type is narrower than the table's, committing and publishing nothing" in {
+    val cache = new BucketCache(1L << 26)
+    val s = seeded(cache, 20) // BIGINT keys over all 4 buckets
+    val route = new Gateway.BucketedRoute(spark, s.table, kv, LocalFs, cache)
+    (1L to 20L).foreach(k => value(route.get(Seq(k))) shouldBe Some("v0"))
+    // an INT key routes by the INT hash, while the compaction widens it to
+    // BIGINT and stages its row by the BIGINT hash: unrefused, the row
+    // lands in a bucket the batch does not commit and the update is lost
+    BucketedStore.bucketOf(Seq(1), N) should not be BucketedStore.bucketOf(Seq(1L), N)
+    refusedIntBatch(s, cache, (1, "v1", 200L, false))
+    value(route.get(Seq(1L))) shouldBe Some("v0")
+  }
+
+  it should "refuse the batch when every bucket it touches is new" in {
+    val cache = new BucketCache(1L << 26)
+    val s = new StreamedStore(spark, ddl, kv, N, cache)
+    val seededKeys = (1L to 100L).filter(k => BucketedStore.bucketOf(Seq(k), N) == 0).take(5)
+    s.append(seededKeys.map(k => (k, "v0", 100L, false)).toDF("k", "v", "ts_us", "tombstone"))
+    s.drain()
+    BucketedStore.existingBuckets(s.table) shouldBe Seq(0)
+    val fresh = (1 to 100).find(k => BucketedStore.bucketOf(Seq(k), N) != 0).get
+    refusedIntBatch(s, cache, (fresh, "v1", 200L, false))
+    BucketedStore.existingBuckets(s.table) shouldBe Seq(0)
+  }
+
+  it should "record its batch stats with one job beyond a batch without them" in {
+    val n = 16
+    val change = changes((3L, "v1", 200L, false), (3L, "v2", 300L, false),
+      (5L, null, 200L, true), (401L, "new", 200L, false))
+    val touched = Seq(3L, 5L, 401L).map(k => BucketedStore.bucketOf(Seq(k), n)).distinct
+    // two equal stores; their caches hold nothing, so neither batch publishes
+    val Seq(plain, counted) = Seq.fill(2)(seeded(new BucketCache(1L << 26), 400, n))
+    Seq(plain, counted).foreach(_.append(change))
+    val stats = scala.collection.mutable.ArrayBuffer.empty[ChangelogStream.BucketBatchStats]
+    val without = jobsDuring(plain.drain())
+    val withStats = jobsDuring(counted.drain(stats = Some(stats)))
+    // the one job: the full-table count (the batch row count is the key
+    // collect's length, the rows read an observation on the compaction)
+    withStats - without shouldBe
+      jobsDuring(BucketedStore.read(spark, counted.table).get.count())
+    stats.toSeq shouldBe Seq(ChangelogStream.BucketBatchStats(1L, 4L,
+      (1L to 400L).count(k => touched.contains(BucketedStore.bucketOf(Seq(k), n))),
+      touched.size, n, 401L))
   }
 
   "the cached routes" should "answer as the Spark read path does, and run no Spark job on a hit" in {

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
 
 /** Incremental bucketed table/index maintenance (r12 verdict #1): a
   * multi-batch tombstoned drain through [[ChangelogStream
-  * .maintainIndexedBucketed]] must (a) end bit-equal to the O(table)
-  * full re-derivation path it replaces, and (b) demonstrably read back
-  * only the touched buckets per batch, never the whole table. */
+  * .maintainIndexedBucketed]] must (a) end equal to the full
+  * re-derivation — `Changelog.compact` (+ `SecondaryIndex.build`) of the
+  * replayed log — and (b) demonstrably read back only the touched buckets
+  * per batch, never the whole table. */
 class BucketedStoreSpec extends SparkSpec {
   import spark.implicits._
 
@@ -71,10 +72,9 @@ class BucketedStoreSpec extends SparkSpec {
         numBuckets = NumBuckets, stats = Some(stats))
       .start().awaitTermination()
 
-    // reference path: full per-batch re-derivation (kept as the cross-check)
-    ChangelogStream.maintainIndexed(stream(), Seq("key"), "ts_us",
-        indexFn, s"$root/ft", s"$root/fidx", s"$root/fckpt")
-      .start().awaitTermination()
+    // reference: the full re-derivation, batch compaction of the replayed log
+    val replayedTable = graft.core.Changelog.compact(spark.read.parquet(in),
+      Seq("key"), "ts_us")
 
     def canonT(df: org.apache.spark.sql.DataFrame) =
       df.select("key", "value", "ts_us", "tombstone").orderBy("key")
@@ -84,16 +84,10 @@ class BucketedStoreSpec extends SparkSpec {
         .as[(String, Int)].collect().toSeq
 
     // (a) table and index ≡ the full re-derivation
-    canonT(BucketedStore.read(spark, s"$root/bt").get) shouldBe
-      canonT(AtomicSwap.read(spark, s"$root/ft").get)
+    canonT(BucketedStore.read(spark, s"$root/bt").get) shouldBe canonT(replayedTable)
     val idx = canonI(BucketedStore.read(spark, s"$root/bidx").get)
-    idx shouldBe canonI(AtomicSwap.read(spark, s"$root/fidx").get)
-    // …and ≡ the batch index of the replayed log
-    val replayed = graft.state.SecondaryIndex.build(
-      graft.core.Changelog.compact(spark.read.parquet(in),
-        Seq("key"), "ts_us").filter(!col("tombstone")),
-      Seq("key"), indexFn)
-    idx shouldBe canonI(replayed)
+    idx shouldBe canonI(graft.state.SecondaryIndex.build(
+      replayedTable.filter(!col("tombstone")), Seq("key"), indexFn))
     // term move applied: the seed x-term of the updated key is gone
     idx.filter(_._2 == hotKeys.head).map(_._1) shouldBe Seq("y")
     // the live generations are staging subdirs — the staging roots that
@@ -114,38 +108,34 @@ class BucketedStoreSpec extends SparkSpec {
     stats.head.touchedBuckets shouldBe NumBuckets // the seed batch hits all
   }
 
-  "materializeLatestBucketed" should "equal the unbucketed materializeLatest across a restart" in {
+  "materializeLatestBucketed" should "equal Changelog.compact of the replayed log across a restart" in {
     val root = Files.createTempDirectory("graft-bstore3").toFile.getAbsolutePath
     val in = s"$root/in"
     new java.io.File(in).mkdirs()
-    def drainBoth(): Unit = {
+    def drain(): Unit =
       ChangelogStream.materializeLatestBucketed(
           spark.readStream.schema(ddl).parquet(in), Seq("key"), "ts_us",
           s"$root/bt", s"$root/bckpt", numBuckets = NumBuckets)
         .start().awaitTermination()
-      ChangelogStream.materializeLatest(
-          spark.readStream.schema(ddl).parquet(in), Seq("key"), "ts_us",
-          s"$root/ft", s"$root/fckpt")
-        .start().awaitTermination()
-    }
     def canon(df: org.apache.spark.sql.DataFrame) =
       df.select("key", "value", "ts_us", "tombstone").orderBy("key")
         .as[(Int, String, Long, Boolean)].collect().toSeq
+    def replayed =
+      canon(graft.core.Changelog.compact(spark.read.parquet(in), Seq("key"), "ts_us"))
 
     Seq((1, "a1", 100L, false), (2, "b1", 100L, false))
       .toDF("key", "value", "ts_us", "tombstone")
       .coalesce(1).write.mode("append").parquet(in)
-    drainBoth()
-    canon(BucketedStore.read(spark, s"$root/bt").get) shouldBe
-      canon(AtomicSwap.read(spark, s"$root/ft").get)
+    drain()
+    canon(BucketedStore.read(spark, s"$root/bt").get) shouldBe replayed
 
-    // restart with an update + insert on the same checkpoints
+    // restart with an update + insert on the same checkpoint
     Seq((1, "a2", 200L, false), (3, "c1", 150L, false))
       .toDF("key", "value", "ts_us", "tombstone")
       .coalesce(1).write.mode("append").parquet(in)
-    drainBoth()
+    drain()
     val got = canon(BucketedStore.read(spark, s"$root/bt").get)
-    got shouldBe canon(AtomicSwap.read(spark, s"$root/ft").get)
+    got shouldBe replayed
     got.map(r => (r._1, r._2)) shouldBe Seq((1, "a2"), (2, "b1"), (3, "c1"))
 
     // routed point lookup: right row, and the scan touches ONE bucket —

@@ -5,16 +5,24 @@ import java.nio.file.Files
 import scala.util.Random
 
 import graft.serving.Gateway
-import graft.streaming.{AtomicSwap, BucketCache, ChangelogStream, LocalFs}
+import graft.streaming.{BucketCache, BucketedStore, ChangelogStream, LocalFs}
 import org.apache.spark.sql.functions._
 
 /** End-to-end file-backed changelog streaming: ingest → latest-per-key
   * materialization via foreachBatch (the reference's bootstrap/tail +
-  * write-through path, Log.java:133-206, KVStoreLocal.put:477-513). */
+  * write-through path, Log.java:133-206, KVStoreLocal.put:477-513), through
+  * the bucketed writer — the "materializeLatest" subject names the
+  * latest-per-key behaviour, which `materializeLatestBucketed` carries. */
 class ChangelogStreamSpec extends SparkSpec {
   import spark.implicits._
 
   private val schemaDdl = "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN"
+
+  private def materialize(in: String, ddl: String, table: String, ckpt: String,
+      tieBreakCols: Seq[String] = Nil): Unit =
+    ChangelogStream.materializeLatestBucketed(ChangelogStream.fromFiles(spark, in, ddl),
+        Seq("key"), "ts_us", table, ckpt, numBuckets = 4, tieBreakCols = tieBreakCols)
+      .start().awaitTermination()
 
   "materializeLatest" should "fold a streamed changelog into a latest-per-key table across restarts" in {
     val root = Files.createTempDirectory("graft-cls").toFile.getAbsolutePath
@@ -27,11 +35,9 @@ class ChangelogStreamSpec extends SparkSpec {
     Seq((1, "a1", 100L, false), (2, "b1", 100L, false))
       .toDF("key", "value", "ts_us", "tombstone")
       .write.mode("append").parquet(in)
-    val q1 = ChangelogStream.start(ChangelogStream.materializeLatest(
-      ChangelogStream.fromFiles(spark, in, schemaDdl), Seq("key"), "ts_us", table, ckpt))
-    q1.awaitTermination()
+    materialize(in, schemaDdl, table, ckpt)
 
-    AtomicSwap.read(spark, table).get.orderBy("key")
+    BucketedStore.read(spark, table).get.orderBy("key")
       .select("key", "value").as[(Int, String)].collect() shouldBe
       Seq((1, "a1"), (2, "b1"))
 
@@ -39,11 +45,9 @@ class ChangelogStreamSpec extends SparkSpec {
     Seq((1, "a2", 200L, false), (3, "c1", 150L, false))
       .toDF("key", "value", "ts_us", "tombstone")
       .write.mode("append").parquet(in)
-    val q2 = ChangelogStream.start(ChangelogStream.materializeLatest(
-      ChangelogStream.fromFiles(spark, in, schemaDdl), Seq("key"), "ts_us", table, ckpt))
-    q2.awaitTermination()
+    materialize(in, schemaDdl, table, ckpt)
 
-    AtomicSwap.read(spark, table).get.orderBy("key")
+    BucketedStore.read(spark, table).get.orderBy("key")
       .select("key", "value").as[(Int, String)].collect() shouldBe
       Seq((1, "a2"), (2, "b1"), (3, "c1")) // last writer won; old keys kept
   }
@@ -57,13 +61,10 @@ class ChangelogStreamSpec extends SparkSpec {
     Seq((1, "older", 100L, false, 7L), (1, "newer", 100L, false, 8L))
       .toDF("key", "value", "ts_us", "tombstone", "offset")
       .write.mode("append").parquet(in)
-    val q = ChangelogStream.start(ChangelogStream.materializeLatest(
-      ChangelogStream.fromFiles(spark, in,
-        "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN, offset BIGINT"),
-      Seq("key"), "ts_us", s"$root/table", s"$root/ckpt",
-      tieBreakCols = Seq("offset")))
-    q.awaitTermination()
-    AtomicSwap.read(spark, s"$root/table").get
+    materialize(in,
+      "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN, offset BIGINT",
+      s"$root/table", s"$root/ckpt", tieBreakCols = Seq("offset"))
+    BucketedStore.read(spark, s"$root/table").get
       .select("value").as[String].collect() shouldBe Array("newer")
   }
 
@@ -75,12 +76,12 @@ class ChangelogStreamSpec extends SparkSpec {
     Seq((1, "a1", 100L, false), (2, "b1", 100L, false), (2, null.asInstanceOf[String], 200L, true))
       .toDF("key", "value", "ts_us", "tombstone")
       .write.mode("append").parquet(in)
-    val q = ChangelogStream.start(ChangelogStream.materializeLatest(
-      ChangelogStream.fromFiles(spark, in, schemaDdl), Seq("key"), "ts_us", table, s"$root/ckpt"))
-    q.awaitTermination()
+    materialize(in, schemaDdl, table, s"$root/ckpt")
     // materialized table keeps the tombstone record (changelog semantics);
     // the serving view filters it, mirroring compaction-then-read
-    val live = graft.core.Changelog.dropTombstones(AtomicSwap.read(spark, table).get, "tombstone")
+    val all = BucketedStore.read(spark, table).get
+    all.count() shouldBe 2
+    val live = graft.core.Changelog.dropTombstones(all, "tombstone")
     live.select("key").as[Int].collect() shouldBe Seq(1)
   }
 }

@@ -18,9 +18,9 @@ class GraphStreamSpec extends SparkSpec {
     val in = s"$rootDir/in"
     new java.io.File(in).mkdirs()
     def run(): Unit = {
-      val q = ChangelogStream.start(GraphStream.maintainComponents(
-        ChangelogStream.fromFiles(spark, in, ddl), s"$rootDir/state", s"$rootDir/ckpt"))
-      q.awaitTermination()
+      GraphStream.maintainComponents(
+          ChangelogStream.fromFiles(spark, in, ddl), s"$rootDir/state", s"$rootDir/ckpt")
+        .start().awaitTermination()
     }
     def components(): Map[String, String] =
       AtomicSwap.read(spark, s"$rootDir/state/components").get

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.collection.mutable
+
 import graft.streaming.{BucketCache, BucketedStore, ChangelogStream, LocalFs, StoreFs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
@@ -24,14 +26,15 @@ final class StreamedStore(spark: SparkSession, ddl: String, val keyCols: Seq[Str
   }
 
   /** Run the writer over every staged file not committed yet, one
-    * micro-batch per file, writing through `fs`. */
-  def drain(fs: StoreFs = LocalFs): Unit = {
+    * micro-batch per file, writing through `fs` and recording `stats`. */
+  def drain(fs: StoreFs = LocalFs,
+      stats: Option[mutable.Buffer[ChangelogStream.BucketBatchStats]] = None): Unit = {
     val src = spark.readStream.schema(ddl).option("maxFilesPerTrigger", "1").parquet(in)
     val ckpt = s"$root/ckpt"
     indexFn.fold(ChangelogStream.materializeLatestBucketed(src, keyCols, "ts_us", table, ckpt,
-        numBuckets, fs = fs, cache = cache))(f =>
+        numBuckets, stats = stats, fs = fs, cache = cache))(f =>
       ChangelogStream.maintainIndexedBucketed(src, keyCols, "ts_us", f, table, index, ckpt,
-        numBuckets, fs = fs, cache = cache))
+        numBuckets, stats = stats, fs = fs, cache = cache))
       .start().awaitTermination()
   }
 }
