@@ -9,21 +9,6 @@ package graft
   * Run: `sbt "runMain graft.DocTool"` */
 object DocTool {
 
-  /** The registry list DocTool renders — PUBLIC so
-    * RegistryConsistencySpec can assert it covers every registry that
-    * feeds SparkEntry (this list was maintained by hand and silently
-    * missed StreamingQueries for one session; now a forgotten entry
-    * fails the spec instead of shipping truncated docs). */
-  val registries: Seq[(String, Map[String, _])] = Seq(
-    "CoreQueries1" -> graft.queries.CoreQueries1.queries,
-    "CoreQueries2" -> graft.queries.CoreQueries2.queries,
-    "CoreQueries3" -> graft.queries.CoreQueries3.queries,
-    "TextQueries" -> graft.queries.TextQueries.queries,
-    "DedupQueries" -> graft.queries.DedupQueries.queries,
-    "SimilarityQueries" -> graft.queries.SimilarityQueries.queries,
-    "PipelineQueries" -> graft.queries.PipelineQueries.queries,
-    "StreamingQueries" -> graft.queries.StreamingQueries.queries)
-
   def render(): String = {
     val sb = new StringBuilder
     sb.append("# graft — generated reference (graft.DocTool; do not edit)\n\n")
@@ -39,12 +24,11 @@ object DocTool {
     }
 
     sb.append("\n## Query registries\n\n")
-    val regs = registries
     sb.append("| registry | queries | names |\n|---|---|---|\n")
-    regs.foreach { case (name, qs) =>
+    SparkEntry.registries.foreach { case (name, qs, _) =>
       sb.append(s"| $name | ${qs.size} | ${qs.keys.toSeq.sorted.mkString(", ")} |\n")
     }
-    sb.append(s"\nTotal: ${regs.map(_._2.size).sum} queries, every one paired " +
+    sb.append(s"\nTotal: ${SparkEntry.queries.size} queries, every one paired " +
       "with a DuckDB oracle (enforced by RegistryConsistencySpec).\n")
     sb.toString
   }

@@ -26,13 +26,22 @@ object SparkEntry {
   // aggregated from the per-domain registries in graft.queries (each
   // query sits next to its DuckDB oracle in its domain file).
   // ------------------------------------------------------------------
-  val queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries1.queries ++ CoreQueries2.queries ++ CoreQueries3.queries ++
-      TextQueries.queries ++ DedupQueries.queries ++
-      SimilarityQueries.queries ++ PipelineQueries.queries ++ StreamingQueries.queries
+  type Query = (SparkSession, String) => DataFrame
 
-  def oracleSql: Map[String, String] =
-    CoreQueries1.oracles ++ CoreQueries2.oracles ++ CoreQueries3.oracles ++
-      TextQueries.oracles ++ DedupQueries.oracles ++
-      SimilarityQueries.oracles ++ PipelineQueries.oracles ++ StreamingQueries.oracles
+  /** The one list of per-domain registries: (name, queries, oracles).
+    * `queries`, `oracleSql`, DocTool and RegistryConsistencySpec all read
+    * it, so a new registry is added here and nowhere else. */
+  val registries: Seq[(String, Map[String, Query], Map[String, String])] = Seq(
+    ("CoreQueries1", CoreQueries1.queries, CoreQueries1.oracles),
+    ("CoreQueries2", CoreQueries2.queries, CoreQueries2.oracles),
+    ("CoreQueries3", CoreQueries3.queries, CoreQueries3.oracles),
+    ("TextQueries", TextQueries.queries, TextQueries.oracles),
+    ("DedupQueries", DedupQueries.queries, DedupQueries.oracles),
+    ("SimilarityQueries", SimilarityQueries.queries, SimilarityQueries.oracles),
+    ("PipelineQueries", PipelineQueries.queries, PipelineQueries.oracles),
+    ("StreamingQueries", StreamingQueries.queries, StreamingQueries.oracles))
+
+  val queries: Map[String, Query] = registries.map(_._2).reduce(_ ++ _)
+
+  def oracleSql: Map[String, String] = registries.map(_._3).reduce(_ ++ _)
 }

@@ -462,9 +462,8 @@ private[graft] object StreamingQueries {
     // key's latest row AT T from the batch view, and the change feed is a
     // REAL stateless SS job filtered to (key, ts > T) in append mode —
     // feed rows ≡ the key's post-T log slice, init ≡ its pre-T latest,
-    // which is what the oracle asserts. The WebSocket push wire itself
-    // stays spec-side (WsServerSpec) — this gates the subscription's
-    // VALUE contract.
+    // which is what the oracle asserts. There is no network push
+    // transport; this gates the subscription's VALUE contract.
     "w38_stream_key_subscribe" -> ((s, d) => {
       val batch = Tables.events(s, d)
       val cfg = batch.agg(min(col("user_id")).as("u"),

@@ -174,13 +174,16 @@ private[graft] object Support {
     * The mean offset is 10⁶ (not 10³): floor((s+K·n)/n)−K is identical
     * for any K where the numerator is non-negative, so the larger K keeps
     * every historical hash while staying sign-safe down to a per-dim mean
-    * of −10⁶ (embedding mean −1000.0) instead of −1.0. */
+    * of −10⁶ (embedding mean −1000.0) instead of −1.0. `cov` and every
+    * iteration CTE are MATERIALIZED: DuckDB inlines the rest, and `v$k`
+    * reads `mx$k` three times, each re-expanding the chain below it (s38
+    * ran out of memory on a 15 GB host at sf0.01). */
   private[graft] def powerIterationChainSql(iterations: Int): String = {
     def itr(k: Int) =
-      s"""u$k AS (SELECT cov.i AS j, SUM(CAST(cv AS HUGEINT) * vv) AS u
+      s"""u$k AS MATERIALIZED (SELECT cov.i AS j, SUM(CAST(cv AS HUGEINT) * vv) AS u
          |  FROM cov JOIN v${k - 1} ON cov.j = v${k - 1}.j GROUP BY 1),
-         |mx$k AS (SELECT u AS um FROM u$k ORDER BY abs(u) DESC, j LIMIT 1),
-         |v$k AS (SELECT j, CAST(CASE WHEN (SELECT um FROM mx$k) = 0 THEN 0 ELSE
+         |mx$k AS MATERIALIZED (SELECT u AS um FROM u$k ORDER BY abs(u) DESC, j LIMIT 1),
+         |v$k AS MATERIALIZED (SELECT j, CAST(CASE WHEN (SELECT um FROM mx$k) = 0 THEN 0 ELSE
          |    ((CASE WHEN (SELECT um FROM mx$k) < 0 THEN -u ELSE u END) * 1000000
          |    + abs((SELECT um FROM mx$k)) * 1000000)
          |    // greatest(abs((SELECT um FROM mx$k)), 1) - 1000000 END AS HUGEINT) AS vv
@@ -190,7 +193,7 @@ private[graft] object Support {
        |mu AS (SELECT i, ((CAST(SUM(x) AS BIGINT) + 1000000 * COUNT(*)) // COUNT(*)) - 1000000 AS mu
        |  FROM qv GROUP BY 1),
        |cent AS (SELECT id, qv.i, x - mu AS c FROM qv JOIN mu USING (i)),
-       |cov AS (SELECT a.i AS i, b.i AS j, CAST(SUM(a.c * b.c) AS BIGINT) AS cv
+       |cov AS MATERIALIZED (SELECT a.i AS i, b.i AS j, CAST(SUM(a.c * b.c) AS BIGINT) AS cv
        |  FROM cent a JOIN cent b ON a.id = b.id GROUP BY 1, 2),
        |v0 AS (SELECT i AS j, CAST(1 AS HUGEINT) AS vv FROM mu),
        |${(1 to iterations).map(itr).mkString(",\n")}""".stripMargin

@@ -3,63 +3,10 @@ package graft.serving
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import scala.collection.mutable
-
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import graft.functions.TimeCryptoProof
 import graft.state.Snapshot
-
-/** Minimal HTTP serving layer over the engine's state views — the
-  * data-plane of the reference's gateway (core/.../actor/GatewayHttp.scala,
-  * Partition.scala:155-192 KeyValueMediator) without the actor system:
-  *
-  *   - `GET /kv/{key}`              point read from a bucketed store
-  *     ([[Gateway.BucketedRoute]]) or, without one, a [[Snapshot]] (J8/P1)
-  *   - `GET /index/{t1,t2,…}`        AND-lookup over a bucketed inverted
-  *     index ([[Gateway.IndexRoute]], R5)
-  *   - `GET /stats`                 key count (P10 over the snapshot)
-  *   - `GET /watch/{key}?from=N`    buffered CDC feed for one key (R7/R8) —
-  *     the WebSocket push flattened to poll-the-buffer transport; a
-  *     streaming query's `foreachBatch` appends into the [[ChangeFeed]]
-  *   - optional signed-URL auth: with a salt configured, every request must
-  *     carry `?signature=` valid for its PATH within the ±1-minute window
-  *     (§2.6h, exactly the reference's TimeCryptoProof gateway check;
-  *     clock injectable so specs are deterministic)
-  *
-  * Serving model: `/kv` and `/index` answer from the process-wide
-  * [[graft.streaming.BucketCache]] of committed bucket generations — a
-  * `/kv` hit is one pointer read and a hash lookup, with no Spark job. An
-  * entry is valid exactly while the bucket's pointer names the generation
-  * it holds (every write attempt names its generation uniquely). The
-  * bucketed writer publishes each table bucket it commits into the cache
-  * right after the pointer flip, so a read after a commit is a hit too;
-  * a read that misses the publication loads the new generation once. The
-  * cache is bounded by bytes and evicts whole buckets, least recently
-  * used first.
-  * Requests run on a fixed pool sized from the core count, so a read
-  * loading one bucket does not hold up the others. JDK-only
-  * (`com.sun.net.httpserver`), zero new dependencies. */
-final class ChangeFeed(keepLastN: Int = 256, maxKeys: Int = 65536) {
-  // LinkedHashMap: insertion order backs the key-eviction bound below
-  private val buf = mutable.LinkedHashMap.empty[String, mutable.ArrayDeque[(Long, String)]]
-  private var seq = 0L
-
-  def append(key: String, valueJson: String): Long = synchronized {
-    seq += 1
-    val q = buf.getOrElseUpdate(key, mutable.ArrayDeque.empty)
-    q.append((seq, valueJson))
-    if (q.length > keepLastN) q.removeHead() // R8 keep-last-N bound per key
-    // bound the KEY map too — without this, streaming over an unbounded
-    // key space grows the buffer map forever; oldest-subscribed key goes
-    if (buf.size > maxKeys) buf.remove(buf.head._1)
-    seq
-  }
-
-  def since(key: String, fromSeq: Long): Seq[(Long, String)] = synchronized {
-    buf.get(key).fold(Seq.empty[(Long, String)])(_.filter(_._1 > fromSeq).toSeq)
-  }
-}
 
 object Gateway {
 
@@ -154,9 +101,35 @@ object Gateway {
   }
 }
 
+/** Minimal HTTP serving layer over the engine's state views — the
+  * data-plane of the reference's gateway (core/.../actor/GatewayHttp.scala,
+  * Partition.scala:155-192 KeyValueMediator) without the actor system:
+  *
+  *   - `GET /kv/{key}`              point read from a bucketed store
+  *     ([[Gateway.BucketedRoute]]) or, without one, a [[Snapshot]] (J8/P1)
+  *   - `GET /index/{t1,t2,…}`        AND-lookup over a bucketed inverted
+  *     index ([[Gateway.IndexRoute]], R5)
+  *   - `GET /stats`                 key count (P10 over the snapshot)
+  *   - optional signed-URL auth: with a salt configured, every request must
+  *     carry `?signature=` valid for its PATH within the ±1-minute window
+  *     (§2.6h, exactly the reference's TimeCryptoProof gateway check;
+  *     clock injectable so specs are deterministic)
+  *
+  * Serving model: `/kv` and `/index` answer from the process-wide
+  * [[graft.streaming.BucketCache]] of committed bucket generations — a
+  * `/kv` hit is one pointer read and a hash lookup, with no Spark job. An
+  * entry is valid exactly while the bucket's pointer names the generation
+  * it holds (every write attempt names its generation uniquely). The
+  * bucketed writer publishes each table bucket it commits into the cache
+  * right after the pointer flip, so a read after a commit is a hit too;
+  * a read that misses the publication loads the new generation once. The
+  * cache is bounded by bytes and evicts whole buckets, least recently
+  * used first.
+  * Requests run on a fixed pool sized from the core count, so a read
+  * loading one bucket does not hold up the others. JDK-only
+  * (`com.sun.net.httpserver`), zero new dependencies. */
 final class Gateway(
     snapshot: Snapshot,
-    feed: ChangeFeed = new ChangeFeed(),
     saltHex: Option[String] = None,
     clock: () => Long = () => System.currentTimeMillis() / 1000L,
     bucketed: Option[Gateway.BucketedRoute] = None,
@@ -260,11 +233,6 @@ final class Gateway(
             val hits = index.get
               .lookup(terms.split(',').toSeq.filter(_.nonEmpty).distinct)
             respond(ex, 200, hits.map(rowJson).mkString("[", ",", "]"))
-          case Seq("watch", key) =>
-            val from = queryParams(ex).get("from").map(_.toLong).getOrElse(0L)
-            val changes = feed.since(key, from)
-              .map { case (s, v) => s"""{"seq":$s,"value":$v}""" }
-            respond(ex, 200, changes.mkString("[", ",", "]"))
           case _ => respond(ex, 404, """{"error":"unknown route"}""")
         }
       }

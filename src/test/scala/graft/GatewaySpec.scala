@@ -4,11 +4,11 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import graft.functions.TimeCryptoProof
-import graft.serving.{ChangeFeed, Gateway}
+import graft.serving.Gateway
 import graft.state.{KVTable, Snapshot}
 
 /** The HTTP serving layer (reference GatewayHttp's data plane): point
-  * reads, stats, CDC watch buffer, and signed-URL auth — driven over REAL
+  * reads, index lookups, stats and signed-URL auth — driven over REAL
   * loopback HTTP with the JDK client. */
 class GatewaySpec extends SparkSpec {
   import spark.implicits._
@@ -17,6 +17,19 @@ class GatewaySpec extends SparkSpec {
   private def get(url: String): HttpResponse[String] =
     client.send(HttpRequest.newBuilder(URI.create(url)).GET().build(),
       HttpResponse.BodyHandlers.ofString())
+
+  /** Status code of a GET sent as a raw request line, for targets the JDK
+    * client refuses to build (a malformed `%` escape). */
+  private def rawStatus(port: Int, target: String): Int = {
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.getOutputStream.write(
+        s"GET $target HTTP/1.1\r\nHost: 127.0.0.1\r\nConnection: close\r\n\r\n".getBytes("US-ASCII"))
+      val status = new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream, "US-ASCII")).readLine()
+      status.split(' ')(1).toInt
+    } finally sock.close()
+  }
 
   private def store = KVTable(
     Seq(
@@ -57,55 +70,12 @@ class GatewaySpec extends SparkSpec {
       get(s"$base/kv/1?signature=$old").statusCode() shouldBe 401
       // a signature never authorizes a DIFFERENT path
       get(s"$base/kv/2?signature=$sig").statusCode() shouldBe 401
-    } finally gw.stop()
-  }
-
-  it should "push a live streaming query's changes through /watch end-to-end (R7)" in {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(String, Long)]
-    val feed = new ChangeFeed()
-    val gw = new Gateway(Snapshot.of(store), feed).start()
-    // the engine-side subscription (filter to the key) + the transport-side
-    // sink (foreachBatch appending to the gateway's buffer) — the full
-    // reference KeyValueMediator path: subscribe, then push every change
-    val sub = graft.streaming.Subscriptions.subscribe(
-      input.toDS().toDF("account", "balance"), "account", "acct7")
-    val q = sub.writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        batch.collect().foreach(r =>
-          feed.append(r.getAs[String]("account"), s"""{"balance":${r.getAs[Long]("balance")}}"""))
-      }.start()
-    try {
-      input.addData(("acct7", 10L), ("other", 99L))
-      q.processAllAvailable()
-      input.addData(("acct7", 25L))
-      q.processAllAvailable()
-      val body = get(s"http://127.0.0.1:${gw.port}/watch/acct7").body()
-      body should include(""""balance":10""")
-      body should include(""""balance":25""")
-      body should not include """"balance":99""" // unsubscribed key never pushed
-    } finally { q.stop(); gw.stop() }
-  }
-
-  it should "serve the buffered per-key change feed with seq cursors (R7/R8)" in {
-    val feed = new ChangeFeed(keepLastN = 2)
-    val gw = new Gateway(Snapshot.of(store), feed).start()
-    try {
-      val base = s"http://127.0.0.1:${gw.port}"
-      get(s"$base/watch/acct1").body() shouldBe "[]"
-      feed.append("acct1", """{"balance":10}""")
-      val s2 = feed.append("acct1", """{"balance":20}""")
-      feed.append("other", """{"balance":99}""")
-      val all = get(s"$base/watch/acct1").body()
-      all should include(""""balance":10""")
-      all should include(""""balance":20""")
-      all should not include """"balance":99""" // key isolation
-      // cursor: only changes after seq=s2's predecessor
-      get(s"$base/watch/acct1?from=${s2 - 1}").body() shouldBe
-        s"""[{"seq":$s2,"value":{"balance":20}}]"""
-      // keep-last-N: a third append evicts the first
-      feed.append("acct1", """{"balance":30}""")
-      get(s"$base/watch/acct1").body() should not include """"balance":10"""
+      // the signature is URL-decoded before it is checked
+      get(f"$base/kv/1?signature=%%${sig.head.toInt}%02X${sig.tail}").statusCode() shouldBe 200
+      // a signature that does not URL-decode is a client error, never a 500:
+      // the server refuses the request line before any route runs
+      for (bad <- Seq("%zz", "%", s"${sig.take(4)}%2"))
+        withClue(s"signature=$bad: ")(rawStatus(gw.port, s"/kv/1?signature=$bad") shouldBe 400)
     } finally gw.stop()
   }
 

@@ -3,9 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.core.Changelog
-import graft.streaming.{AtomicSwap, CdcMetrics}
-import org.apache.spark.sql.Observation
-import org.apache.spark.sql.functions._
+import graft.streaming.AtomicSwap
 
 class VacuumSpec extends SparkSpec {
   import spark.implicits._
@@ -36,31 +34,5 @@ class VacuumSpec extends SparkSpec {
     parts shouldBe 1
     parquetFiles shouldBe 1
     AtomicSwap.read(spark, path).get.count() shouldBe 1000L
-  }
-}
-
-class CdcMetricsSpec extends SparkSpec {
-  import spark.implicits._
-
-  "CdcMetrics.observed" should "report change/tombstone counts and the event-time frontier" in {
-    // use the named-Observation variant for batch collection
-    val obs = Observation("cdc_test")
-    val df = Seq((1, 100L, false), (2, 200L, true), (3, 300L, false))
-      .toDF("key", "ts_us", "tombstone")
-      .observe(obs,
-        count(lit(1)).as("n_changes"),
-        sum(when(col("tombstone"), 1L).otherwise(0L)).as("n_tombstones"),
-        max(col("ts_us")).as("max_ts_us"))
-    df.count() shouldBe 3
-    val m = obs.get
-    m("n_changes") shouldBe 3L
-    m("n_tombstones") shouldBe 1L
-    m("max_ts_us") shouldBe 300L
-  }
-
-  it should "attach the standard changelog observations without a second pass" in {
-    val df = CdcMetrics.observed(
-      Seq((1, 100L, false)).toDF("key", "ts_us", "tombstone"), "ts_us", Some("tombstone"))
-    df.count() shouldBe 1 // plan analyzes and runs with the observation node
   }
 }

@@ -1,0 +1,45 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.flatspec.AnyFlatSpec
+import org.scalatest.matchers.should.Matchers
+
+/** Structural guard against modules that only their own specs call: every
+  * `.scala` file in the engine's Data-API packages must declare a
+  * top-level name that some OTHER engine or perfbench source file mentions
+  * (as a whole word, anywhere in its text). A file scan, no Spark. */
+class ModuleCallerSpec extends AnyFlatSpec with Matchers {
+
+  private val guarded = Seq("streaming", "serving", "serde", "state", "core")
+    .map(p => Paths.get("src/main/scala/graft", p))
+  private val callerRoots = Seq(Paths.get("src/main/scala"), Paths.get("perfbench/jvm/src"))
+
+  private def scalaFiles(root: Path): Seq[Path] = {
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  private val topLevel =
+    """(?m)^(?:(?:private(?:\[\w+\])?|final|sealed|abstract|case|implicit)\s+)*(?:object|class|trait)\s+(\w+)""".r
+
+  "every Data-API module" should "be referenced by another engine or perfbench source" in {
+    val sources = callerRoots.flatMap(scalaFiles)
+      .map(p => p.normalize -> Files.readString(p)).toMap
+    val modules = guarded.flatMap(scalaFiles).map(_.normalize)
+    modules should not be empty
+    sources.keys.exists(_.toString.contains("perfbench")) shouldBe true
+    val uncalled = modules.filterNot { f =>
+      val names = topLevel.findAllMatchIn(sources(f)).map(_.group(1)).toSet
+      names.exists { n =>
+        val mention = s"\\b$n\\b".r
+        sources.exists { case (g, text) => g != f && mention.findFirstIn(text).isDefined }
+      }
+    }
+    withClue(s"modules no other engine or perfbench file references: ${uncalled.mkString(", ")} ")(
+      uncalled shouldBe empty)
+  }
+}

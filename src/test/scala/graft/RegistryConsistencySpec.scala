@@ -9,23 +9,15 @@ import org.scalatest.matchers.should.Matchers
   * q170s is how oracle/query drift starts). */
 class RegistryConsistencySpec extends AnyFlatSpec with Matchers {
 
-  private val registries = Seq(
-    "CoreQueries1" -> (graft.queries.CoreQueries1.queries, graft.queries.CoreQueries1.oracles),
-    "CoreQueries2" -> (graft.queries.CoreQueries2.queries, graft.queries.CoreQueries2.oracles),
-    "CoreQueries3" -> (graft.queries.CoreQueries3.queries, graft.queries.CoreQueries3.oracles),
-    "TextQueries" -> (graft.queries.TextQueries.queries, graft.queries.TextQueries.oracles),
-    "DedupQueries" -> (graft.queries.DedupQueries.queries, graft.queries.DedupQueries.oracles),
-    "SimilarityQueries" -> (graft.queries.SimilarityQueries.queries, graft.queries.SimilarityQueries.oracles),
-    "PipelineQueries" -> (graft.queries.PipelineQueries.queries, graft.queries.PipelineQueries.oracles),
-    "StreamingQueries" -> (graft.queries.StreamingQueries.queries, graft.queries.StreamingQueries.oracles))
+  private val registries = SparkEntry.registries
 
   "each registry" should "pair every query with an oracle in the SAME file" in {
-    for ((name, (qs, os)) <- registries)
+    for ((name, qs, os) <- registries)
       withClue(s"$name: ") { qs.keySet shouldBe os.keySet }
   }
 
   "the aggregated registry" should "not shadow names across registries" in {
-    val all = registries.flatMap(_._2._1.keys)
+    val all = registries.flatMap(_._2.keys)
     all.size shouldBe all.distinct.size
     SparkEntry.queries.keySet shouldBe all.toSet
     SparkEntry.oracleSql.keySet shouldBe all.toSet
@@ -42,13 +34,14 @@ class RegistryConsistencySpec extends AnyFlatSpec with Matchers {
     all(SparkEntry.queries.keys.toSeq) should fullyMatch regex "[qtdsmpw]\\d+_[a-z0-9_]+"
   }
 
-  // DocTool's hand-maintained list silently missed StreamingQueries for a
-  // session (r10): a registry present here (≡ SparkEntry) but absent from
-  // DocTool.registries now fails at spec time instead of shipping
-  // truncated DOCS.md
+  // DocTool once rendered a hand-kept copy of the registry list that
+  // silently missed StreamingQueries (r10): check the generated doc itself
   it should "render every registry in DocTool" in {
-    DocTool.registries.map(_._1).toSet shouldBe registries.map(_._1).toSet
-    DocTool.registries.flatMap(_._2.keys).toSet shouldBe SparkEntry.queries.keySet
+    val words = DocTool.render().split("[^A-Za-z0-9_]+").toSet
+    val missing = (registries.map(_._1) ++ SparkEntry.queries.keys.toSeq.sorted)
+      .filterNot(words)
+    withClue(s"names missing from DocTool.render(): ${missing.mkString(", ")} ")(
+      missing shouldBe empty)
   }
 
   // the README coverage matrix is the last hand-kept registry mirror

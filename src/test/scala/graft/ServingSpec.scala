@@ -1,11 +1,7 @@
 package graft
 
 import graft.state.{KVTable, Snapshot}
-import graft.streaming.Subscriptions
-import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.OutputMode
 
 class SnapshotSpec extends SparkSpec {
   import spark.implicits._
@@ -25,31 +21,6 @@ class SnapshotSpec extends SparkSpec {
       spark.range(0, 1000).select(col("id").as("k"), col("id").as("ts")),
       Seq("k"), "ts")
     an[IllegalArgumentException] should be thrownBy Snapshot.of(big, maxRows = 100)
-  }
-}
-
-/** R7: per-key subscription = update stream filtered to the key — the
-  * reference pushes initial value + every change (KeyValueMediator,
-  * Partition.scala:155-192). */
-class SubscriptionsSpec extends SparkSpec {
-  import spark.implicits._
-
-  "subscribe" should "deliver every change for exactly the subscribed key, in order" in {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val input = MemoryStream[(Long, String, Long)]
-    val feed = Subscriptions.subscribe(
-      input.toDF().toDF("key", "value", "ts_us"), "key", 7L)
-
-    val q = feed.writeStream.format("memory").queryName("sub7")
-      .outputMode(OutputMode.Append()).start()
-    try {
-      input.addData((7L, "v1", 1L), (8L, "other", 1L), (7L, "v2", 2L))
-      q.processAllAvailable()
-      input.addData((9L, "noise", 3L), (7L, "v3", 3L))
-      q.processAllAvailable()
-      val got = spark.sql("SELECT value FROM sub7 ORDER BY ts_us").as[String].collect()
-      got shouldBe Seq("v1", "v2", "v3") // only key 7, every change
-    } finally q.stop()
   }
 }
 
