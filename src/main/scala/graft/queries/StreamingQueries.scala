@@ -530,11 +530,11 @@ private[graft] object StreamingQueries {
     // THE POINTER-FILE (MANIFEST) COMMIT PROTOCOL UNDER THE ORACLE GATE
     // (the StoreFs seam, r13 verdict #1): the w34 ingest topology drains
     // into a bucketed store whose generations are immutable dirs committed
-    // solely by atomic pointer-file puts — the one protocol, correct on
+    // by one atomic manifest-pointer put per batch — correct on
     // POSIX and on rename-less object stores alike (StoreFs has no
     // rename). After the drain the crash window is simulated: an ORPHAN
-    // generation (fully written, never pointed at) carrying poisoned rows
-    // is planted next to a live bucket; the read path must serve exactly
+    // staged bucket generation (fully written, named by no manifest)
+    // carrying poisoned rows is planted beside the live ones; the read path must serve exactly
     // the committed generation set — ≡ the batch compaction of the
     // replayed log, which the oracle asserts. A protocol bug that leaked
     // an uncommitted generation (poison surfaces) or lost a committed one
@@ -554,13 +554,12 @@ private[graft] object StreamingQueries {
       // the store is the empty relation, empty-world gate)
       graft.streaming.BucketedStore.existingBuckets(s"$tmp/t")
         .headOption.foreach { b =>
-          val dir = graft.streaming.BucketedStore.bucketDir(s"$tmp/t", b)
           graft.streaming.BucketedStore.read(s, s"$tmp/t").get.limit(1)
             .withColumn("event_type", lit("__LEAKED_UNCOMMITTED__"))
             // live + non-tombstoned: if the protocol leaked this
             // generation, the poison row MUST surface and break the hash
             .withColumn("tombstone", lit(false))
-            .write.mode("overwrite").parquet(s"$dir.gen-999999")
+            .write.mode("overwrite").parquet(s"$tmp/t/.staging-999999-orphan/__b=$b")
         }
       graft.streaming.BucketedStore.read(s, s"$tmp/t")
         .getOrElse(Tables.events(s, d).select(col("user_id"),

@@ -15,10 +15,10 @@ object Gateway {
     * its one bucket, and the read is answered from that bucket's committed
     * generation in the [[graft.streaming.BucketCache]] — the reference's
     * partition-routed MemStore read (core/.../actor/Group.scala:78-82,
-    * KVStoreLocal.apply). A hit runs no Spark job; a miss loads the one
-    * bucket. Key types and the bucket count come from the store once, at
-    * construction (`writeBuckets` refuses another arity), so URL segments
-    * always coerce to the STORED types (the murmur3 routing contract). */
+    * KVStoreLocal.apply). A hit is one pointer read and runs no Spark job;
+    * a miss loads the one bucket. Key types come from the store's manifest
+    * once, at construction, so URL segments always coerce to the STORED
+    * types (the murmur3 routing contract). */
   final class BucketedRoute(
       spark: org.apache.spark.sql.SparkSession,
       root: String,
@@ -27,12 +27,9 @@ object Gateway {
       cache: graft.streaming.BucketCache = graft.streaming.BucketCache.shared) {
     import graft.streaming.BucketedStore
     val keyTypes: Seq[org.apache.spark.sql.types.DataType] =
-      BucketedStore.read(spark, root, fs)
-        .map(df => keyCols.map(c => df.schema(c).dataType))
-        .getOrElse(throw new IllegalArgumentException(
-          s"no bucketed table at $root"))
-    private val numBuckets = BucketedStore.numBuckets(root, fs).getOrElse(
-      throw new IllegalArgumentException(s"no bucket count at $root"))
+      BucketedStore.manifest(root, fs).flatMap(_.parts.get(root))
+        .map(p => keyCols.map(p.schema(_).dataType))
+        .getOrElse(throw new IllegalArgumentException(s"no bucketed table at $root"))
 
     /** The live row of key `values`: None for a miss or a tombstoned key
       * (404), as [[BucketedStore.pointLookup]] plus a tombstone filter
@@ -41,21 +38,21 @@ object Gateway {
       require(keyCols.size == values.size, "keyCols and values must align")
       BucketedStore.checkProbeTypes(keyCols, keyTypes, values)
       if (values.contains(null)) None
-      else cache.liveRows(spark,
-        BucketedStore.bucketDir(root, BucketedStore.bucketOf(values, numBuckets)),
-        keyCols, fs).flatMap(_.get(values))
+      else cache.committed(root, fs)(m => cache.liveRows(spark, m, root,
+        BucketedStore.bucketOf(values, m.arity), keyCols, fs).get(values)).flatten
     }
   }
 
   /** R5 secondary-index lookup route over the LIVE bucketed index (w35's
     * topology behind HTTP — the reference gateway's index query,
     * KVStoreIndex.scala:20-66): `GET /index/{t1,t2,…}` answers the
-    * multi-term AND intersection from the cached bucket generations. A
-    * key's postings all live in its own index bucket, so the intersection
-    * runs per bucket; each hit's row comes through the table cache
-    * (tombstoned primary rows never serve), in primary-key order, at most
-    * `maxHits` (a serving tier returns a page, not a table) — the same
-    * page as `multiLookup(...).orderBy(keys).limit(maxHits)`. */
+    * multi-term AND intersection from the cached bucket generations of ONE
+    * manifest, table and index alike, so an answer never mixes two
+    * batches. A key's postings all live in its own index bucket, so the
+    * intersection runs per bucket; each hit's row comes through the table
+    * cache (tombstoned primary rows never serve), in primary-key order, at
+    * most `maxHits` (a serving tier returns a page, not a table) — the
+    * same page as `multiLookup(...).orderBy(keys).limit(maxHits)`. */
   final class IndexRoute(
       spark: org.apache.spark.sql.SparkSession,
       tableRoot: String,
@@ -65,38 +62,33 @@ object Gateway {
       fs: graft.streaming.StoreFs = graft.streaming.LocalFs,
       cache: graft.streaming.BucketCache = graft.streaming.BucketCache.shared) {
     import graft.streaming.BucketedStore
-    // the table's bucket count, read once it exists (it never changes)
-    @volatile private var tableBuckets = BucketedStore.numBuckets(tableRoot, fs)
 
     def lookup(terms: Seq[String]): Seq[org.apache.spark.sql.Row] = {
       import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
       val want = terms.distinct
-      val postings = if (want.isEmpty) Nil
-        else BucketedStore.existingBuckets(indexRoot, fs).flatMap(id =>
-          cache.postings(spark, BucketedStore.bucketDir(indexRoot, id), keyCols, fs))
-      val hits = postings.flatMap { p =>
-        val sets = want.map(p.byTerm.getOrElse(_, Set.empty[Seq[Any]]))
-        sets.minBy(_.size).filter(k => sets.forall(_.contains(k)))
-      }.filterNot(_.contains(null)) // SQL equality: a null key never joins
-      if (hits.nonEmpty && tableBuckets.isEmpty)
-        tableBuckets = BucketedStore.numBuckets(tableRoot, fs)
-      (hits.nonEmpty, tableBuckets) match {
-        case (true, Some(n)) =>
+      if (want.isEmpty) Nil
+      else cache.committed(tableRoot, fs) { m =>
+        val hits = m.gens(indexRoot).keys.toSeq.flatMap { id =>
+          val byTerm = cache.postings(spark, m, indexRoot, id, keyCols, fs)
+          val sets = want.map(byTerm.getOrElse(_, Set.empty[Seq[Any]]))
+          sets.minBy(_.size).filter(k => sets.forall(_.contains(k)))
+        }.filterNot(_.contains(null)) // SQL equality: a null key never joins
+        if (hits.isEmpty) Nil
+        else {
           // deterministic pagination (r14 verdict #2): hits in primary-key
           // order, by Spark's own ordering of the key types (as orderBy)
+          val schema = m.parts(indexRoot).schema
           val ord = org.apache.spark.sql.catalyst.expressions.InterpretedOrdering
-            .forSchema(postings.find(_.keyTypes.nonEmpty).get.keyTypes)
-          val sorted = hits
-            .map(k => InternalRow.fromSeq(k.map(CatalystTypeConverters.convertToCatalyst)) -> k)
-            .sortWith((a, b) => ord.lt(a._1, b._1)).map(_._2)
+            .forSchema(keyCols.map(schema(_).dataType))
           val tables = scala.collection.mutable.Map.empty[Int, Map[Seq[Any], org.apache.spark.sql.Row]]
-          sorted.iterator.flatMap { k =>
-            val id = BucketedStore.bucketOf(k, n)
-            tables.getOrElseUpdate(id, cache.liveRows(spark,
-              BucketedStore.bucketDir(tableRoot, id), keyCols, fs).getOrElse(Map.empty)).get(k)
-          }.take(maxHits).toSeq
-        case _ => Seq.empty
-      }
+          hits.map(k => InternalRow.fromSeq(k.map(CatalystTypeConverters.convertToCatalyst)) -> k)
+            .sortWith((a, b) => ord.lt(a._1, b._1)).iterator.flatMap { case (_, k) =>
+              val id = BucketedStore.bucketOf(k, m.arity)
+              tables.getOrElseUpdate(id,
+                cache.liveRows(spark, m, tableRoot, id, keyCols, fs)).get(k)
+            }.take(maxHits).toSeq
+        }
+      }.getOrElse(Nil)
     }
   }
 }
@@ -116,15 +108,16 @@ object Gateway {
   *     clock injectable so specs are deterministic)
   *
   * Serving model: `/kv` and `/index` answer from the process-wide
-  * [[graft.streaming.BucketCache]] of committed bucket generations — a
-  * `/kv` hit is one pointer read and a hash lookup, with no Spark job. An
-  * entry is valid exactly while the bucket's pointer names the generation
-  * it holds (every write attempt names its generation uniquely). The
-  * bucketed writer publishes each table bucket it commits into the cache
-  * right after the pointer flip, so a read after a commit is a hit too;
-  * a read that misses the publication loads the new generation once. The
-  * cache is bounded by bytes and evicts whole buckets, least recently
-  * used first.
+  * [[graft.streaming.BucketCache]] of committed bucket generations. A
+  * request resolves its store's manifest pointer once and reads every
+  * bucket from that manifest, so a warm `/kv` or `/index` request is one
+  * pointer read and hash lookups, with no Spark job. An entry is valid
+  * exactly while the live manifest names the generation it holds (every
+  * write attempt names its generation uniquely). The bucketed writer
+  * installs its table buckets' new entries right after its one flip, so
+  * a `/kv` read after a commit is a hit too; a read that misses the
+  * publication loads the new generation once. The cache is bounded by
+  * bytes and evicts whole buckets, least recently used first.
   * Requests run on a fixed pool sized from the core count, so a read
   * loading one bucket does not hold up the others. JDK-only
   * (`com.sun.net.httpserver`), zero new dependencies. */

@@ -4,31 +4,28 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Crash-safe table commit for foreachBatch materializations (shared by
-  * ChangelogStream, GraphStream, BucketedStore and the Changelog
-  * maintenance actions), over the [[StoreFs]] seam. ONE protocol on every
-  * filesystem — the pointer-file (manifest) commit:
+/** Crash-safe commit of an UNBUCKETED table (GraphStream's components,
+  * the Changelog maintenance actions), over the [[StoreFs]] seam — the
+  * same pointer-file commit [[BucketedStore]] makes for a whole store:
   *
-  * data generations live at immutable dirs (`path.gen-B-<uuid>`, or any
-  * caller-staged dir via [[swapDir]]) and the live one is named by a
-  * pointer file `path.ptr`, committed with ONE atomic small-file write
-  * ([[StoreFs.writeString]]). Readers resolve the pointer ([[resolve]],
-  * [[read]]); a crash before the pointer flip leaves the old generation
-  * live (orphan data swept on recover), a crash after the flip leaves the
-  * new one live (superseded generation swept on recover). No data dir is
-  * ever renamed — [[StoreFs]] has no rename — so the same commit is
-  * correct on POSIX and on object stores (S3-style, where rename is
-  * copy+delete and never atomic). This is the metadata-handle commit of
-  * Flink's checkpoints (State Management in Apache Flink, VLDB 2017).
+  * data generations live at immutable dirs (`path.gen-B-<uuid>`) and the
+  * live one is named by a pointer file `path.ptr`, committed with ONE
+  * atomic small-file write ([[StoreFs.writeString]]). Readers resolve the
+  * pointer ([[resolve]], [[read]]); a crash before the pointer flip leaves
+  * the old generation live (orphan data swept on recover), a crash after
+  * the flip leaves the new one live (superseded generation swept on
+  * recover). No data dir is ever renamed — [[StoreFs]] has no rename — so
+  * the same commit is correct on POSIX and on object stores (S3-style,
+  * where rename is copy+delete and never atomic). This is the
+  * metadata-handle commit of Flink's checkpoints (State Management in
+  * Apache Flink, VLDB 2017).
   *
-  * Only this object knows where a table's files live: every reader of a
-  * committed table goes through [[read]] (or [[resolve]]).
+  * Only this object knows where such a table's files live: every reader
+  * of it goes through [[read]] (or [[resolve]]).
   *
   * Every write attempt names its generation uniquely (batch id plus a
-  * random UUID), so a pointer's content names exactly one generation's
-  * bytes for the life of the store: a re-run batch or a restarted stream
-  * that counts batch ids from 0 again never reuses a name. That is what
-  * lets [[BucketCache]] key its entries by the pointer's content alone.
+  * random UUID), so a re-run batch or a restarted stream that counts batch
+  * ids from 0 again never writes over a live generation.
   *
   * Re-running a batch after a crash is idempotent (same batchId,
   * deterministic result). Single writer per table path — same contract as
@@ -44,11 +41,11 @@ object AtomicSwap {
     * PASSIVE (r14 advice): performs ZERO metadata mutations. The old
     * sweep-on-read let a reader concurrent with the single writer delete
     * the writer's fully-written-but-not-yet-committed generation
-    * (`swap` writes `gen-B` BEFORE `commitPointer` flips the pointer; a
-    * concurrent read's sweep saw it as superseded) — the writer then
-    * committed a pointer to a deleted dir, an unrecoverable table.
-    * Sweeping belongs to the WRITER ([[recover]], which [[swap]] runs
-    * first); serving-tier reads only ever resolve. */
+    * (`swap` writes `gen-B` BEFORE it flips the pointer; a concurrent
+    * read's sweep saw it as superseded) — the writer then committed a
+    * pointer to a deleted dir, an unrecoverable table. Sweeping belongs to
+    * the WRITER ([[recover]], which [[swap]] runs first); reads only ever
+    * resolve. */
   def resolve(path: String, fs: StoreFs = LocalFs): Option[String] =
     pointer(path, fs).filter(fs.exists)
 
@@ -60,42 +57,19 @@ object AtomicSwap {
 
   /** The committed content of table `path`; None when never committed. */
   def read(spark: SparkSession, path: String, fs: StoreFs = LocalFs): Option[DataFrame] =
-    readAll(spark, Seq(path), fs)
-
-  /** ONE scan over the committed content of every committed table in
-    * `paths` (never-committed ones contribute nothing) — the bucketed
-    * store's multi-bucket read. None when none is committed. */
-  private[streaming] def readAll(
-      spark: SparkSession, paths: Seq[String], fs: StoreFs): Option[DataFrame] = {
-    val dirs = paths.flatMap(resolve(_, fs))
-    if (dirs.isEmpty) None else Some(spark.read.parquet(dirs: _*))
-  }
+    resolve(path, fs).map(spark.read.parquet(_))
 
   /** Sweep this table's crash leftovers (uncommitted or superseded
     * generations). Returns true if the table is committed. A pointer whose
     * target is gone means unrecoverable — nothing is swept then, the
     * remaining dirs stay for forensics. */
-  def recover(path: String, fs: StoreFs = LocalFs): Boolean =
-    recover(path, fs, None)
-
-  /** [[recover]] with an optional pre-captured parent-dir listing, so a
-    * batch writer recovering MANY tables under one root (BucketedStore)
-    * pays ONE directory listing instead of one per bucket — a fixed-cost
-    * hoist that matters on object stores where LIST is a metered API call
-    * (guide §6). Entries created AFTER the capture belong to this writer
-    * and need no recovery (single-writer contract). */
-  private[streaming] def recover(
-      path: String, fs: StoreFs, parentListing: Option[Seq[String]]): Boolean = {
+  def recover(path: String, fs: StoreFs = LocalFs): Boolean = {
     val ptr = pointer(path, fs)
     val live = ptr.filter(fs.exists)
     if (ptr.isEmpty || live.isDefined) {
       val target = new File(path)
       val dir = Option(target.getParent).getOrElse(".")
-      // own generation dirs other than the live one; caller-staged dirs
-      // committed via swapDir are not ours to enumerate — their superseded
-      // generations are deleted at pointer-flip time and their staging
-      // roots are swept by the caller (BucketedStore)
-      parentListing.getOrElse(fs.listNames(dir))
+      fs.listNames(dir)
         .filter(_.startsWith(s"${target.getName}.gen-"))
         .map(n => s"$dir/$n")
         .filterNot(p => live.contains(p))
@@ -104,19 +78,10 @@ object AtomicSwap {
     live.isDefined
   }
 
-  /** Commit `target` as the live generation of `path`: one atomic pointer
-    * put, then delete the superseded generation. The crash window between
-    * the two steps only ever leaks the OLD (already superseded) data dir,
-    * which the next recover collects — readers are correct in every
-    * window because the pointer is flipped atomically. */
-  private def commitPointer(target: String, path: String, fs: StoreFs): Option[String] = {
-    val old = pointer(path, fs)
-    fs.writeString(ptrFile(path), target)
-    old.filter(_ != target).foreach(fs.deleteRecursively)
-    old
-  }
-
-  /** Write `df` as the new content of `path` with a checked commit. The
+  /** Write `df` as the new content of `path` with a checked commit: the
+    * new generation, then one atomic pointer put, then the delete of the
+    * superseded generation. The crash window between the last two only
+    * ever leaks the OLD data dir, which the next recover collects. The
     * WRITER is the recovery entry (reads are passive): this table's crash
     * leftovers are swept first. The generation's name is unique to this
     * attempt, so a re-run of a batch whose previous attempt already
@@ -125,15 +90,8 @@ object AtomicSwap {
     recover(path, fs)
     val gen = s"$path.gen-$batchId-${java.util.UUID.randomUUID}"
     df.write.parquet(gen)
-    commitPointer(gen, path, fs)
-    ()
+    val old = pointer(path, fs)
+    fs.writeString(ptrFile(path), gen)
+    old.foreach(fs.deleteRecursively)
   }
-
-  /** Commit an ALREADY-WRITTEN directory as the new content of `path` —
-    * the commit half of [[swap]], for callers that stage many tables in
-    * one partitioned write (BucketedStore). `src` becomes the pointed-to
-    * generation IN PLACE (no data moves; the staged dir is the table).
-    * Returns the generation the pointer named before, now deleted. */
-  def swapDir(src: String, path: String, fs: StoreFs = LocalFs): Option[String] =
-    commitPointer(src, path, fs)
 }

@@ -2,39 +2,44 @@ package graft.streaming
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.util.control.NonFatal
+import scala.util.{Failure, Try}
+import scala.util.chaining._
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SizeEstimator
+
+import BucketedStore.Manifest
 
 /** Byte-bounded in-memory cache of committed bucket generations — the
   * serving tier's MemStore (the reference answers a point read from the
   * partition's local store, core/.../storage/KVStoreLocal.scala:303-321),
   * with Spark still the writer.
   *
-  * Safe because a committed generation never changes ([[AtomicSwap]]) and
-  * every write attempt names its generation uniquely: an entry is keyed by
-  * the generation's IDENTITY, the content of the bucket's pointer, so a
-  * read answers from the cache exactly when the pointer still names the
-  * generation the entry holds.
+  * Safe because a committed generation never changes and every write
+  * attempt names its generation uniquely: an entry is keyed by the
+  * generation's IDENTITY, its dir, so a read answers from the cache exactly
+  * when the live [[Manifest]] names the generation the entry holds.
   *
-  * A read makes one filesystem call, the pointer read; on a hit one hash
-  * lookup answers, with no Spark job and no data-file read. On a miss one
-  * `spark.read.parquet(gen).collect()` loads the bucket (one load per
-  * bucket at a time) and replaces the bucket's entry, so the superseded
-  * generation drops out. A generation that vanishes mid-load (the pointer
-  * moved on and the writer deleted it) is re-resolved, up to
-  * [[BucketCache.MaxAttempts]] times: the writer deletes a generation only
-  * after its pointer names a newer one, so a load that still finds the
-  * pointer on its generation afterwards read it whole.
+  * A read resolves the store's pointer once ([[committed]]) and reads every
+  * bucket it needs from that one manifest, so table and index answers come
+  * from the same batch. Parsed manifests are kept by name, so a read whose
+  * buckets are all cached makes one filesystem call, the pointer read, and
+  * runs no Spark job. On a miss one `spark.read.schema(..).parquet(gen)
+  * .collect()` loads the bucket (one load per bucket at a time) and
+  * replaces the bucket's entry. A load whose manifest the pointer moved off
+  * meanwhile (the writer deletes superseded generations after the flip) is
+  * discarded and the read runs again from a fresh resolve, up to
+  * [[BucketCache.MaxAttempts]] times; a load that still finds the pointer
+  * on its manifest afterwards read its generation whole.
   *
-  * The writer keeps table entries fresh ([[publish]]): right after it
-  * flips a bucket's pointer it hands over the final rows of the keys its
-  * batch wrote, and an entry for the superseded generation becomes the
-  * entry for the new one without a load — the reference's write-through
-  * MemStore (KVStoreLocal.put:477-513). The pointer stays the truth: a
-  * reader that misses a publication, or runs in another JVM, loads.
+  * The writer keeps table entries fresh ([[publish]]): before its flip it
+  * builds, from the final rows of the keys its batch wrote, the entry of
+  * each touched bucket's new generation, and right after the flip installs
+  * them and the new manifest under one lock, without a load — the
+  * reference's write-through MemStore (KVStoreLocal.put:477-513). The
+  * pointer stays the truth: a reader that misses a publication, or runs in
+  * another JVM, loads.
   *
   * Entries are sized with Spark's SizeEstimator when stored and evicted
   * whole, least recently used first, so the held total never exceeds
@@ -45,6 +50,8 @@ final class BucketCache(val maxBytes: Long) {
   // access-ordered: iteration starts at the least recently used entry
   private val entries = new java.util.LinkedHashMap[Key, Entry](16, 0.75f, true)
   private var held = 0L
+  // the last manifest seen per pointer: one per store
+  private val manifests = new java.util.HashMap[String, Manifest]
   // striped load locks: one load per bucket at a time, a bounded lock set
   private val loadLocks = Array.fill(64)(new Object)
 
@@ -60,62 +67,99 @@ final class BucketCache(val maxBytes: Long) {
   /** Estimated bytes of the entries held now; never above `maxBytes`. */
   def bytes: Long = synchronized(held)
 
-  /** Live rows of table bucket `bucket` by key tuple (tombstoned keys are
-    * absent: a miss, as the Spark read path's tombstone filter makes
-    * them). None when the bucket has never been committed. */
-  def liveRows(spark: SparkSession, bucket: String, keyCols: Seq[String],
-      fs: StoreFs): Option[Map[Seq[Any], Row]] =
-    committed(spark, Key("table", bucket, keyCols), fs)(live(_, keyCols))
-
-  /** Index bucket `bucket` (`index_key` plus the primary key columns) as
-    * `index_key → key tuples`. None when never committed. */
-  def postings(spark: SparkSession, bucket: String, keyCols: Seq[String],
-      fs: StoreFs): Option[Postings] =
-    committed(spark, Key("index", bucket, keyCols), fs) { rows =>
-      rows.headOption.fold(Postings(Nil, Map.empty)) { r =>
-        val keyIdx = keyCols.map(r.fieldIndex)
-        val term = r.fieldIndex("index_key")
-        Postings(keyIdx.map(r.schema(_).dataType),
-          rows.iterator.filterNot(_.isNullAt(term))
-            .map(row => String.valueOf(row.get(term)) -> keyIdx.map(row.get))
-            .toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap)
+  /** `read` over the live manifest of the store whose table is at `root`,
+    * resolved with one pointer read; run again from a fresh resolve when a
+    * generation it loads was superseded meanwhile. None when the store was
+    * never committed. */
+  def committed[T](root: String, fs: StoreFs)(read: Manifest => T): Option[T] = {
+    val ptr = BucketedStore.pointer(root)
+    def live = fs.readString(ptr).map(_.trim)
+    @scala.annotation.tailrec
+    def attempt(n: Int): Option[T] = {
+      val name = live
+      Try(name.map(p => read(synchronized(Option(manifests.get(ptr))).filter(_.path == p)
+        .getOrElse(BucketedStore.loadManifest(p, fs).tap(m => synchronized(manifests.put(ptr, m))))))
+      ) match {
+        case Failure(_) if n < MaxAttempts && live != name => attempt(n + 1)
+        case r => r.get
       }
     }
+    attempt(1)
+  }
 
-  /** Whether an entry of table bucket `bucket` is held, for any
+  /** Live rows of bucket `id` of table `root` in manifest `m`, by key tuple
+    * (tombstoned keys are absent: a miss, as the Spark read path's
+    * tombstone filter makes them). */
+  def liveRows(spark: SparkSession, m: Manifest, root: String, id: Int,
+      keyCols: Seq[String], fs: StoreFs): Map[Seq[Any], Row] =
+    bucket(spark, m, Key("table", root, id, keyCols), fs)(live(_, keyCols))
+      .getOrElse(Map.empty)
+
+  /** Bucket `id` of index `root` (`index_key` plus the primary key columns)
+    * in manifest `m`, as `index_key → key tuples`. */
+  def postings(spark: SparkSession, m: Manifest, root: String, id: Int,
+      keyCols: Seq[String], fs: StoreFs): Map[String, Set[Seq[Any]]] =
+    bucket(spark, m, Key("index", root, id, keyCols), fs) { rows =>
+      rows.headOption.fold(Map.empty[String, Set[Seq[Any]]]) { r =>
+        val keyIdx = keyCols.map(r.fieldIndex)
+        val term = r.fieldIndex("index_key")
+        rows.iterator.filterNot(_.isNullAt(term))
+          .map(row => String.valueOf(row.get(term)) -> keyIdx.map(row.get))
+          .toSeq.groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap
+      }
+    }.getOrElse(Map.empty)
+
+  /** Whether an entry of bucket `id` of table `root` is held, for any
     * generation: whether a publication could rebuild one. */
-  def holds(bucket: String, keyCols: Seq[String]): Boolean =
-    synchronized(entries.containsKey(Key("table", bucket, keyCols)))
+  def holds(root: String, id: Int, keyCols: Seq[String]): Boolean =
+    synchronized(entries.containsKey(Key("table", root, id, keyCols)))
 
-  /** The writer's hand-off after it flipped table bucket `bucket` from
-    * generation `from` to `to`. `rows` are the final rows, tombstoned ones
-    * included, of every key the batch wrote to the bucket; None when the
-    * writer could not collect them. A compare-and-set on identity:
+  /** The writer's hand-off for its commit of `next` over `prev` into table
+    * `root`, built BEFORE the flip; the returned install runs right AFTER
+    * it. `rows` are the final rows, tombstoned ones included, of every key
+    * the batch wrote, by bucket; None when the writer could not collect
+    * them. Per bucket whose generation changed, a compare-and-set on
+    * identity:
     *
-    *   - an entry for `from` becomes the entry for `to`: the batch's keys
-    *     are dropped from it and `rows` decoded into it as a load decodes;
-    *   - an entry already for `to` (a reader loaded it first) stays;
+    *   - an entry for the old generation becomes the entry for the new
+    *     one: the batch's keys are dropped from it and `rows` decoded into
+    *     it as a load decodes;
+    *   - an entry already for the new one (a reader loaded it first) stays;
     *   - any other entry is dropped, and no entry is ever created.
     *
     * The rows are final, so no merge rule is repeated here. A publication
     * that cannot keep the entry within `maxBytes`, or whose rows' schema
-    * differs from the entry's, drops it instead. */
-  def publish(bucket: String, from: Option[String], to: String,
-      keyCols: Seq[String], rows: Option[Seq[Row]]): Unit = {
-    val key = Key("table", bucket, keyCols)
-    synchronized(Option(entries.get(key))).filterNot(_.id == to).foreach { e =>
-      val next = rows.filter(_ => from.contains(e.id)).flatMap { rs =>
-        val base = e.value.asInstanceOf[Map[Seq[Any], Row]]
-        Option.when(rs.headOption.forall(r => base.valuesIterator.nextOption()
-            .forall(b => shape(b.schema) == shape(r.schema)))) {
-          val keyIdx = rs.headOption.map(r => keyCols.map(r.fieldIndex)).getOrElse(Nil)
-          val value = base -- rs.map(r => keyIdx.map(r.get)) ++ live(rs, keyCols)
-          new Entry(to, value, SizeEstimator.estimate(value))
-        }
+    * differs from the entry's, drops it instead. The install also hands
+    * the cache `next`, all under one lock. */
+  def publish(prev: Option[Manifest], next: Manifest, root: String,
+      keyCols: Seq[String], rows: Option[Map[Int, Seq[Row]]]): () => Unit = {
+    val before = prev.fold(Map.empty[Int, String])(_.gens(root))
+    val after = next.gens(root)
+    val moves = (before.keySet ++ after.keySet).filter(id => before.get(id) != after.get(id))
+      .flatMap { id =>
+        val key = Key("table", root, id, keyCols)
+        synchronized(Option(entries.get(key))).filterNot(e => after.get(id).contains(e.id))
+          .map { e =>
+            val rebuilt = for {
+              to <- after.get(id)
+              byId <- rows if before.get(id).contains(e.id)
+              rs = byId.getOrElse(id, Nil)
+              base = e.value.asInstanceOf[Map[Seq[Any], Row]]
+              if rs.headOption.forall(r => base.valuesIterator.nextOption()
+                .forall(b => shape(b.schema) == shape(r.schema)))
+            } yield {
+              val keyIdx = rs.headOption.map(r => keyCols.map(r.fieldIndex)).getOrElse(Nil)
+              val value = base -- rs.map(r => keyIdx.map(r.get)) ++ live(rs, keyCols)
+              new Entry(to, value, SizeEstimator.estimate(value))
+            }
+            (key, e, rebuilt)
+          }
       }
-      synchronized {
+    () => synchronized {
+      manifests.put(BucketedStore.pointer(root), next)
+      moves.foreach { case (key, e, rebuilt) =>
         if (entries.get(key) eq e) { // nothing stored since the look above
-          if (next.exists(put(key, _))) published.incrementAndGet()
+          if (rebuilt.exists(put(key, _))) published.incrementAndGet()
           else {
             Option(entries.remove(key)).foreach(old => held -= old.bytes)
             invalidated.incrementAndGet()
@@ -125,21 +169,13 @@ final class BucketCache(val maxBytes: Long) {
     }
   }
 
-  private def committed[T <: AnyRef](spark: SparkSession, key: Key, fs: StoreFs)(
-      decode: Seq[Row] => T): Option[T] = {
-    var attempt = 0
-    while (attempt < MaxAttempts) {
-      attempt += 1
-      AtomicSwap.pointer(key.bucket, fs) match {
-        case None => return None
-        case Some(gen) =>
-          val value = cached[T](key, gen).orElse(load(spark, key, gen, fs)(decode))
-          if (value.isDefined) return value
-      }
+  /** The decoded content of `key`'s bucket in `m`; None when the bucket
+    * has no rows. */
+  private def bucket[T <: AnyRef](spark: SparkSession, m: Manifest, key: Key,
+      fs: StoreFs)(decode: Seq[Row] => T): Option[T] =
+    m.gens(key.root).get(key.id).map { gen =>
+      cached[T](key, gen).getOrElse(load(spark, m, key, gen, fs)(decode))
     }
-    throw new IllegalStateException(
-      s"bucket ${key.bucket} moved on during $MaxAttempts consecutive reads")
-  }
 
   private def cached[T](key: Key, gen: String): Option[T] = synchronized {
     Option(entries.get(key)).filter(_.id == gen).map { e =>
@@ -148,22 +184,19 @@ final class BucketCache(val maxBytes: Long) {
     }
   }
 
-  /** One load of generation `gen`, or None when the pointer moved off it
-    * during the load (the caller re-resolves). */
-  private def load[T <: AnyRef](spark: SparkSession, key: Key, gen: String,
-      fs: StoreFs)(decode: Seq[Row] => T): Option[T] =
+  /** One load of generation `gen` of manifest `m`; throws when the pointer
+    * moved off `m` during the load (the caller re-resolves). */
+  private def load[T <: AnyRef](spark: SparkSession, m: Manifest, key: Key, gen: String,
+      fs: StoreFs)(decode: Seq[Row] => T): T =
     loadLocks(java.lang.Math.floorMod(key.hashCode, loadLocks.length)).synchronized {
-      cached[T](key, gen).orElse {
-        def stillLive = AtomicSwap.pointer(key.bucket, fs).contains(gen)
-        val rows =
-          try Some(spark.read.parquet(gen).collect())
-          catch { case NonFatal(_) if !stillLive => None }
-        rows.filter(_ => stillLive).map { r =>
-          loads.incrementAndGet()
-          val value = decode(r.toSeq)
-          put(key, new Entry(gen, value, SizeEstimator.estimate(value)))
-          value
-        }
+      cached[T](key, gen).getOrElse {
+        val rows = spark.read.schema(m.parts(key.root).schema).parquet(gen).collect()
+        if (!fs.readString(m.pointer).map(_.trim).contains(m.path))
+          throw new IllegalStateException(s"$gen was superseded during its load")
+        loads.incrementAndGet()
+        val value = decode(rows.toSeq)
+        put(key, new Entry(gen, value, SizeEstimator.estimate(value)))
+        value
       }
     }
 
@@ -192,13 +225,9 @@ object BucketCache {
     * buckets of the served stores, leaving the rest to Spark. */
   val HeapShare = 0.125
 
-  /** Reads of one bucket that may find its generation superseded before
-    * giving up (each retry follows a commit that landed mid-load). */
+  /** Reads of one store that may find its manifest superseded before
+    * giving up (each retry follows a commit that landed mid-read). */
   val MaxAttempts = 3
-
-  /** An index bucket: the primary key columns' types (for ordering hits as
-    * Spark orders them) and `index_key → key tuples`. */
-  final case class Postings(keyTypes: Seq[DataType], byTerm: Map[String, Set[Seq[Any]]])
 
   /** A table bucket's rows by key tuple, tombstoned rows (and rows whose
     * tombstone is null, which the `!tombstone` filter drops too) left
@@ -217,7 +246,7 @@ object BucketCache {
   private def shape(s: StructType): Seq[(String, String)] =
     s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
 
-  private final case class Key(kind: String, bucket: String, keyCols: Seq[String])
+  private final case class Key(kind: String, root: String, id: Int, keyCols: Seq[String])
   private final class Entry(val id: String, val value: AnyRef, val bytes: Long)
 
   /** The one cache every serving route, and the bucketed writer, share by

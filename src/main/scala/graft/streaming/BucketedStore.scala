@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Key-hash-bucketed directory layout for incrementally-maintained tables.
   *
@@ -11,60 +11,103 @@ import org.apache.spark.sql.types.DataType
   * (reference: api/.../Murmur2Partitioner.java, core/.../KVStoreLocal.scala
   * :477-513) — maintenance cost is O(batch + touched partitions), never
   * O(store). This is the same layout for foreachBatch-materialized
-  * tables: `root/b<i>` holds the rows whose key hashes to bucket i
-  * (Spark murmur3 `hash()`, deterministic across sessions), each bucket an
-  * independently [[AtomicSwap]]-committed parquet table. A micro-batch
-  * rewrites ONLY the buckets its keys touch; at 100 TB with N sized so a
-  * bucket ≈ a healthy task, per-batch IO is batch + (touched/N)·table
-  * instead of the whole table — the difference between a live index that
-  * scales and one that re-derives the corpus per batch (r12 verdict #1).
+  * tables: bucket i holds the rows whose key hashes to i (Spark murmur3
+  * `hash()`, deterministic across sessions), and a micro-batch rewrites
+  * ONLY the buckets its keys touch; at 100 TB with N sized so a bucket ≈ a
+  * healthy task, per-batch IO is batch + (touched/N)·table instead of the
+  * whole table (r12 verdict #1).
   *
-  * Filesystem portability (r13 verdict #1): all metadata IO goes through
-  * the [[StoreFs]] seam. Each bucket is committed by an atomic
-  * pointer-file flip (`root/b<i>.ptr`) and the staged partition dirs ARE
-  * the bucket generations — no data ever moves, on POSIX or on an object
-  * store. Single WRITER per store root (the streaming checkpoint already
-  * serializes batches); readers are safe in every crash window.
+  * One commit per batch: a store's committed state is one immutable
+  * [[Manifest]] naming the generation dir of every non-empty bucket of the
+  * table AND of its index, plus the arity and each part's schema. A batch
+  * stages its touched buckets (the partition subdirs of one partitioned
+  * write ARE the generations; no data ever moves), writes a new manifest
+  * under a name unique to the attempt, and flips ONE pointer,
+  * `<table root>/_manifest.ptr`, with an atomic small-file put
+  * ([[StoreFs.writeString]]). A reader that resolves the pointer once sees
+  * table and index of the same batch — the completed-checkpoint handle of
+  * Flink (State Management in Apache Flink, VLDB 2017), and Kafka's
+  * all-partitions-at-once transaction commit (SIGMOD 2021). An index root
+  * records once, at its first write, which pointer governs it
+  * (`_manifest.ref`), so it reads on its own too.
   *
-  * Crash safety: per-bucket commits inherit the AtomicSwap protocol; a
-  * crash between bucket commits re-runs the same micro-batch (checkpoint
-  * offset uncommitted), and re-compacting an already-updated bucket with
+  * Crash safety: before the flip the previous manifest stays live
+  * (unnamed stagings and manifests are swept by the next commit); after it
+  * the new one is. Single WRITER per store (the streaming checkpoint
+  * serializes batches); a crashed batch re-runs, and re-compacting with
   * the same batch is idempotent (latest-per-key is an associative,
-  * idempotent max).
+  * idempotent max). All metadata IO goes through the [[StoreFs]] seam,
+  * which has no rename, so the commit is the same on POSIX and on object
+  * stores (r13 verdict #1).
   */
 object BucketedStore {
 
+  /** One committed state of a store: the arity, and per store root (the
+    * table's, and its index's) the schema and bucket id → generation dir.
+    * A bucket with no rows has no generation and no files. */
+  final case class Manifest(path: String, arity: Int, parts: Map[String, Part]) {
+    def gens(root: String): Map[Int, String] = parts.get(root).fold(Map.empty[Int, String])(_.gens)
+
+    /** The pointer that names this manifest while it is live. */
+    def pointer: String = BucketedStore.pointer(path.substring(0, path.lastIndexOf('/')))
+
+    /** Every generation dir this manifest names, across its parts. */
+    def dirs: Set[String] = parts.valuesIterator.flatMap(_.gens.values).toSet
+
+    /** One scan of buckets `ids` of `root` with the recorded schema (no
+      * inference job); an empty frame of that schema when none has rows. */
+    def scan(spark: SparkSession, root: String, ids: Seq[Int]): DataFrame = {
+      val schema = parts(root).schema
+      val ds = ids.flatMap(gens(root).get)
+      if (ds.isEmpty) spark.createDataFrame(java.util.List.of[Row](), schema)
+      else spark.read.schema(schema).parquet(ds: _*)
+    }
+
+    private[streaming] def render: String =
+      (s"arity\t$arity" +: parts.toSeq.flatMap { case (root, p) =>
+        s"schema\t$root\t${p.schema.json}" +:
+          p.gens.toSeq.sorted.map { case (id, dir) => s"gen\t$root\t$id\t$dir" }
+      }).mkString("\n")
+  }
+
+  final case class Part(schema: StructType, gens: Map[Int, String])
+
+  /** The manifest file at `path`, which a pointer named. */
+  private[streaming] def loadManifest(path: String, fs: StoreFs): Manifest = {
+    val lines = fs.readString(path).getOrElse(
+      throw new IllegalStateException(s"the manifest $path is gone")).linesIterator
+      .map(_.split("\t", -1).toSeq).toSeq
+    val gens = lines.collect { case Seq("gen", root, id, dir) => (root, id.toInt, dir) }
+      .groupMap(_._1)(g => g._2 -> g._3)
+    Manifest(path, lines.collectFirst { case Seq("arity", n) => n.toInt }.get,
+      lines.collect { case Seq("schema", root, json) =>
+        root -> Part(DataType.fromJson(json).asInstanceOf[StructType],
+          gens.getOrElse(root, Nil).toMap)
+      }.toMap)
+  }
+
   /** Deterministic bucket id of a key tuple: pmod(murmur3, numBuckets) —
     * stable across JVMs/sessions, so every future batch routes a key to
-    * the same bucket dir. */
+    * the same bucket. */
   def bucketCol(keyCols: Seq[String], numBuckets: Int): Column =
     pmod(hash(keyCols.map(col): _*), lit(numBuckets))
 
-  def bucketDir(root: String, id: Int): String = s"$root/b$id"
+  /** The pointer that commits the store whose table lives at `root`. */
+  def pointer(root: String): String = s"$root/_manifest.ptr"
 
-  private val BucketPtr = "^b(\\d+)\\.ptr$".r
+  /** The live manifest of `root` (a table root, or an index root through
+    * the pointer it recorded). None when `root` was never committed. */
+  def manifest(root: String, fs: StoreFs = LocalFs): Option[Manifest] =
+    fs.readString(pointer(root)).orElse(fs.readString(s"$root/_manifest.ref").flatMap(fs.readString))
+      .map(p => loadManifest(p.trim, fs)).filter(_.parts.contains(root))
 
-  /** Bucket ids with a committed pointer under `root`. */
+  /** Bucket ids of `root` that hold rows. */
   def existingBuckets(root: String, fs: StoreFs = LocalFs): Seq[Int] =
-    fs.listNames(root).collect { case BucketPtr(i) => i.toInt }.sorted
+    manifest(root, fs).toSeq.flatMap(_.gens(root).keys).sorted
 
-  /** One scan over the given buckets' committed generations. None when no
-    * bucket is committed — the table has never been written. */
-  def readBuckets(
-      spark: SparkSession,
-      root: String,
-      ids: Seq[Int],
-      fs: StoreFs = LocalFs): Option[DataFrame] =
-    AtomicSwap.readAll(spark, ids.map(bucketDir(root, _)), fs)
-
-  /** Full-table read: every committed bucket. */
+  /** Full-table read: every bucket. */
   def read(spark: SparkSession, root: String, fs: StoreFs = LocalFs): Option[DataFrame] =
-    readBuckets(spark, root, existingBuckets(root, fs), fs)
-
-  /** The layout's bucket count, persisted at first write (`root/.buckets`)
-    * so readers can ROUTE a key to its one bucket without scanning. */
-  def numBuckets(root: String, fs: StoreFs = LocalFs): Option[Int] =
-    fs.readString(s"$root/.buckets").flatMap(_.trim.toIntOption)
+    manifest(root, fs).map(m => m.scan(spark, root, m.gens(root).keys.toSeq))
 
   /** Bucket of a key tuple: the driver-side twin of [[bucketCol]] (the
     * same Catalyst Murmur3Hash the write path plans, seed 42), so a key
@@ -95,11 +138,11 @@ object BucketedStore {
   /** P1 point read with the reference's routing cost model
     * (Murmur2Partitioner: key → ONE partition, api/.../Coordinator): the
     * key tuple is routed DRIVER-SIDE by [[bucketOf]] and the scan reads
-    * exactly that one bucket dir — 1/N of the table by construction, at
-    * any table size. A mistyped probe throws ([[checkProbeTypes]]) — checked
-    * against the routed bucket, or ANY bucket when the routed one was never
-    * written (a mistyped probe routing to a hole must still throw, not
-    * miss). None when the table has never been written. */
+    * exactly that one bucket's generation — 1/N of the table by
+    * construction, at any table size; an empty bucket gives an empty frame
+    * of the stored schema. A probe whose types differ from the recorded
+    * schema throws ([[checkProbeTypes]]). None when the table has never
+    * been written. */
   def pointLookup(
       spark: SparkSession,
       root: String,
@@ -108,55 +151,27 @@ object BucketedStore {
       fs: StoreFs = LocalFs): Option[DataFrame] = {
     require(keyCols.nonEmpty && keyCols.size == values.size,
       "keyCols and values must align")
-    numBuckets(root, fs).flatMap { n =>
-      def checkTypes(df: DataFrame): Unit =
-        checkProbeTypes(keyCols, keyCols.map(df.schema(_).dataType), values)
-      readBuckets(spark, root, Seq(bucketOf(values, n)), fs) match {
-        case Some(df) =>
-          checkTypes(df)
-          Some(keyCols.zip(values).foldLeft(df) { case (d, (c, v)) =>
-            d.filter(col(c) === lit(v)) })
-        case None =>
-          read(spark, root, fs).foreach(checkTypes)
-          None
-      }
+    manifest(root, fs).map { m =>
+      checkProbeTypes(keyCols, keyCols.map(m.parts(root).schema(_).dataType), values)
+      keyCols.zip(values).foldLeft(m.scan(spark, root, Seq(bucketOf(values, m.arity)))) {
+        case (d, (c, v)) => d.filter(col(c) === lit(v)) }
     }
   }
 
-  /** Bucket-pointer targets under `root`, from a pre-captured root
-    * listing. */
-  private def pointerTargets(rootListing: Seq[String], root: String,
-      fs: StoreFs): Set[String] =
-    rootListing.collect { case n @ BucketPtr(_) =>
-      fs.readString(s"$root/$n").map(_.trim)
-    }.flatten.toSet
-
-  /** Sweep stale staging dirs of earlier attempts. A staging subdir may be
-    * a LIVE bucket generation, so only stagings no bucket pointer
-    * references into are swept (a superseded subdir is deleted at its
-    * bucket's pointer flip, so a staging root goes once all its buckets
-    * moved on). `rootListing` is the batch's one root listing, taken
-    * before this attempt's staging exists. */
-  private def sweepStagings(root: String, fs: StoreFs, rootListing: Seq[String]): Unit = {
-    val stale = rootListing.filter(_.startsWith(".staging-")).map(n => s"$root/$n")
-    if (stale.nonEmpty) {
-      val referenced = pointerTargets(rootListing, root, fs)
-      stale.filterNot(s => referenced.exists(_.startsWith(s + "/")))
-        .foreach(fs.deleteRecursively)
-    }
-  }
-
-  /** Replace exactly the `touched` bucket dirs of `root` with `df`'s rows
-    * (bucketed by `bexpr`). One partitioned write stages every touched
-    * bucket in a single job, to `.staging-<batchId>-<uuid>`: a name unique
-    * to this attempt, so a re-run never writes over a generation an
-    * earlier attempt already committed. Each staged subdir is then
-    * committed in place by an AtomicSwap pointer flip, and `onCommit`
-    * hears `(bucket id, generation before, generation now)` right after
-    * each flip. A touched bucket with NO staged rows (every key
-    * tombstone-filtered out — the index-delta case) is committed as an
-    * empty table so stale rows vanish. `df` must not contain a `__b`
-    * column. */
+  /** Replace exactly the `touched` buckets of `root` with `df`'s rows
+    * (bucketed by `bexpr`) and, with `index`, those of the index root it
+    * names with its rows, in ONE commit. Each part is staged by one
+    * partitioned write to `.staging-<batchId>-<uuid>`, a name unique to
+    * this attempt, whose `__b=<id>` subdirs are the new generations (a
+    * touched bucket with no rows gets none); then the new manifest is
+    * written under a unique name and `_manifest.ptr` names it. `publish`
+    * sees the previous and the new manifest before the flip, and what it
+    * returns runs right after the flip, before anything is deleted; then
+    * the generations only the previous manifest named, and every staging
+    * and manifest the new one does not name (crash leftovers included),
+    * go. Refuses an arity other than the store's: rows would strand in
+    * old-arity buckets and routing would break. `df` must not contain a
+    * `__b` column. */
   def writeBuckets(
       df: DataFrame,
       bexpr: Column,
@@ -165,33 +180,33 @@ object BucketedStore {
       batchId: Long,
       arity: Int,
       fs: StoreFs = LocalFs,
-      onCommit: (Int, Option[String], String) => Unit = (_, _, _) => ()): Unit = {
-    fs.mkdirs(root)
-    // persist the routing arity once; reopening an existing store with a
-    // DIFFERENT bucket count would strand rows in old-arity buckets and
-    // break pointLookup routing — fail loudly on the mismatch
-    numBuckets(root, fs) match {
-      case Some(existing) => require(existing == arity,
-        s"bucket-count mismatch for $root: store has $existing, caller passed " +
-          s"$arity — reopening with a different arity would corrupt routing")
-      case None => fs.writeString(s"$root/.buckets", arity.toString)
+      index: Option[(DataFrame, String)] = None,
+      publish: (Option[Manifest], Manifest) => () => Unit = (_, _) => () => ()): Manifest = {
+    val prev = manifest(root, fs)
+    prev.foreach(m => require(m.arity == arity,
+      s"bucket-count mismatch for $root: store has ${m.arity}, caller passed " +
+        s"$arity — reopening with a different arity would corrupt routing"))
+    val parts = prev.fold(Map.empty[String, Part])(_.parts)
+    val staged = ((df, root) +: index.toSeq).map { case (d, r) =>
+      val staging = s"$r/.staging-$batchId-${java.util.UUID.randomUUID}"
+      d.withColumn("__b", bexpr).write.partitionBy("__b").parquet(staging)
+      val written = fs.listNames(staging).toSet
+      r -> Part(d.schema, parts.get(r).fold(Map.empty[Int, String])(_.gens) -- touched ++
+        touched.collect { case id if written(s"__b=$id") => id -> s"$staging/__b=$id" })
     }
-    // ONE root listing serves the whole batch's staging sweep and
-    // per-bucket recovery — per-call listings would be 2 + |touched| LIST
-    // operations per batch, a metered-API fixed cost on object stores
-    // (guide §6; r15 verdict #1).
-    val rootListing = fs.listNames(root)
-    sweepStagings(root, fs, rootListing)
-    // the WRITER is the recovery entry (reads are passive since r15): sweep
-    // each touched bucket's crash leftovers before swapping
-    touched.foreach(id =>
-      AtomicSwap.recover(bucketDir(root, id), fs, Some(rootListing)))
-    val staging = s"$root/.staging-$batchId-${java.util.UUID.randomUUID}"
-    df.withColumn("__b", bexpr).write.partitionBy("__b").parquet(staging)
-    touched.foreach { id =>
-      val sub = s"$staging/__b=$id"
-      if (!fs.isDir(sub)) df.limit(0).write.parquet(sub)
-      onCommit(id, AtomicSwap.swapDir(sub, bucketDir(root, id), fs), sub)
-    }
+    val next = Manifest(s"$root/_manifest-$batchId-${java.util.UUID.randomUUID}", arity,
+      parts ++ staged)
+    index.map(_._2).filterNot(parts.contains)
+      .foreach(r => fs.writeString(s"$r/_manifest.ref", pointer(root)))
+    val install = publish(prev, next)
+    fs.writeString(next.path, next.render)
+    fs.writeString(pointer(root), next.path)
+    install()
+    prev.foreach(m => (m.dirs -- next.dirs).foreach(fs.deleteRecursively))
+    for ((r, part) <- staged) fs.listNames(r).map(n => s"$r/$n").filter { p =>
+      (p.startsWith(s"$r/.staging-") && !part.gens.values.exists(_.startsWith(p + "/"))) ||
+        (p.startsWith(s"$r/_manifest-") && p != next.path)
+    }.foreach(fs.deleteRecursively)
+    next
   }
 }

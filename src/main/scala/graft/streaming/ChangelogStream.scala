@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.StructType
 
 /** Streaming changelog ingestion & materialization.
   *
@@ -100,14 +101,16 @@ object ChangelogStream {
     *   1. routes its keys to bucket ids (one narrow collect of the batch's
     *      key columns and bucket ids),
     *   2. reads back ONLY those buckets, compacts batch ∪ touched buckets,
-    *   3. swaps exactly the touched table buckets, publishing each into
-    *      `cache` right after its pointer flip (the final rows of the
-    *      batch's keys, collected before the flips: [[BucketCache.publish]]),
-    *      so a read after the commit runs no Spark load, and
-    *   4. re-derives index postings for exactly the touched buckets
-    *      (delete+insert per bucket — an untouched bucket's postings are
-    *      untouched by construction, since postings are a row-local
-    *      function of that bucket's latest rows).
+    *   3. stages exactly the touched table buckets, and re-derives index
+    *      postings for exactly those buckets (an untouched bucket's
+    *      postings are untouched by construction, since postings are a
+    *      row-local function of that bucket's latest rows),
+    *   4. commits table and index with ONE manifest flip
+    *      ([[BucketedStore.writeBuckets]]), so a reader never sees one a
+    *      batch ahead of the other, and installs the touched table buckets
+    *      into `cache` right after it (the final rows of the batch's keys,
+    *      collected before: [[BucketCache.publish]]), so a read after the
+    *      commit runs no Spark load.
     *
     * Per-batch work is O(batch + touched-bucket rows), never O(table) —
     * the reference's incremental CDC index maintenance
@@ -177,8 +180,8 @@ object ChangelogStream {
 
   /** The one step that turns a changelog batch into a bucketed table
     * (and, with `index`, its inverted index): compacts the batch with the
-    * touched buckets of `tablePath` and commits exactly those buckets —
-    * see [[maintainIndexedBucketed]]. */
+    * touched buckets of `tablePath` and commits exactly those buckets of
+    * table and index in one manifest — see [[maintainIndexedBucketed]]. */
   private[streaming] def commitBatch(
       batch: DataFrame,
       batchId: Long,
@@ -199,48 +202,44 @@ object ChangelogStream {
       keyed.iterator.map(r => r.toSeq.init -> r.getInt(keyCols.size)).toMap
     val touched = bucketOfKey.values.toSeq.distinct.sorted // ≤ numBuckets ids
     if (touched.nonEmpty) {
-      val existing = BucketedStore.readBuckets(spark, tablePath, touched, fs)
-      checkKeyTypes(batch, keyCols, existing.orElse(
-        BucketedStore.existingBuckets(tablePath, fs).headOption
-          .flatMap(id => BucketedStore.readBuckets(spark, tablePath, Seq(id), fs))))
+      val prev = BucketedStore.manifest(tablePath, fs)
+      checkKeyTypes(batch, keyCols, prev.flatMap(_.parts.get(tablePath)).map(_.schema))
+      val existing = prev.filter(m => touched.exists(m.gens(tablePath).contains))
+        .map(_.scan(spark, tablePath, touched))
       val rowsRead = for (_ <- stats; _ <- existing) yield Observation()
       val all = existing.fold(batch) { e =>
         rowsRead.fold(e)(o => e.observe(o, count(lit(1)).as("rows")))
           .unionByName(batch, allowMissingColumns = true)
       }
-      // checkpointed: read again by the table write and the index derive,
-      // and it cuts lineage, so the index never reads through the swapped
-      // table path
+      // checkpointed: read again by the table and index stagings, and it
+      // cuts lineage, so the index never reads through the table's files
       val latest = graft.core.Changelog
         .compact(all, keyCols, tsCol, tieBreakCols).localCheckpoint(true)
       val published = publishable(latest, keyCols, bucketOfKey, tablePath, cache)
-      BucketedStore.writeBuckets(latest, bexpr, tablePath, touched,
-        batchId, numBuckets, fs, onCommit = (id, from, to) =>
-          cache.publish(BucketedStore.bucketDir(tablePath, id), from, to,
-            keyCols, published.map(_.getOrElse(id, Nil))))
-      index.foreach { case (indexFn, indexPath) =>
-        val idx = graft.state.SecondaryIndex.build(
-          latest.filter(!col("tombstone")), keyCols, indexFn)
-        BucketedStore.writeBuckets(idx, bexpr, indexPath, touched,
-          batchId, numBuckets, fs)
-      }
+      // table and index are staged in full, then committed by ONE flip, so
+      // no reader ever sees one of them a batch ahead of the other
+      val next = BucketedStore.writeBuckets(latest, bexpr, tablePath, touched, batchId,
+        numBuckets, fs, index.map { case (indexFn, indexPath) =>
+          (graft.state.SecondaryIndex.build(latest.filter(!col("tombstone")), keyCols, indexFn),
+            indexPath)
+        }, (from, to) => cache.publish(from, to, tablePath, keyCols, published))
       stats.foreach(_ += BucketBatchStats(batchId, keyed.length,
         rowsRead.fold(0L)(_.get("rows").asInstanceOf[Long]), touched.size, numBuckets,
-        BucketedStore.read(spark, tablePath, fs).map(_.count()).getOrElse(0L)))
+        next.scan(spark, tablePath, next.gens(tablePath).keys.toSeq).count()))
     }
   }
 
-  /** Refuse a batch whose key types differ from the stored table's (as
-    * `stored`, one committed read of it; None when the table is new). The
+  /** Refuse a batch whose key types differ from the stored table's
+    * (`stored`, its recorded schema; None when the table is new). The
     * batch routes its keys by its own types' murmur3 hash while the
     * compaction with the stored rows widens the keys and stages them by
     * the widened hash, so a row would be staged into a bucket the batch
     * does not commit and its update silently lost — the rule
     * [[BucketedStore.checkProbeTypes]] applies to reads. */
   private def checkKeyTypes(batch: DataFrame, keyCols: Seq[String],
-      stored: Option[DataFrame]): Unit =
+      stored: Option[StructType]): Unit =
     for (s <- stored; c <- keyCols) {
-      val (b, t) = (batch.schema(c).dataType, s.schema(c).dataType)
+      val (b, t) = (batch.schema(c).dataType, s(c).dataType)
       if (b != t) throw new IllegalArgumentException(
         s"changelog key type mismatch on '$c': batch $b vs stored $t " +
           "— the murmur3 route would be wrong")
@@ -257,7 +256,7 @@ object ChangelogStream {
       cache: BucketCache): Option[Map[Int, Seq[Row]]] =
     Option.when(
       bucketOfKey.valuesIterator.exists(id =>
-        cache.holds(BucketedStore.bucketDir(tablePath, id), keyCols)) &&
+        cache.holds(tablePath, id, keyCols)) &&
         org.apache.spark.util.SizeEstimator.estimate(bucketOfKey) <= cache.maxBytes) {
       val keyIdx = keyCols.map(latest.schema.fieldIndex)
       latest.filter((r: Row) => bucketOfKey.contains(keyIdx.map(r.get)))

@@ -249,8 +249,7 @@ object StatefulOps {
     * plain dropDuplicates the state is ONE long per key and a key's entry
     * is re-emittable after the TTL — state size is bounded by live keys,
     * not history, which is what makes the operator deployable on an
-    * unbounded stream (the same capped-state discipline as
-    * [[StreamingDedup]]).
+    * unbounded stream.
     *
     * Input (key, tsUs, tieBreak); rows are sorted by (tsUs, tieBreak)
     * WITHIN each micro-batch only, so oracle equality needs the whole log

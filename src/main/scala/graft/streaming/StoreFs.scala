@@ -12,12 +12,12 @@ import java.io.File
   * Bulk DATA writes (parquet) stay on Spark's own Hadoop IO — on a real
   * object store those go through Spark's cloud committers, which is a
   * solved problem outside this seam. What the seam ports is OUR protocol,
-  * [[AtomicSwap]]'s pointer-file commit. The seam has no rename: the
-  * protocol never moves a data dir, so it needs nothing an object store
-  * (S3-style, where rename is copy+delete and never atomic) lacks. A real
-  * S3/GCS binding implements this trait with client calls (list/exists/
-  * delete + one atomic small-object PUT for [[writeString]]); everything
-  * above the seam is identical.
+  * the pointer-file commits of [[BucketedStore]] and [[AtomicSwap]]. The
+  * seam has no rename: the protocol never moves a data dir, so it needs
+  * nothing an object store (S3-style, where rename is copy+delete and
+  * never atomic) lacks. A real S3/GCS binding implements this trait with
+  * client calls (list/exists/delete + one atomic small-object PUT for
+  * [[writeString]]); everything above the seam is identical.
   *
   * Contract note: [[writeString]] must be an atomic single-object put — it
   * is the protocol's commit primitive (an object-store PUT is atomic at
@@ -31,11 +31,7 @@ trait StoreFs {
 
   def exists(path: String): Boolean
 
-  def isDir(path: String): Boolean
-
   def deleteRecursively(path: String): Unit
-
-  def mkdirs(path: String): Unit
 
   /** Small text file (pointer/metadata) read; None when absent. */
   def readString(path: String): Option[String]
@@ -53,18 +49,11 @@ object LocalFs extends StoreFs {
 
   override def exists(path: String): Boolean = new File(path).exists()
 
-  override def isDir(path: String): Boolean = new File(path).isDirectory
-
   override def deleteRecursively(path: String): Unit = del(new File(path))
 
   private def del(f: File): Unit = {
     if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(del)
     f.delete()
-    ()
-  }
-
-  override def mkdirs(path: String): Unit = {
-    new File(path).mkdirs()
     ()
   }
 

@@ -18,8 +18,7 @@ import org.apache.spark.sql.streaming.GroupStateTimeout
   *
   * KMV is the exception (a k-smallest SET is not a per-row aggregate), so
   * it gets a `mapGroupsWithState` op with the k-set as per-group state —
-  * bounded at 8·k bytes per group, the same capped-state discipline as
-  * [[StreamingDedup]].
+  * bounded at 8·k bytes per group.
   */
 object StreamingSketches {
 

@@ -9,7 +9,7 @@ import scala.util.Random
 
 import graft.serving.Gateway
 import graft.state.SecondaryIndex
-import graft.streaming.{AtomicSwap, BucketCache, BucketedStore, ChangelogStream, LocalFs}
+import graft.streaming.{BucketCache, BucketedStore, ChangelogStream, LocalFs}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
@@ -55,8 +55,9 @@ class BucketCacheSpec extends SparkSpec {
   private def store(name: String): String =
     Files.createTempDirectory(name).toFile.getAbsolutePath
 
-  private def ptrOf(root: String, k: Long): String =
-    s"${BucketedStore.bucketDir(root, BucketedStore.bucketOf(Seq(k), N))}.ptr"
+  /** The generation bucket `id` of `root` has in the live manifest. */
+  private def genOf(root: String, id: Int): String =
+    BucketedStore.manifest(root).get.gens(root)(id)
 
   "the cached route" should "serve a commit that lands between its pointer read and its load" in {
     val root = store("graft-bc-a")
@@ -64,7 +65,7 @@ class BucketCacheSpec extends SparkSpec {
     val fs = new HookFs
     val cache = new BucketCache(1L << 26)
     val route = new Gateway.BucketedRoute(spark, root, kv, fs, cache)
-    fs.onRead(_ == ptrOf(root, 1L))(commit(root, 1L, 1L -> "new"))
+    fs.onRead(_ == BucketedStore.pointer(root))(commit(root, 1L, 1L -> "new"))
     value(route.get(Seq(1L))) shouldBe Some("new")
     cache.loads.get shouldBe 1 // the superseded generation was never loaded
   }
@@ -75,7 +76,7 @@ class BucketCacheSpec extends SparkSpec {
     val fs = new HookFs
     val cache = new BucketCache(1L << 26)
     val route = new Gateway.BucketedRoute(spark, root, kv, fs, cache)
-    val ptr = ptrOf(root, 1L)
+    val ptr = BucketedStore.pointer(root)
     // the read after the resolving one is the load's own pointer check:
     // the old generation was read whole, then the commit lands
     fs.onRead(_ == ptr)(fs.onNextRead(_ == ptr)(commit(root, 1L, 1L -> "new")))
@@ -90,14 +91,14 @@ class BucketCacheSpec extends SparkSpec {
     val cache = new BucketCache(1L << 26)
     commit(root, 0L, 1L -> "v0")
     val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
-    val bucket = BucketedStore.bucketDir(root, BucketedStore.bucketOf(Seq(1L), N))
-    val first = AtomicSwap.pointer(bucket).get
+    val bucket = BucketedStore.bucketOf(Seq(1L), N)
+    val first = genOf(root, bucket)
     value(route.get(Seq(1L))) shouldBe Some("v0") // cached under batch 0's generation
     commit(root, 1L, 1L -> "v1")
     // a restarted stream counts batch ids from 0 again: the generation
-    // name still differs, so the pointer never names the cached entry
+    // name still differs, so the manifest never names the cached entry
     commit(root, 0L, 1L -> "v2")
-    AtomicSwap.pointer(bucket) should not be Some(first)
+    genOf(root, bucket) should not be first
     value(route.get(Seq(1L))) shouldBe Some("v2")
     cache.loads.get shouldBe 2
   }
@@ -141,7 +142,7 @@ class BucketCacheSpec extends SparkSpec {
     rows.toDF("k", "v", "ts_us", "tombstone")
 
   /** LocalFs that runs a one-shot hook right after a write of a matching
-    * path (a pointer flip, when the path is a `.ptr`). */
+    * path (the flip, when the path is the manifest pointer). */
   private final class AfterWriteFs(p: String => Boolean)(body: => Unit) extends ForwardingFs {
     @volatile private var armed = true
     override def writeString(path: String, content: String): Unit = {
@@ -160,7 +161,8 @@ class BucketCacheSpec extends SparkSpec {
     s.append(changes((1L, "v1", 200L, false)))
     // the writer's publication follows this pointer write; the read lands
     // between the two and finds the cache still on the old generation
-    s.drain(new AfterWriteFs(_ == ptrOf(s.table, 1L))({ seen = value(route.get(Seq(1L))) }))
+    s.drain(new AfterWriteFs(_ == BucketedStore.pointer(s.table))({
+      seen = value(route.get(Seq(1L))) }))
     seen shouldBe Some("v1")
     cache.loads.get shouldBe loads + 1 // the reader loaded the new generation
     cache.published.get shouldBe 0 // which the late publication left alone
@@ -169,23 +171,30 @@ class BucketCacheSpec extends SparkSpec {
     cache.loads.get shouldBe loads + 1
   }
 
-  /** Rows shaped as [[commit]] writes them, as a writer would publish them. */
-  private def rowsOf(rows: (Long, String)*): Option[Seq[Row]] =
-    Some(rows.toDF("k", "v").withColumn("tombstone", lit(false)).collect().toSeq)
+  /** Rows shaped as [[commit]] writes them, as a writer would publish them
+    * into bucket `id`. */
+  private def rowsOf(id: Int, rows: (Long, String)*): Option[Map[Int, Seq[Row]]] =
+    Some(Map(id -> rows.toDF("k", "v").withColumn("tombstone", lit(false)).collect().toSeq))
+
+  /** `m` with bucket `id` of `root` moved to generation `gen`. */
+  private def moved(m: BucketedStore.Manifest, root: String, id: Int,
+      gen: String): BucketedStore.Manifest =
+    m.copy(path = s"${m.path}-next", parts = m.parts.updated(root,
+      m.parts(root).copy(gens = m.gens(root).updated(id, gen))))
 
   it should "change nothing once a reader already loaded the new generation" in {
     val root = store("graft-bc-late")
     val cache = new BucketCache(1L << 26)
     commit(root, 0L, 1L -> "v0")
     val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
-    val bucket = BucketedStore.bucketDir(root, BucketedStore.bucketOf(Seq(1L), N))
+    val bucket = BucketedStore.bucketOf(Seq(1L), N)
     value(route.get(Seq(1L))) shouldBe Some("v0")
-    val from = AtomicSwap.pointer(bucket)
+    val from = BucketedStore.manifest(root)
     commit(root, 1L, 1L -> "v1")
-    val to = AtomicSwap.pointer(bucket).get
+    val to = BucketedStore.manifest(root).get
     value(route.get(Seq(1L))) shouldBe Some("v1")
     val (bytes, loads) = (cache.bytes, cache.loads.get)
-    cache.publish(bucket, from, to, kv, rowsOf(1L -> "stale"))
+    cache.publish(from, to, root, kv, rowsOf(bucket, 1L -> "stale"))()
     value(route.get(Seq(1L))) shouldBe Some("v1")
     (cache.bytes, cache.loads.get) shouldBe ((bytes, loads))
     cache.published.get shouldBe 0
@@ -196,16 +205,15 @@ class BucketCacheSpec extends SparkSpec {
     val root = store("graft-bc-inval")
     val b1 = BucketedStore.bucketOf(Seq(1L), N)
     val mate = (2L to 100L).find(k => BucketedStore.bucketOf(Seq(k), N) == b1).get
-    val bucket = BucketedStore.bucketDir(root, b1)
-    val gens = (0L to 2L).map { b =>
+    val ms = (0L to 2L).map { b =>
       commit(root, b, 1L -> s"v$b", mate -> "w0")
-      AtomicSwap.pointer(bucket).get
+      BucketedStore.manifest(root).get
     }
-    val rows = rowsOf(1L -> "v2")
+    val rows = rowsOf(b1, 1L -> "v2")
 
     // no entry at all: nothing is filled in, and the next read loads
     val empty = new BucketCache(1L << 26)
-    empty.publish(bucket, Some(gens(1)), gens(2), kv, rows)
+    empty.publish(Some(ms(1)), ms(2), root, kv, rows)()
     empty.bytes shouldBe 0L
     (empty.published.get, empty.invalidated.get) shouldBe ((0L, 0L))
     value(new Gateway.BucketedRoute(spark, root, kv, LocalFs, empty)
@@ -216,7 +224,7 @@ class BucketCacheSpec extends SparkSpec {
     val cache = new BucketCache(1L << 26)
     val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
     value(route.get(Seq(mate))) shouldBe Some("w0") // resident for gens(2)
-    cache.publish(bucket, Some(gens(0)), gens(1), kv, rows)
+    cache.publish(Some(ms(0)), ms(1), root, kv, rows)()
     (cache.published.get, cache.invalidated.get, cache.bytes) shouldBe ((0L, 1L, 0L))
 
     // and so is one whose rebuilt entry would not fit the bound
@@ -225,15 +233,16 @@ class BucketCacheSpec extends SparkSpec {
     val tightRoute = new Gateway.BucketedRoute(spark, root, kv, LocalFs, tight)
     value(tightRoute.get(Seq(mate))) shouldBe Some("w0")
     tight.bytes should be > 0L
-    tight.publish(bucket, Some(gens(2)), s"${gens(2)}-next", kv,
-      rowsOf((1L to 64L).map(k => k -> s"wide-$k"): _*))
+    val next = moved(ms(2), root, b1, s"${genOf(root, b1)}-next")
+    tight.publish(Some(ms(2)), next, root, kv,
+      rowsOf(b1, (1L to 64L).map(k => k -> s"wide-$k"): _*))()
     (tight.published.get, tight.invalidated.get, tight.bytes) shouldBe ((0L, 1L, 0L))
 
     // and so is one whose rows lack a column the batch brought: the files
     // now carry it on every row of the bucket
     value(route.get(Seq(mate))) shouldBe Some("w0")
-    cache.publish(bucket, Some(gens(2)), s"${gens(2)}-next", kv, Some(Seq((1L, "v3", "new"))
-      .toDF("k", "v", "extra").withColumn("tombstone", lit(false)).collect().toSeq))
+    cache.publish(Some(ms(2)), next, root, kv, Some(Map(b1 -> Seq((1L, "v3", "new"))
+      .toDF("k", "v", "extra").withColumn("tombstone", lit(false)).collect().toSeq)))()
     (cache.published.get, cache.invalidated.get, cache.bytes) shouldBe ((0L, 2L, 0L))
   }
 
@@ -300,7 +309,7 @@ class BucketCacheSpec extends SparkSpec {
     cache.loads.get shouldBe loads
   }
 
-  /** Every file under `root` by relative path, with each pointer's target. */
+  /** Every file under `root` by relative path, with the pointer's target. */
   private def tree(root: String): Map[String, String] = {
     val base = java.nio.file.Paths.get(root)
     val walk = Files.walk(base)
@@ -397,17 +406,20 @@ class BucketCacheSpec extends SparkSpec {
     val root = store("graft-bc-diff")
     val bexpr = BucketedStore.bucketCol(keyCols, n)
     val touched = (0 until n).filterNot(holes)
-    BucketedStore.writeBuckets(tbl, bexpr, s"$root/t", touched, 0L, n)
-    // some tombstoned keys still indexed: the window between a batch's table
-    // and index commits, where both paths must drop them
+    // some tombstoned keys still indexed, which both paths must drop
     val indexed = tbl.filter(!col("tombstone") || col("i") % 3 === 0)
-    BucketedStore.writeBuckets(SecondaryIndex.build(indexed, keyCols, split(col("tags"), " ")),
-      bexpr, s"$root/i", touched, 0L, n)
+    BucketedStore.writeBuckets(tbl, bexpr, s"$root/t", touched, 0L, n, index = Some(
+      (SecondaryIndex.build(indexed, keyCols, split(col("tags"), " ")), s"$root/i")))
 
     val cache = new BucketCache(1L << 28)
-    val kvRoute = new Gateway.BucketedRoute(spark, s"$root/t", keyCols, LocalFs, cache)
+    val calls = new AtomicInteger
+    val counting = new ForwardingFs {
+      override protected def before(op: String, path: String): Unit = calls.incrementAndGet()
+    }
+    val kvRoute = new Gateway.BucketedRoute(spark, s"$root/t", keyCols, counting, cache)
     val idxRoute = new Gateway.IndexRoute(spark, s"$root/t", s"$root/i", keyCols,
-      cache = cache)
+      fs = counting, cache = cache)
+    def fsCalls(body: => Unit): Int = { calls.set(0); body; calls.get }
     def viaSpark(k: Seq[Any]): Option[Row] =
       BucketedStore.pointLookup(spark, s"$root/t", keyCols, k)
         .flatMap(_.filter(!col("tombstone")).collect().headOption)
@@ -438,5 +450,8 @@ class BucketCacheSpec extends SparkSpec {
     jobsDuring(cold.get(hot)) should be > 0 // a load is counted
     jobsDuring(kvRoute.get(hot)) shouldBe 0
     jobsDuring(idxRoute.lookup(Seq("common", "t1"))) shouldBe 0
+    // warm, each request is one filesystem call: the manifest pointer read
+    fsCalls(kvRoute.get(hot)) shouldBe 1
+    fsCalls(idxRoute.lookup(Seq("common", "t1"))) shouldBe 1
   }
 }

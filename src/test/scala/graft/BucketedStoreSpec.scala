@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{AtomicSwap, BucketedStore, ChangelogStream}
+import graft.streaming.{BucketedStore, ChangelogStream}
 import org.apache.spark.sql.functions._
 
 /** Incremental bucketed table/index maintenance (r12 verdict #1): a
@@ -90,10 +90,17 @@ class BucketedStoreSpec extends SparkSpec {
       replayedTable.filter(!col("tombstone")), Seq("key"), indexFn))
     // term move applied: the seed x-term of the updated key is gone
     idx.filter(_._2 == hotKeys.head).map(_._1) shouldBe Seq("y")
-    // the live generations are staging subdirs — the staging roots that
-    // still back a pointer survived the per-batch staging sweeps
-    for (store <- Seq(s"$root/bt", s"$root/bidx"); b <- 0 until NumBuckets)
-      AtomicSwap.resolve(BucketedStore.bucketDir(store, b)) shouldBe defined
+    // one manifest names every live generation of table and index — the
+    // staging subdirs it names survived the per-batch sweeps, and nothing
+    // it does not name is left
+    val m = BucketedStore.manifest(s"$root/bt").get
+    BucketedStore.manifest(s"$root/bidx") shouldBe Some(m)
+    for (store <- Seq(s"$root/bt", s"$root/bidx")) {
+      m.gens(store).keySet shouldBe (0 until NumBuckets).toSet
+      m.gens(store).values.foreach(g => new java.io.File(g).isDirectory shouldBe true)
+      new java.io.File(store).list().filter(_.startsWith(".staging-")).map(n => s"$store/$n")
+        .toSet shouldBe m.gens(store).values.map(g => g.substring(0, g.lastIndexOf('/'))).toSet
+    }
 
     // (b) the drain really was multi-batch, and batches 2/3 read back only
     // the hot bucket — strictly less than the table
@@ -140,13 +147,13 @@ class BucketedStoreSpec extends SparkSpec {
 
     // routed point lookup: right row, and the scan touches ONE bucket —
     // key 1's committed generation
-    BucketedStore.numBuckets(s"$root/bt") shouldBe Some(NumBuckets)
+    BucketedStore.manifest(s"$root/bt").map(_.arity) shouldBe Some(NumBuckets)
     val pl = BucketedStore.pointLookup(spark, s"$root/bt", Seq("key"), Seq(1))
     pl shouldBe defined
     pl.get.select("key", "value").as[(Int, String)].collect().toSeq shouldBe
       Seq((1, "a2"))
-    scannedDir(pl.get) shouldBe AtomicSwap.resolve(
-      BucketedStore.bucketDir(s"$root/bt", bucketOf(Seq(1))(1))).get
+    scannedDir(pl.get) shouldBe
+      BucketedStore.manifest(s"$root/bt").get.gens(s"$root/bt")(bucketOf(Seq(1))(1))
   }
 
   "BucketedStore.read" should "swap a fully-tombstoned bucket's index to empty (stale postings vanish)" in {
@@ -188,12 +195,12 @@ class BucketedStoreSpec extends SparkSpec {
           spark.readStream.schema(ddl).parquet(in), Seq("key"), "ts_us",
           t, s"$root/ckpt", numBuckets = NumBuckets)
         .start().awaitTermination()
-    val bucket = BucketedStore.bucketDir(t, bucketOf(Seq(7))(7))
+    val bucket = bucketOf(Seq(7))(7)
     def serve(k: Int): String = {
       // the w37/Gateway read path: driver-routed single-bucket scan of the
       // bucket's committed generation — the same bucket every generation
       val df = BucketedStore.pointLookup(spark, t, Seq("key"), Seq(k)).get
-      scannedDir(df) shouldBe AtomicSwap.resolve(bucket).get
+      scannedDir(df) shouldBe BucketedStore.manifest(t).get.gens(t)(bucket)
       df.select("value").as[String].head()
     }
 
@@ -219,10 +226,10 @@ class BucketedStoreSpec extends SparkSpec {
     serve(7) shouldBe "g3"
 
     // a read DURING the crash window (a writer's next generation fully
-    // written, pointer never flipped): the routed read serves the last
+    // staged, pointer never flipped): the routed read serves the last
     // COMMITTED generation, never the uncommitted one
     Seq((7, "uncommitted", 400L, false)).toDF("key", "value", "ts_us", "tombstone")
-      .write.parquet(s"$bucket.gen-99")
+      .write.parquet(s"$t/.staging-99-crashed/__b=$bucket")
     serve(7) shouldBe "g3"
   }
 }

@@ -97,7 +97,8 @@ class BucketPublicationSpec extends SparkSpec {
   private val ddl = "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN"
 
   /** Forwards to LocalFs and throws once, at the first write or delete
-    * `crashAt(op, path)` picks, before the call is made. */
+    * `crashAt(op, path)` picks: before the call is made, or right after a
+    * write landed (op "wrote"). */
   private final class CrashOnceFs(crashAt: (String, String) => Boolean) extends ForwardingFs {
     private var armed = true
     private def step(op: String, path: String): Unit =
@@ -106,7 +107,7 @@ class BucketPublicationSpec extends SparkSpec {
         throw new IllegalStateException(s"injected crash at $op $path")
       }
     override def writeString(path: String, content: String): Unit = {
-      step("write", path); super.writeString(path, content)
+      step("write", path); super.writeString(path, content); step("wrote", path)
     }
     override def deleteRecursively(path: String): Unit = {
       step("delete", path); super.deleteRecursively(path)
@@ -133,16 +134,18 @@ class BucketPublicationSpec extends SparkSpec {
       s.drain()
       new Gateway.BucketedRoute(spark, s.table, kc, LocalFs, cache)
     }
-    val buckets = (0 until n).map(s.bucket)
-    buckets.foreach(cache.liveRows(spark, _, kc, LocalFs) shouldBe defined)
+    def rows(c: BucketCache, id: Int) =
+      c.committed(s.table, LocalFs)(m => c.liveRows(spark, m, s.table, id, kc, LocalFs)).get
+    val buckets = 0 until n
+    buckets.foreach(rows(cache, _) should not be empty)
 
     var dropped = cache.invalidated.get
     def check(label: String): Unit = withClue(s"$label: ") {
       val loads = cache.loads.get
       val fresh = new BucketCache(1L << 28)
       for (b <- buckets) {
-        val got = cache.liveRows(spark, b, kc, LocalFs).get
-        val want = fresh.liveRows(spark, b, kc, LocalFs).get
+        val got = rows(cache, b)
+        val want = rows(fresh, b)
         got.keySet shouldBe want.keySet
         for ((k, row) <- want) {
           got(k).schema.fieldNames.toSeq shouldBe row.schema.fieldNames.toSeq
@@ -160,7 +163,7 @@ class BucketPublicationSpec extends SparkSpec {
     check("seed")
 
     val doomed = keys(3)
-    val tablePtr = s"${s.table}/b"
+    val ptr = BucketedStore.pointer(s.table)
     for (b <- 1 to 6) {
       val base = 1000L * b
       val rows = rnd.shuffle(keys.filterNot(_ == doomed)).take(7).zipWithIndex.map {
@@ -176,25 +179,18 @@ class BucketPublicationSpec extends SparkSpec {
         case _ => Nil
       }))
       b match {
-        case 3 => // crash at the second table pointer flip: the re-run finds
-          // the first flip's generation published and moves it on
-          var flips = 0
+        case 3 => // crash at the flip: nothing was committed or published,
+          // and the re-run publishes over the same generations
           intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-            s.drain(new CrashOnceFs((op, p) => op == "write" && p.startsWith(tablePtr) &&
-              p.endsWith(".ptr") && { flips += 1; flips == 2 }))
+            s.drain(new CrashOnceFs((op, p) => op == "write" && p == ptr))
           }
-          flips shouldBe 2
           s.drain()
-        case 5 => // crash between a flip and the delete of the superseded
-          // generation: that bucket was never published, and the re-run
-          // finds its entry on neither side of its flip
-          var flipped = false
+        case 5 => // crash right after the flip landed, before the
+          // publication: the re-run finds the touched entries on neither
+          // side of its own flip
           intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-            s.drain(new CrashOnceFs((op, p) =>
-              if (op == "write") { flipped ||= p.startsWith(tablePtr) && p.endsWith(".ptr"); false }
-              else flipped))
+            s.drain(new CrashOnceFs((op, p) => op == "wrote" && p == ptr))
           }
-          flipped shouldBe true
           s.drain()
         case _ => s.drain()
       }

@@ -80,7 +80,7 @@ class GatewaySpec extends SparkSpec {
   }
 
   it should "serve /kv through the bucketed route, scanning exactly ONE bucket dir per request (r13 verdict #6)" in {
-    import graft.streaming.{AtomicSwap, BucketedStore}
+    import graft.streaming.BucketedStore
     val root = java.nio.file.Files.createTempDirectory("graft-gwb")
       .toFile.getAbsolutePath
     val df = Seq(
@@ -107,7 +107,7 @@ class GatewaySpec extends SparkSpec {
       BucketedStore.pointLookup(spark, root, Seq("account"), Seq(2L)).get
         .inputFiles.map(f => new java.io.File(new java.net.URI(f)).getParent)
         .distinct.toSeq shouldBe
-        Seq(AtomicSwap.resolve(BucketedStore.bucketDir(root, id)).get)
+        Seq(BucketedStore.manifest(root).get.gens(root)(id))
       get(s"$base/kv/3").statusCode() shouldBe 404 // tombstoned
       get(s"$base/kv/99").statusCode() shouldBe 404 // miss
       get(s"$base/kv/not-a-long").statusCode() shouldBe 404 // uncoercible
@@ -125,12 +125,12 @@ class GatewaySpec extends SparkSpec {
       (4L, "dan etl gpu", true)) // tombstoned: indexed nowhere served
       .toDF("account", "tags", "tombstone")
     val bexpr = BucketedStore.bucketCol(Seq("account"), 4)
-    BucketedStore.writeBuckets(tbl, bexpr, s"$root/t", Seq(0, 1, 2, 3), 0L, 4)
     val idx = graft.state.SecondaryIndex.build(
       tbl.filter(!org.apache.spark.sql.functions.col("tombstone")),
       Seq("account"),
       org.apache.spark.sql.functions.split($"tags", " "))
-    BucketedStore.writeBuckets(idx, bexpr, s"$root/i", Seq(0, 1, 2, 3), 0L, 4)
+    BucketedStore.writeBuckets(tbl, bexpr, s"$root/t", Seq(0, 1, 2, 3), 0L, 4,
+      index = Some((idx, s"$root/i")))
 
     val route = new Gateway.IndexRoute(spark, s"$root/t", s"$root/i", Seq("account"))
     val gw = new Gateway(Snapshot.of(store), index = Some(route)).start()
@@ -146,7 +146,7 @@ class GatewaySpec extends SparkSpec {
     } finally gw.stop()
   }
 
-  it should "answer other requests while one read is blocked in its bucket's pointer read" in {
+  it should "answer other requests while one read is blocked in its manifest pointer read" in {
     import graft.streaming.{BucketCache, BucketedStore, LocalFs}
     val root = java.nio.file.Files.createTempDirectory("graft-gwp")
       .toFile.getAbsolutePath
@@ -158,10 +158,11 @@ class GatewaySpec extends SparkSpec {
     val entered = new java.util.concurrent.CountDownLatch(1)
     val release = new java.util.concurrent.CountDownLatch(1)
     @volatile var armed = false
-    // holds the first pointer read of key 1's bucket until released
+    // holds the first pointer read, key 1's, until released; the other
+    // requests read the same pointer meanwhile
     object LatchFs extends ForwardingFs {
       override def readString(path: String): Option[String] = {
-        if (armed && path == s"${BucketedStore.bucketDir(root, bucket(1L))}.ptr") {
+        if (armed && path == BucketedStore.pointer(root)) {
           armed = false
           entered.countDown()
           release.await()

@@ -2,32 +2,35 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{AtomicSwap, BucketedStore, LocalFs, StoreFs}
+import scala.jdk.CollectionConverters._
 
-/** EXHAUSTIVE crash-point fuzz over the pointer-file table commit (r14 —
-  * generalizing the hand-picked windows of StoreFsSpec): a [[CrashFs]]
-  * wrapper throws at the k-th metadata MUTATION
-  * (delete/writeString/mkdirs — reads don't advance the clock),
-  * and the spec iterates k over EVERY index a full batch performs, so
-  * every between-steps crash window the protocol has is visited, not
-  * just the ones someone thought of. After each injected crash:
+import graft.state.SecondaryIndex
+import graft.streaming.{AtomicSwap, BucketCache, BucketedStore, LocalFs, StoreFs}
+import org.apache.spark.sql.functions._
+
+/** EXHAUSTIVE crash-point fuzz over the table commits (r14 — generalizing
+  * the hand-picked windows of StoreFsSpec): a [[CrashFs]] wrapper throws at
+  * the k-th metadata MUTATION (delete/writeString — reads don't
+  * advance the clock), and the spec iterates k over EVERY index a full
+  * batch performs, so every between-steps crash window the protocol has is
+  * visited, not just the ones someone thought of. After each injected
+  * crash:
   *
-  *   1. ATOMICITY — each bucket's readable table equals its OLD content
-  *      or its NEW content, never a torn/other state (a crash between
-  *      bucket commits may legally mix old and new ACROSS buckets — the
-  *      documented contract; the checkpointed batch re-runs);
-  *   2. HEALING — re-running the same batch cleanly converges the whole
-  *      table to the NEW content (idempotency).
+  *   1. ATOMICITY — the bucketed store's table AND its index read exactly
+  *      as after the previous batch, or both exactly as after the crashed
+  *      one: a batch commits with one manifest flip, so no crash point
+  *      mixes buckets of two batches, or a table of one batch with an
+  *      index of the other;
+  *   2. HEALING — re-running the same batch cleanly converges the store
+  *      to the NEW content (idempotency).
   *
-  * The single-table AtomicSwap.swap is fuzzed the same way with the
-  * stronger whole-table old-XOR-new assertion. Data writes (Spark
-  * parquet) are outside the seam; a crash during a FIRST attempt's data
-  * write is equivalent to k=0 (nothing committed). A batch RE-RUN's data
-  * write is NOT (r14 advice, high): the previous attempt's committed
-  * generations live inside its staging dir,
-  * so the re-run must never overwrite it — the third fuzz drives every
-  * crash point of a re-run after a maximally-committed first crash and
-  * asserts no window dangles a bucket pointer. */
+  * The single-table AtomicSwap.swap is fuzzed the same way. Data writes
+  * (Spark parquet) are outside the seam; a crash during a FIRST attempt's
+  * data write is equivalent to k=0 (nothing committed). A batch RE-RUN's
+  * data write is NOT (r14 advice, high): the previous attempt's committed
+  * generations live inside its staging dirs, so the re-run must never
+  * overwrite them — the second fuzz drives every crash point of a re-run
+  * after a maximally-committed first crash. */
 class ProtocolCrashFuzzSpec extends SparkSpec {
   import spark.implicits._
 
@@ -40,12 +43,10 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     private def step(): Unit = { ops += 1; if (ops > failAfter) throw new Crash }
     override def listNames(dir: String): Seq[String] = delegate.listNames(dir)
     override def exists(path: String): Boolean = delegate.exists(path)
-    override def isDir(path: String): Boolean = delegate.isDir(path)
     override def readString(path: String): Option[String] = delegate.readString(path)
     override def deleteRecursively(path: String): Unit = {
       step(); delegate.deleteRecursively(path)
     }
-    override def mkdirs(path: String): Unit = { step(); delegate.mkdirs(path) }
     override def writeString(path: String, content: String): Unit = {
       step(); delegate.writeString(path, content)
     }
@@ -53,32 +54,40 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
 
   private val NumBuckets = 4
 
+  /** One batch: `rows` as every bucket of table `root/t`, and their index
+    * (term = value) in `root/i`, in one commit. */
   private def writeBatch(
       root: String,
       rows: Seq[(Int, String)],
       batchId: Long,
-      fs: StoreFs): Unit =
-    BucketedStore.writeBuckets(rows.toDF("key", "value"),
-      BucketedStore.bucketCol(Seq("key"), NumBuckets), root,
-      touched = (0 until NumBuckets).toSeq, batchId = batchId,
-      arity = NumBuckets, fs = fs)
+      fs: StoreFs): Unit = {
+    val t = rows.toDF("key", "value")
+    BucketedStore.writeBuckets(t, BucketedStore.bucketCol(Seq("key"), NumBuckets),
+      s"$root/t", touched = (0 until NumBuckets).toSeq, batchId = batchId,
+      arity = NumBuckets, fs = fs,
+      index = Some((SecondaryIndex.build(t, Seq("key"), array(col("value"))), s"$root/i")))
+  }
 
-  private def readState(root: String, fs: StoreFs): Map[Int, String] =
-    BucketedStore.read(spark, root, fs)
+  /** The table (key → value) and the index (term → keys) as read back. */
+  private def readState(root: String, fs: StoreFs): (Map[Int, String], Map[String, Set[Int]]) =
+    (BucketedStore.read(spark, s"$root/t", fs)
       .map(_.select("key", "value").as[(Int, String)].collect().toMap)
-      .getOrElse(Map.empty)
+      .getOrElse(Map.empty),
+      BucketedStore.read(spark, s"$root/i", fs)
+        .map(_.select("index_key", "key").as[(String, Int)].collect().toSeq
+          .groupMap(_._1)(_._2).view.mapValues(_.toSet).toMap)
+        .getOrElse(Map.empty))
 
-  private def bucketOf(k: Int): Int =
-    Seq(k).toDF("key")
-      .select(BucketedStore.bucketCol(Seq("key"), NumBuckets)).as[Int].head()
+  private val keys = (1 to 12).toSeq
+  private val oldRows = keys.map(k => (k, s"old$k"))
+  private val newRows = keys.map(k => (k, s"new$k"))
+  private def stateOf(rows: Seq[(Int, String)]) =
+    (rows.toMap, rows.map { case (k, v) => v -> Set(k) }.toMap)
 
-  "the manifest protocol" should "be per-bucket atomic and re-run-healable at EVERY crash point" in {
+  "the manifest protocol" should "be batch-atomic over table and index and re-run-healable at EVERY crash point" in {
     val base: StoreFs = LocalFs
-    val keys = (1 to 12).toSeq
-    keys.map(bucketOf).toSet should have size NumBuckets.toLong.toInt
-    val oldRows = keys.map(k => (k, s"old$k"))
-    val newRows = keys.map(k => (k, s"new$k"))
-    val byBucket: Map[Int, Seq[Int]] = keys.groupBy(bucketOf)
+    keys.map(k => BucketedStore.bucketOf(Seq(k), NumBuckets)).toSet should have size
+      NumBuckets.toLong
 
     // total mutations of batch 2 alone
     val proto = Files.createTempDirectory("fz-probe").toFile.getAbsolutePath
@@ -88,50 +97,35 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     val batchOps = counter.ops
     batchOps should be > 3
 
-    var mixedSeen = false
-    for (k <- 0 until batchOps) {
+    val seen = for (k <- 0 until batchOps) yield {
       val root = Files.createTempDirectory(s"fz-$k").toFile.getAbsolutePath
       writeBatch(root, oldRows, 1L, base)
       intercept[Crash] { writeBatch(root, newRows, 2L, new CrashFs(base, k)) }
 
-      // 1. per-bucket atomicity, read through the CLEAN fs
+      // 1. batch atomicity, read through the CLEAN fs
       val state = readState(root, base)
-      val bucketStates = byBucket.map { case (b, bk) =>
-        val got = bk.map(kk => kk -> state.get(kk)).toMap
-        val isOld = bk.forall(kk => got(kk).contains(s"old$kk"))
-        val isNew = bk.forall(kk => got(kk).contains(s"new$kk"))
-        withClue(s"k=$k bucket $b torn: $got ") {
-          isOld || isNew shouldBe true
-        }
-        isNew
+      withClue(s"k=$k table or index torn: $state ") {
+        Set(stateOf(oldRows), stateOf(newRows)) should contain(state)
       }
-      if (bucketStates.exists(identity) && bucketStates.exists(!_)) mixedSeen = true
 
       // 2. healing: the checkpointed batch re-runs and converges to NEW
       writeBatch(root, newRows, 2L, base)
-      readState(root, base) shouldBe newRows.toMap
+      readState(root, base) shouldBe stateOf(newRows)
+      state == stateOf(newRows)
     }
-    // the fuzz actually exercised the interesting region: some crash
-    // points left a legal mixed-generation table that the re-run healed
-    withClue("no crash point produced a mixed state — " +
-      "the sweep is not visiting the between-bucket windows ") {
-      mixedSeen shouldBe true
-    }
+    // the fuzz visited both sides of the one commit point
+    seen.toSet shouldBe Set(false, true)
   }
 
   it should "survive every crash point of a batch RE-RUN after a maximally-committed first crash" in {
     // the destructive-overwrite class (r14 advice, high): the first attempt
-    // of batch 2 crashes at its LAST metadata mutation — every bucket
-    // pointer it managed to flip targets `.staging-2-<uuid>/__b=i`. The
-    // re-run stages to its own uniquely named dir (never overwriting the
-    // referenced staging), so at every crash point j of the re-run each bucket still
-    // reads exactly OLD or NEW — no window dangles a pointer into a
-    // deleted staging (the old code's silent-loss window).
+    // of batch 2 crashes at its LAST metadata mutation — its manifest is
+    // live and names `.staging-2-<uuid>/__b=i` in table and index. The
+    // re-run stages to its own uniquely named dirs (never overwriting the
+    // named stagings), so at every crash point j of the re-run the store
+    // reads exactly OLD or NEW, table and index together — no window
+    // leaves the live manifest naming a deleted staging.
     val base: StoreFs = LocalFs
-    val keys = (1 to 12).toSeq
-    val oldRows = keys.map(k => (k, s"old$k"))
-    val newRows = keys.map(k => (k, s"new$k"))
-    val byBucket: Map[Int, Seq[Int]] = keys.groupBy(bucketOf)
 
     def firstCrashOps(root: String): Int = {
       writeBatch(root, oldRows, 1L, base)
@@ -161,17 +155,39 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
       crashedFirstAttempt(root)
       intercept[Crash] { writeBatch(root, newRows, 2L, new CrashFs(base, j)) }
       val state = readState(root, base)
-      byBucket.foreach { case (b, bk) =>
-        val got = bk.map(kk => kk -> state.get(kk)).toMap
-        val isOld = bk.forall(kk => got(kk).contains(s"old$kk"))
-        val isNew = bk.forall(kk => got(kk).contains(s"new$kk"))
-        withClue(s"re-run j=$j bucket $b torn/lost: $got ") {
-          isOld || isNew shouldBe true
-        }
+      withClue(s"re-run j=$j table or index torn/lost: $state ") {
+        Set(stateOf(oldRows), stateOf(newRows)) should contain(state)
       }
       // a third run converges
       writeBatch(root, newRows, 2L, base)
-      readState(root, base) shouldBe newRows.toMap
+      readState(root, base) shouldBe stateOf(newRows)
+    }
+  }
+
+  "the bucketed writer" should "flip exactly one pointer per batch, indexed or not, and write no per-bucket pointer" in {
+    val ddl = "key INT, value STRING, ts_us BIGINT, tombstone BOOLEAN"
+    for (index <- Seq(None, Some(split(col("value"), " ")))) {
+      val s = new StreamedStore(spark, ddl, Seq("key"), NumBuckets, new BucketCache(1L << 26), index)
+      s.append(keys.map(k => (k, s"a$k", 100L, false)).toDF("key", "value", "ts_us", "tombstone"))
+      s.drain()
+      val writes = scala.collection.mutable.ArrayBuffer.empty[String]
+      val fs = new ForwardingFs {
+        override def writeString(path: String, content: String): Unit = {
+          writes += path; super.writeString(path, content)
+        }
+      }
+      s.append(Seq((1, "b", 200L, false), (2, null, 200L, true), (5, "c d", 200L, false))
+        .toDF("key", "value", "ts_us", "tombstone"))
+      s.drain(fs)
+      withClue(s"index=${index.isDefined}: $writes ") {
+        // the new manifest, then the one pointer that names it
+        writes.map(p => p.substring(p.lastIndexOf('/') + 1).takeWhile(_ != '-')) shouldBe
+          Seq("_manifest", "_manifest.ptr")
+      }
+      val files = Files.walk(java.nio.file.Paths.get(s.root))
+      try files.iterator.asScala.map(_.getFileName.toString)
+        .filter(n => n == ".buckets" || n.matches("b\\d+\\.ptr")).toSeq shouldBe empty
+      finally files.close()
     }
   }
 

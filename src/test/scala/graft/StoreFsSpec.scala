@@ -86,10 +86,8 @@ class StoreFsSpec extends SparkSpec {
         throw new IllegalStateException(s"resolve issued a mutation: $op")
       override def listNames(dir: String): Seq[String] = delegate.listNames(dir)
       override def exists(path: String): Boolean = delegate.exists(path)
-      override def isDir(path: String): Boolean = delegate.isDir(path)
       override def readString(path: String): Option[String] = delegate.readString(path)
       override def deleteRecursively(path: String): Unit = mutation(s"delete $path")
-      override def mkdirs(path: String): Unit = mutation(s"mkdirs $path")
       override def writeString(path: String, content: String): Unit =
         mutation(s"writeString $path")
     }
@@ -155,5 +153,12 @@ class StoreFsSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       BucketedStore.pointLookup(spark, holey, Seq("key"), Seq(intToHole))
     }.getMessage should include("probe type mismatch")
+    // a correctly-typed probe into the hole: an empty frame of the stored
+    // schema (the manifest names no files for an empty bucket)
+    val longToHole = (0L to 100L).find(v => java.lang.Math.floorMod(
+      Murmur3Hash(Seq(CLit(v)), 42).eval(null).asInstanceOf[Int], 2) != b2).get
+    val hole = BucketedStore.pointLookup(spark, holey, Seq("key"), Seq(longToHole)).get
+    hole.schema shouldBe one.schema
+    hole.count() shouldBe 0L
   }
 }

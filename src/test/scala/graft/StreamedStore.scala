@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import scala.collection.mutable
 
-import graft.streaming.{BucketCache, BucketedStore, ChangelogStream, LocalFs, StoreFs}
+import graft.streaming.{BucketCache, ChangelogStream, LocalFs, StoreFs}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** A bucketed store under a fresh temp dir, fed one changelog file per
@@ -16,8 +16,6 @@ final class StreamedStore(spark: SparkSession, ddl: String, val keyCols: Seq[Str
   val table = s"$root/t"
   val index = s"$root/i"
   val in = s"$root/in"
-
-  def bucket(id: Int): String = BucketedStore.bucketDir(table, id)
 
   /** Stage `rows` as the next changelog file. */
   def append(rows: DataFrame): Unit = {

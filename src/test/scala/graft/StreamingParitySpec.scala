@@ -8,8 +8,7 @@ import org.apache.spark.sql.functions._
   * same input, fed as micro-batches, must leave EXACTLY the final per-key
   * state the batch aggregation computes in one pass (the q11 oracle shape).
   * This is the contract that makes the streaming path swappable for the
-  * batch one — same convergent answer, different arrival pattern. Pattern
-  * ported from StreamingDedupSpec's batch-parity case. */
+  * batch one — same convergent answer, different arrival pattern. */
 class StreamingParitySpec extends SparkSpec {
   import spark.implicits._
 
