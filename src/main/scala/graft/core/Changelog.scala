@@ -85,12 +85,13 @@ object Changelog {
   def ttlFilter(df: DataFrame, tsCol: String, ttlUs: Long, nowUs: Long): DataFrame =
     df.filter(col(tsCol) >= lit(nowUs - ttlUs))
 
-  /** Vacuum a changelog table committed through AtomicSwap: compact to
-    * latest-per-key, drop tombstoned keys and TTL-expired records — the
-    * reference's Kafka retention contract (`cleanup.policy=compact,delete` +
+  /** Vacuum a changelog table kept as a one-bucket
+    * [[graft.streaming.BucketedStore]]: compact to latest-per-key, drop
+    * tombstoned keys and TTL-expired records — the reference's Kafka
+    * retention contract (`cleanup.policy=compact,delete` +
     * `retention.ms=ttl`, KafkaLogStorage.scala:355-374) as an explicit
-    * maintenance action. Crash-safe via AtomicSwap (the swap sweeps an
-    * interrupted vacuum's leftovers). */
+    * maintenance action. Crash-safe: the result commits with one manifest
+    * flip, and the next commit sweeps an interrupted vacuum's leftovers. */
   def vacuum(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -106,32 +107,36 @@ object Changelog {
     val live = ttlUs.fold(log)(t => ttlFilter(log, tsCol, t, nowUs))
     val compacted = compact(live, keyCols, tsCol, tieBreakCols)
     val clean = tombstoneCol.fold(compacted)(tc => dropTombstones(compacted, tc))
-    graft.streaming.AtomicSwap.swap(clean, path, batchId = System.nanoTime())
+    graft.streaming.BucketedStore.writeBuckets(clean, lit(0), path, Seq(0),
+      batchId = System.nanoTime(), arity = 1)
   }
 
-  /** Small-files compaction: rewrite a table committed through AtomicSwap
-    * into ~`targetFileBytes` files (crash-safe swap). Streaming materialization
-    * and frequent appends accumulate thousands of tiny files whose
-    * per-file open/footer cost dominates scans long before data volume
-    * does — the standard warehouse maintenance action. Returns the target
-    * partition count. */
+  /** Small-files compaction: rewrite a one-bucket
+    * [[graft.streaming.BucketedStore]] into ~`targetFileBytes` files, sized
+    * from its live bucket-0 generation and committed like [[vacuum]].
+    * Streaming materialization and frequent appends accumulate thousands of
+    * tiny files whose per-file open/footer cost dominates scans long before
+    * data volume does — the standard warehouse maintenance action. Returns
+    * the target partition count. */
   def compactFiles(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       targetFileBytes: Long = 128L << 20): Int = {
     require(targetFileBytes > 0, "target file size must be positive")
     val log = committed(spark, path)
-    val p = new org.apache.hadoop.fs.Path(graft.streaming.AtomicSwap.resolve(path).get)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = fs.getContentSummary(p).getLength
+    val totalBytes = graft.streaming.BucketedStore.manifest(path).flatMap(_.gens(path).get(0))
+      .fold(0L) { gen =>
+        val p = new org.apache.hadoop.fs.Path(gen)
+        p.getFileSystem(spark.sparkContext.hadoopConfiguration).getContentSummary(p).getLength
+      }
     val parts = math.max(1, math.ceil(totalBytes.toDouble / targetFileBytes).toInt)
-    graft.streaming.AtomicSwap.swap(
-      log.repartition(parts), path, batchId = System.nanoTime())
+    graft.streaming.BucketedStore.writeBuckets(log.repartition(parts), lit(0), path, Seq(0),
+      batchId = System.nanoTime(), arity = 1)
     parts
   }
 
   private def committed(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    graft.streaming.AtomicSwap.read(spark, path).getOrElse(
+    graft.streaming.BucketedStore.read(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no table committed at $path"))
 
   /** Keep the N most recent records per key (reference keep-last-3 CDC

@@ -53,10 +53,6 @@ object GraphAlgorithms {
     val eRaw = edges.select(col("src").as("a"), col("dst").as("b"))
       .filter(col("a") =!= col("b"))
 
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
-    def stamp(label: String, t0: Long): Unit =
-      if (debug) println(f"[cc] $label (${(System.nanoTime() - t0) / 1e9}%.2f s)")
-
     // PER-PARTITION PRE-CONTRACTION (the 100 TB cost cut): each partition
     // union-finds its edge chunk and re-emits it as a locally-min-rooted
     // star forest — a provably-safe contraction (original edge (a,b) in
@@ -80,34 +76,21 @@ object GraphAlgorithms {
     // (the local min election needs Catalyst-consistent equality/ordering
     // on raw values).
     if (orderable) {
-      val tp0 = System.nanoTime()
       var e = contractPartitions(eRaw).localCheckpoint(true)
       var n = e.count()
-      stamp(s"pre-contract pass0 (shuffle-free): -> $n stars", tp0)
       if (n > localThreshold) {
-        val tp1 = System.nanoTime()
-        val n0 = n
         e = contractPartitions(e.repartition(col("a"))).localCheckpoint(true)
         n = e.count()
-        stamp(s"pre-contract pass1 (child-keyed): $n0 -> $n stars", tp1)
       }
-      if (n <= localThreshold) {
-        val tl = System.nanoTime()
-        val r = localComponents(spark, vertices, e)
-        stamp(s"local finish on $n star edges", tl)
-        return r
-      }
-      val tLoop = System.nanoTime()
-      val r = starLoop(spark, vertices.localCheckpoint(true), e, maxIter, stamp)
-      stamp("star loop total", tLoop)
-      return r
+      return if (n <= localThreshold) localComponents(spark, vertices, e)
+        else starLoop(spark, vertices.localCheckpoint(true), e, maxIter)
     }
 
     // non-orderable vertex types (binary/array/struct): raw-value driver
     // maps would silently mis-unify, so both the local path and the
     // contraction are off — dedup with a distinct and run the star loop
     val e = eRaw.distinct().localCheckpoint(true)
-    starLoop(spark, vertices.localCheckpoint(true), e, maxIter, stamp)
+    starLoop(spark, vertices.localCheckpoint(true), e, maxIter)
   }
 
   /** The alternating large-star/small-star contraction loop (Kiveris et
@@ -120,14 +103,12 @@ object GraphAlgorithms {
       spark: SparkSession,
       vertices: DataFrame,
       edges0: DataFrame,
-      maxIter: Int,
-      stamp: (String, Long) => Unit): DataFrame = {
+      maxIter: Int): DataFrame = {
     var e = edges0
     var converged = e.isEmpty
     var lastFp = (-1L, -1L)
     var iter = 0
     while (!converged && iter < maxIter) {
-      val tr = System.nanoTime()
       // LARGE-STAR: every vertex u links its strictly-larger neighbors to
       // min(Γ(u) ∪ {u}).
       val sym = e.select(col("a").as("u"), col("b").as("v"))
@@ -159,7 +140,6 @@ object GraphAlgorithms {
       lastFp = fp
       e = small
       iter += 1
-      stamp(s"star round $iter: ${fp._1} edges", tr)
     }
 
     // converged edge set is a star forest (child -> component root)
@@ -847,7 +827,7 @@ object GraphAlgorithms {
     // and contracted feeds the inner CC's vertex scan, pre-contraction AND
     // mapping join — both join tails re-run per read even under AQE
     // exchange reuse (r2 multi-read rule; q107's delta chain showed the
-    // contraction computing ~3x in the CC debug stamps, r15). Both frames
+    // contraction computing ~3x in r15's per-phase CC timings). Both frames
     // are bounded: comp0 is vertex-sized, contracted is delta-sized.
     val comp0 = allVertices.join(cc0, Seq("vertex"), "left")
       .select(col("vertex"), coalesce(col("component"), col("vertex")).as("c0"))

@@ -355,8 +355,9 @@ private[graft] object StreamingQueries {
     // RETRACTS it; an edge is live iff its LATEST mutation by
     // (ts, event_id) is not a retraction. maintainComponents compacts
     // latest-per-edge, drops tombstoned edges and recomputes components
-    // per micro-batch behind an atomic swap; the drained component table
-    // must equal the batch compact → live-CC of the replayed changelog.
+    // per micro-batch, committed by one manifest flip; the drained
+    // component table must equal the batch compact → live-CC of the
+    // replayed changelog.
     // Vertices ride the q107 long encoding (user·2 even, md5(type)·2+1
     // odd); component = min encoded vertex on both sides.
     "w17_stream_graph_maintain" -> ((s, d) => {
@@ -371,7 +372,7 @@ private[graft] object StreamingQueries {
       graft.streaming.GraphStream.maintainComponents(ch, s"$tmp/g",
           s"$tmp/ckpt", tieBreakCols = Seq("event_id"))
         .start().awaitTermination()
-      graft.streaming.AtomicSwap.read(s, s"$tmp/g/components").get.orderBy("vertex")
+      graft.streaming.BucketedStore.read(s, s"$tmp/g/components").get.orderBy("vertex")
     }),
 
     // LIVE SECONDARY-INDEX MAINTENANCE under streaming ingest (R4 build +

@@ -13,14 +13,16 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * rewrite on every connect/disconnect). The Spark re-expression: edges
   * arrive as a changelog (src, dst, ts_us, tombstone); each micro-batch
   * folds them into the edge table through the bucketed writer's step
-  * (last-writer-wins per undirected edge, tombstone = disconnect; one
-  * bucket, so the table is rewritten whole) and recomputes components
-  * with the large-star/small-star algorithm, atomically swapping the components
-  * table. Per-batch recompute is the right batch trade: component merges
-  * are global (an edge can fuse two giant components), so "incremental"
-  * means incremental *input*, with output recomputed from the maintained
-  * edge state — exactly what the reference's batch analytics view does
-  * after replaying its vertex/edge log (AnalyticsSystemSpec.scala:64-101).
+  * (last-writer-wins per undirected edge, tombstone = disconnect) and
+  * recomputes components with the large-star/small-star algorithm into
+  * the components table. Both tables are one-bucket [[BucketedStore]]s,
+  * rewritten whole and committed each by its own manifest flip; a reader
+  * resolves either with [[BucketedStore.read]]. Per-batch recompute is the
+  * right batch trade: component merges are global (an edge can fuse two
+  * giant components), so "incremental" means incremental *input*, with
+  * output recomputed from the maintained edge state — exactly what the
+  * reference's batch analytics view does after replaying its vertex/edge
+  * log (AnalyticsSystemSpec.scala:64-101).
   */
 object GraphStream {
 
@@ -33,12 +35,12 @@ object GraphStream {
       .withColumnRenamed("_dst", "dst")
 
   /** Stream (src, dst, ts_us, tombstone) edge changes; maintain
-    * `<root>/edges` (latest-per-edge, a one-bucket [[BucketedStore]]
-    * committed by [[ChangelogStream.commitBatch]]) and `<root>/components`
-    * (vertex, component). `tieBreakCols` orders same-timestamp mutations of
-    * one edge (e.g. a log offset/sequence column) — without it a connect +
-    * disconnect in the same timestamp unit resolves arbitrarily across
-    * reruns. */
+    * `<root>/edges` (latest-per-edge, committed by
+    * [[ChangelogStream.commitBatch]]) and `<root>/components` (vertex,
+    * component), both one-bucket [[BucketedStore]]s. `tieBreakCols` orders
+    * same-timestamp mutations of one edge (e.g. a log offset/sequence
+    * column) — without it a connect + disconnect in the same timestamp unit
+    * resolves arbitrarily across reruns. */
   def maintainComponents(
       edgeChangelog: DataFrame,
       root: String,
@@ -59,8 +61,9 @@ object GraphStream {
         // no table yet only when the batch was empty: no edges then
         val edges = BucketedStore.read(spark, edgesPath).getOrElse(canonical(batch))
         val live = graft.core.Changelog.dropTombstones(edges, "tombstone")
-        AtomicSwap.swap(GraphAlgorithms.connectedComponents(spark, live),
-          s"$root/components", batchId)
+        BucketedStore.writeBuckets(GraphAlgorithms.connectedComponents(spark, live),
+          lit(0), s"$root/components", Seq(0), batchId, arity = 1)
+        ()
       }
   }
 }

@@ -6,17 +6,19 @@ import java.io.File
   * reference keeps its stores pluggable behind an SPI for exactly this
   * reason (reference: api/src/main/java/io/amient/affinity/core/
   * storage/MemStore.java:41 — RocksDB/SimpleMap/SortedMap bindings); here
-  * the pluggable surface is the METADATA half of a table commit: listing,
-  * recursive delete, and small-text-file (pointer/metadata) IO.
+  * the pluggable surface is the METADATA half of a table commit: four
+  * ops — listing, recursive delete, and small-text-file (pointer/manifest)
+  * read and write.
   *
   * Bulk DATA writes (parquet) stay on Spark's own Hadoop IO — on a real
   * object store those go through Spark's cloud committers, which is a
   * solved problem outside this seam. What the seam ports is OUR protocol,
-  * the pointer-file commits of [[BucketedStore]] and [[AtomicSwap]]. The
+  * the one commit every table takes: [[BucketedStore]]'s manifest and its
+  * `_manifest.ptr` flip (an unbucketed table is a one-bucket store). The
   * seam has no rename: the protocol never moves a data dir, so it needs
   * nothing an object store (S3-style, where rename is copy+delete and
   * never atomic) lacks. A real S3/GCS binding implements this trait with
-  * client calls (list/exists/delete + one atomic small-object PUT for
+  * client calls (list/delete/get + one atomic small-object PUT for
   * [[writeString]]); everything above the seam is identical.
   *
   * Contract note: [[writeString]] must be an atomic single-object put — it
@@ -28,8 +30,6 @@ trait StoreFs {
 
   /** Child names (not paths) of `dir`; empty when absent. */
   def listNames(dir: String): Seq[String]
-
-  def exists(path: String): Boolean
 
   def deleteRecursively(path: String): Unit
 
@@ -46,8 +46,6 @@ object LocalFs extends StoreFs {
   override def listNames(dir: String): Seq[String] =
     Option(new File(dir).listFiles()).getOrElse(Array.empty[File])
       .map(_.getName).toSeq
-
-  override def exists(path: String): Boolean = new File(path).exists()
 
   override def deleteRecursively(path: String): Unit = del(new File(path))
 

@@ -33,11 +33,9 @@ object StreamRun {
     * w7 4.9→3.6, w26 4.3→3.2, w32 5.2→3.8, w35 4.6→3.9, while 2 starts
     * losing parallelism on the heavier drains). 4 keeps enough parallelism
     * for the ≤600k-row gate drains while halving r12's state-store file
-    * churn again. Production jobs size this to the cluster as usual
-    * (override via SPARK_GRAFT_STREAM_PARTITIONS) — the scope here is
-    * ONLY the query-start window of gate drains. */
-  private val StreamShufflePartitions =
-    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "4")
+    * churn again. Production jobs size this to the cluster as usual —
+    * the scope here is ONLY the query-start window of gate drains. */
+  private val StreamShufflePartitions = "4"
 
   /** Scope spark.sql.shuffle.partitions to a streaming query START (state
     * partitioning is captured at start; the conf is restored immediately

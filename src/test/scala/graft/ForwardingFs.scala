@@ -10,7 +10,6 @@ class ForwardingFs(delegate: StoreFs = LocalFs) extends StoreFs {
   override def listNames(dir: String): Seq[String] = {
     before("list", dir); delegate.listNames(dir)
   }
-  override def exists(path: String): Boolean = { before("exists", path); delegate.exists(path) }
   override def deleteRecursively(path: String): Unit = {
     before("delete", path); delegate.deleteRecursively(path)
   }

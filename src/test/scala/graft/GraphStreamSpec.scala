@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.streaming.{AtomicSwap, ChangelogStream, GraphStream}
+import graft.streaming.{BucketedStore, ChangelogStream, GraphStream}
 
 /** Port of the reference's incremental graph scenario
   * (AnalyticsSystemSpec.scala:47-101 / ApiSystemTest): connect(1,2),
@@ -23,7 +23,7 @@ class GraphStreamSpec extends SparkSpec {
         .start().awaitTermination()
     }
     def components(): Map[String, String] =
-      AtomicSwap.read(spark, s"$rootDir/state/components").get
+      BucketedStore.read(spark, s"$rootDir/state/components").get
         .as[(String, String)].collect().toMap
 
     // batch 1: 1-2, 3-4

@@ -50,4 +50,15 @@ class ModuleCallerSpec extends AnyFlatSpec with Matchers {
     withClue(s"modules no other engine or perfbench file references: ${uncalled.mkString(", ")} ")(
       uncalled shouldBe empty)
   }
+
+  "the engine" should "spell a pointer or generation path only in BucketedStore.scala" in {
+    // one commit protocol, one layout: a second pointer format would show
+    // as a `.ptr` or `.gen-` path in some other file's string literals
+    val spelled = scalaFiles(Paths.get("src/main/scala"))
+      .filterNot(_.getFileName.toString == "BucketedStore.scala")
+      .filter(p => commentOrString.findAllIn(Files.readString(p)).exists(m =>
+        m.startsWith("\"") && (m.contains(".ptr") || m.contains(".gen-"))))
+    withClue(s"files with a pointer or generation path: ${spelled.mkString(", ")} ")(
+      spelled shouldBe empty)
+  }
 }

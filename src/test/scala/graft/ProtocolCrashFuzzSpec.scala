@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.state.SecondaryIndex
-import graft.streaming.{AtomicSwap, BucketCache, BucketedStore, LocalFs, StoreFs}
+import graft.streaming.{BucketCache, BucketedStore, LocalFs, StoreFs}
 import org.apache.spark.sql.functions._
 
 /** EXHAUSTIVE crash-point fuzz over the table commits (r14 — generalizing
@@ -24,7 +24,9 @@ import org.apache.spark.sql.functions._
   *   2. HEALING — re-running the same batch cleanly converges the store
   *      to the NEW content (idempotency).
   *
-  * The single-table AtomicSwap.swap is fuzzed the same way. Data writes
+  * The fuzz runs on two store shapes: four buckets with an index, and one
+  * bucket with no index rewritten whole (GraphStream's components,
+  * Changelog.vacuum and compactFiles). Data writes
   * (Spark parquet) are outside the seam; a crash during a FIRST attempt's
   * data write is equivalent to k=0 (nothing committed). A batch RE-RUN's
   * data write is NOT (r14 advice, high): the previous attempt's committed
@@ -42,7 +44,6 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
     var ops = 0
     private def step(): Unit = { ops += 1; if (ops > failAfter) throw new Crash }
     override def listNames(dir: String): Seq[String] = delegate.listNames(dir)
-    override def exists(path: String): Boolean = delegate.exists(path)
     override def readString(path: String): Option[String] = delegate.readString(path)
     override def deleteRecursively(path: String): Unit = {
       step(); delegate.deleteRecursively(path)
@@ -54,18 +55,23 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
 
   private val NumBuckets = 4
 
-  /** One batch: `rows` as every bucket of table `root/t`, and their index
-    * (term = value) in `root/i`, in one commit. */
+  /** One batch in one commit: `rows` as every bucket of table `root/t`
+    * and their index (term = value) in `root/i`; with `oneBucket`, `rows`
+    * as the one bucket of an unindexed `root/t`, rewritten whole. */
   private def writeBatch(
       root: String,
       rows: Seq[(Int, String)],
       batchId: Long,
-      fs: StoreFs): Unit = {
+      fs: StoreFs,
+      oneBucket: Boolean = false): Unit = {
     val t = rows.toDF("key", "value")
-    BucketedStore.writeBuckets(t, BucketedStore.bucketCol(Seq("key"), NumBuckets),
-      s"$root/t", touched = (0 until NumBuckets).toSeq, batchId = batchId,
-      arity = NumBuckets, fs = fs,
-      index = Some((SecondaryIndex.build(t, Seq("key"), array(col("value"))), s"$root/i")))
+    if (oneBucket)
+      BucketedStore.writeBuckets(t, lit(0), s"$root/t", Seq(0), batchId, arity = 1, fs)
+    else
+      BucketedStore.writeBuckets(t, BucketedStore.bucketCol(Seq("key"), NumBuckets),
+        s"$root/t", touched = (0 until NumBuckets).toSeq, batchId = batchId,
+        arity = NumBuckets, fs = fs,
+        index = Some((SecondaryIndex.build(t, Seq("key"), array(col("value"))), s"$root/i")))
   }
 
   /** The table (key → value) and the index (term → keys) as read back. */
@@ -81,40 +87,43 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
   private val keys = (1 to 12).toSeq
   private val oldRows = keys.map(k => (k, s"old$k"))
   private val newRows = keys.map(k => (k, s"new$k"))
-  private def stateOf(rows: Seq[(Int, String)]) =
-    (rows.toMap, rows.map { case (k, v) => v -> Set(k) }.toMap)
+  private def stateOf(rows: Seq[(Int, String)], oneBucket: Boolean = false) =
+    (rows.toMap, if (oneBucket) Map.empty else rows.map { case (k, v) => v -> Set(k) }.toMap)
 
   "the manifest protocol" should "be batch-atomic over table and index and re-run-healable at EVERY crash point" in {
     val base: StoreFs = LocalFs
     keys.map(k => BucketedStore.bucketOf(Seq(k), NumBuckets)).toSet should have size
       NumBuckets.toLong
 
-    // total mutations of batch 2 alone
-    val proto = Files.createTempDirectory("fz-probe").toFile.getAbsolutePath
-    writeBatch(proto, oldRows, 1L, base)
-    val counter = new CrashFs(base, Int.MaxValue)
-    writeBatch(proto, newRows, 2L, counter)
-    val batchOps = counter.ops
-    batchOps should be > 3
+    for (oneBucket <- Seq(false, true)) {
+      // total mutations of batch 2 alone
+      val proto = Files.createTempDirectory("fz-probe").toFile.getAbsolutePath
+      writeBatch(proto, oldRows, 1L, base, oneBucket)
+      val counter = new CrashFs(base, Int.MaxValue)
+      writeBatch(proto, newRows, 2L, counter, oneBucket)
+      val batchOps = counter.ops
+      batchOps should be > 3
 
-    val seen = for (k <- 0 until batchOps) yield {
-      val root = Files.createTempDirectory(s"fz-$k").toFile.getAbsolutePath
-      writeBatch(root, oldRows, 1L, base)
-      intercept[Crash] { writeBatch(root, newRows, 2L, new CrashFs(base, k)) }
+      val (before, after) = (stateOf(oldRows, oneBucket), stateOf(newRows, oneBucket))
+      val seen = for (k <- 0 until batchOps) yield {
+        val root = Files.createTempDirectory(s"fz-$k").toFile.getAbsolutePath
+        writeBatch(root, oldRows, 1L, base, oneBucket)
+        intercept[Crash] { writeBatch(root, newRows, 2L, new CrashFs(base, k), oneBucket) }
 
-      // 1. batch atomicity, read through the CLEAN fs
-      val state = readState(root, base)
-      withClue(s"k=$k table or index torn: $state ") {
-        Set(stateOf(oldRows), stateOf(newRows)) should contain(state)
+        // 1. batch atomicity, read through the CLEAN fs
+        val state = readState(root, base)
+        withClue(s"oneBucket=$oneBucket k=$k table or index torn: $state ") {
+          Set(before, after) should contain(state)
+        }
+
+        // 2. healing: the checkpointed batch re-runs and converges to NEW
+        writeBatch(root, newRows, 2L, base, oneBucket)
+        readState(root, base) shouldBe after
+        state == after
       }
-
-      // 2. healing: the checkpointed batch re-runs and converges to NEW
-      writeBatch(root, newRows, 2L, base)
-      readState(root, base) shouldBe stateOf(newRows)
-      state == stateOf(newRows)
+      // the fuzz visited both sides of the one commit point
+      withClue(s"oneBucket=$oneBucket ")(seen.toSet shouldBe Set(false, true))
     }
-    // the fuzz visited both sides of the one commit point
-    seen.toSet shouldBe Set(false, true)
   }
 
   it should "survive every crash point of a batch RE-RUN after a maximally-committed first crash" in {
@@ -188,32 +197,6 @@ class ProtocolCrashFuzzSpec extends SparkSpec {
       try files.iterator.asScala.map(_.getFileName.toString)
         .filter(n => n == ".buckets" || n.matches("b\\d+\\.ptr")).toSeq shouldBe empty
       finally files.close()
-    }
-  }
-
-  "AtomicSwap.swap" should "leave the table exactly OLD or exactly NEW at every crash point" in {
-    val proto = Files.createTempDirectory("fzs-probe").toFile.getAbsolutePath
-    AtomicSwap.swap(Seq("A").toDF("v"), s"$proto/t", 1L)
-    val counter = new CrashFs(LocalFs, Int.MaxValue)
-    AtomicSwap.swap(Seq("B").toDF("v"), s"$proto/t", 2L, counter)
-    val batchOps = counter.ops
-    batchOps should be > 1
-    for (k <- 0 until batchOps) {
-      val root = Files.createTempDirectory(s"fzs-$k").toFile.getAbsolutePath
-      val t = s"$root/t"
-      AtomicSwap.swap(Seq("A").toDF("v"), t, 1L)
-      intercept[Crash] {
-        AtomicSwap.swap(Seq("B").toDF("v"), t, 2L, new CrashFs(LocalFs, k))
-      }
-      val table = AtomicSwap.read(spark, t)
-      withClue(s"k=$k: table unreadable after crash ") {
-        table shouldBe defined
-      }
-      val v = table.get.as[String].head()
-      withClue(s"k=$k: ") { Set("A", "B") should contain(v) }
-      // healing
-      AtomicSwap.swap(Seq("B").toDF("v"), t, 2L)
-      AtomicSwap.read(spark, t).get.as[String].head() shouldBe "B"
     }
   }
 }

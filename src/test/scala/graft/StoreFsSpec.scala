@@ -3,112 +3,142 @@ package graft
 import java.io.File
 import java.nio.file.Files
 
-import graft.streaming.{AtomicSwap, BucketedStore, LocalFs, StoreFs}
+import graft.streaming.{BucketCache, BucketedStore, LocalFs, StoreFs}
+import org.apache.spark.sql.functions.lit
 
 /** The pointer-file (manifest) table commit over the [[StoreFs]] seam
-  * (r13 verdict #1): the crash windows of [[AtomicSwap]]'s one protocol,
-  * the passive read, and the bucketed store's metadata guards. The seam
-  * has no rename, so no commit can issue one — the protocol needs nothing
-  * an object store (S3 model: rename is copy+delete, never atomic) lacks.
-  * (Spark's parquet data writes go through Hadoop, outside the seam — on
-  * a real object store that's the cloud committer's job.) */
+  * (r13 verdict #1): the crash windows of the one commit protocol, shown on
+  * a one-bucket store rewritten whole (the shape of GraphStream's
+  * components and Changelog.vacuum), the passive read, and the bucketed
+  * store's metadata guards. The seam has no rename, so no commit can issue
+  * one — the protocol needs nothing an object store (S3 model: rename is
+  * copy+delete, never atomic) lacks. (Spark's parquet data writes go
+  * through Hadoop, outside the seam — on a real object store that's the
+  * cloud committer's job.) */
 class StoreFsSpec extends SparkSpec {
   import spark.implicits._
 
-  private def write(path: String, v: String): Unit =
-    AtomicSwap.swap(Seq(v).toDF("v"), path, batchId = 1)
-  private def readV(path: String): String = {
-    val df = AtomicSwap.read(spark, path)
+  private final class Crash extends RuntimeException("injected crash")
+
+  /** Commits `v` as the whole content of the one-bucket store `t`. */
+  private def write(t: String, v: String, batchId: Long, fs: StoreFs = LocalFs): Unit =
+    BucketedStore.writeBuckets(Seq(v).toDF("v"), lit(0), t, Seq(0), batchId, arity = 1, fs)
+  private def readV(t: String, fs: StoreFs = LocalFs): String = {
+    val df = BucketedStore.read(spark, t, fs)
     df shouldBe defined
     df.get.as[String].head()
   }
+  private def names(t: String): Seq[String] = new File(t).listFiles().map(_.getName).sorted.toSeq
+
+  /** A write of `v` that crashes at the pointer flip (`op = "write"`: the
+    * staging and the new manifest are on disk) or at the first delete
+    * after the flip (`op = "delete"`). */
+  private def crashedWrite(t: String, v: String, batchId: Long, op: String): Unit = {
+    val fs = new ForwardingFs {
+      override protected def before(o: String, path: String): Unit =
+        if (o == op && (op != "write" || path == BucketedStore.pointer(t))) throw new Crash
+    }
+    intercept[Crash](write(t, v, batchId, fs))
+  }
+
+  /** `t` holds exactly the pointer, the manifest it names and that
+    * manifest's one staging, all written by batch `batchId`. */
+  private def onlyLive(t: String, batchId: Long): Unit = {
+    val ns = names(t)
+    ns should have size 3
+    ns(0) should startWith(s".staging-$batchId-")
+    ns(1) should startWith(s"_manifest-$batchId-")
+    ns(2) shouldBe "_manifest.ptr"
+    LocalFs.readString(BucketedStore.pointer(t)) shouldBe Some(s"$t/${ns(1)}")
+  }
+
+  /** Fails on any metadata mutation: reads must be passive. */
+  private final class NoMutationFs extends ForwardingFs {
+    override protected def before(op: String, path: String): Unit =
+      if (op == "delete" || op == "write")
+        throw new IllegalStateException(s"a read issued a mutation: $op $path")
+  }
 
   "manifest swap" should "replace the table content and sweep the superseded generation, never renaming" in {
-    val root = Files.createTempDirectory("mfs1").toFile.getAbsolutePath
-    val t = s"$root/table"
-    write(t, "v1")
+    val t = Files.createTempDirectory("mfs1").toFile.getAbsolutePath
+    write(t, "v1", batchId = 1)
     readV(t) shouldBe "v1"
-    AtomicSwap.swap(Seq("v2").toDF("v"), t, batchId = 2)
+    write(t, "v2", batchId = 2)
     readV(t) shouldBe "v2"
-    // superseded gen-1 deleted at commit; only gen-2 + the pointer remain
-    Generations.onlyLive(root, "table", batchId = 2)
+    // batch 1's staging and manifest deleted at commit
+    onlyLive(t, batchId = 2)
   }
 
   it should "leave the OLD generation live when a crash hits before the pointer flip, and sweep the orphan" in {
-    val root = Files.createTempDirectory("mfs2").toFile.getAbsolutePath
-    val t = s"$root/table"
-    write(t, "v1")
-    // simulate the crash window: new generation fully written, pointer
+    val t = Files.createTempDirectory("mfs2").toFile.getAbsolutePath
+    write(t, "v1", batchId = 1)
+    // the crash window: new staging and manifest fully written, pointer
     // never flipped
-    Seq("v2-uncommitted").toDF("v").write.parquet(s"$t.gen-9")
-    AtomicSwap.recover(t) shouldBe true
+    crashedWrite(t, "v2-uncommitted", batchId = 9, op = "write")
+    names(t).count(_.startsWith(".staging-")) shouldBe 2
     readV(t) shouldBe "v1" // prior state intact, nothing lost
-    Generations.onlyLive(root, "table", batchId = 1) // orphan gen-9 swept
+    // the writer is the recovery entry: its next commit sweeps the orphan
+    write(t, "v3", batchId = 3)
+    readV(t) shouldBe "v3"
+    onlyLive(t, batchId = 3)
   }
 
   it should "serve the NEW generation when a crash hits after the flip but before the old delete" in {
-    val root = Files.createTempDirectory("mfs3").toFile.getAbsolutePath
-    val t = s"$root/table"
-    // both generations on disk, pointer already flipped to gen-2
-    Seq("v1").toDF("v").write.parquet(s"$t.gen-1")
-    Seq("v2").toDF("v").write.parquet(s"$t.gen-2")
-    LocalFs.writeString(s"$t.ptr", s"$t.gen-2")
-    readV(t) shouldBe "v2"
-    // resolve (a READ) is passive since r15 — the superseded gen-1 stays
-    // until the recovery entry sweeps it (a read-side sweep could delete
-    // a concurrent writer's not-yet-committed generation)
-    new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
-      Seq("table.gen-1", "table.gen-2", "table.ptr")
-    AtomicSwap.recover(t) shouldBe true
-    new File(root).listFiles().map(_.getName).sorted.toSeq shouldBe
-      Seq("table.gen-2", "table.ptr") // superseded gen-1 swept on recover
+    val t = Files.createTempDirectory("mfs3").toFile.getAbsolutePath
+    write(t, "v1", batchId = 1)
+    crashedWrite(t, "v2", batchId = 2, op = "delete")
+    readV(t, new NoMutationFs) shouldBe "v2"
+    // the read is passive: the superseded generation stays until the next
+    // commit sweeps it (a read-side sweep could delete a concurrent
+    // writer's not-yet-committed staging)
+    names(t).count(_.startsWith(".staging-")) shouldBe 2
+    names(t).count(_.startsWith("_manifest-")) shouldBe 2
+    write(t, "v3", batchId = 3)
+    onlyLive(t, batchId = 3)
   }
 
   it should "report a never-committed table as unrecoverable and sweep uncommitted generations on recover" in {
-    val root = Files.createTempDirectory("mfs4").toFile.getAbsolutePath
-    val t = s"$root/table"
-    AtomicSwap.recover(t) shouldBe false
-    // a generation with no pointer is an uncommitted orphan; a passive
-    // resolve leaves it (forensics/writer-race safety), recover sweeps it
-    Seq("junk").toDF("v").write.parquet(s"$t.gen-3")
-    AtomicSwap.resolve(t) shouldBe None
-    new File(s"$t.gen-3").isDirectory shouldBe true
-    AtomicSwap.recover(t) shouldBe false
-    new File(root).listFiles() shouldBe empty
+    val t = Files.createTempDirectory("mfs4").toFile.getAbsolutePath
+    BucketedStore.read(spark, t) shouldBe None
+    // a crashed first attempt leaves a staging and a manifest no pointer
+    // names: a passive read leaves them (forensics/writer-race safety),
+    // the first commit sweeps them
+    crashedWrite(t, "junk", batchId = 3, op = "write")
+    BucketedStore.read(spark, t, new NoMutationFs) shouldBe None
+    names(t).count(_.startsWith(".staging-")) shouldBe 1
+    write(t, "v1", batchId = 1)
+    readV(t) shouldBe "v1"
+    onlyLive(t, batchId = 1)
   }
 
   it should "resolve with ZERO metadata mutations (passive reads)" in {
     // a reader concurrent with the single writer must never delete the
-    // writer's fully-written-but-not-yet-committed generation (r14 advice,
-    // medium): any mutation issued by resolve throws here
-    final class NoMutationFs(delegate: StoreFs) extends StoreFs {
-      private def mutation(op: String): Nothing =
-        throw new IllegalStateException(s"resolve issued a mutation: $op")
-      override def listNames(dir: String): Seq[String] = delegate.listNames(dir)
-      override def exists(path: String): Boolean = delegate.exists(path)
-      override def readString(path: String): Option[String] = delegate.readString(path)
-      override def deleteRecursively(path: String): Unit = mutation(s"delete $path")
-      override def writeString(path: String, content: String): Unit =
-        mutation(s"writeString $path")
-    }
-    // live gen + a writer's in-flight (unreferenced) gen
-    val root = Files.createTempDirectory("mfs-passive").toFile.getAbsolutePath
-    val t = s"$root/table"
-    write(t, "v1")
-    Seq("in-flight").toDF("v").write.parquet(s"$t.gen-7") // writer mid-swap
-    AtomicSwap.resolve(t, new NoMutationFs(LocalFs)) shouldBe defined
-    AtomicSwap.read(spark, t, new NoMutationFs(LocalFs)).get
-      .as[String].head() shouldBe "v1"
-    new File(s"$t.gen-7").isDirectory shouldBe true // the in-flight gen survived the read
+    // writer's fully-written-but-not-yet-committed staging (r14 advice,
+    // medium): any mutation issued by a read throws here
+    val t = Files.createTempDirectory("mfs-passive").toFile.getAbsolutePath
+    write(t, "v1", batchId = 1)
+    crashedWrite(t, "in-flight", batchId = 7, op = "write") // writer mid-commit
+    val before = names(t)
+    BucketedStore.manifest(t, new NoMutationFs) shouldBe defined
+    readV(t, new NoMutationFs) shouldBe "v1"
+    new BucketCache(1L << 20).committed(t, new NoMutationFs)(_.gens(t).keySet) shouldBe Some(Set(0))
+    names(t) shouldBe before // the in-flight staging survived the reads
   }
 
   it should "not sweep data when the pointer's target is missing (forensics, not destruction)" in {
-    val root = Files.createTempDirectory("mfs5").toFile.getAbsolutePath
-    val t = s"$root/table"
-    Seq("v1").toDF("v").write.parquet(s"$t.gen-1")
-    LocalFs.writeString(s"$t.ptr", s"$t.gen-99") // dangling pointer
-    AtomicSwap.resolve(t) shouldBe None
-    new File(s"$t.gen-1").isDirectory shouldBe true // left in place
+    val t = Files.createTempDirectory("mfs5").toFile.getAbsolutePath
+    write(t, "v1", batchId = 1)
+    LocalFs.writeString(BucketedStore.pointer(t), s"$t/_manifest-99-gone") // dangling pointer
+    val before = names(t)
+    an[IllegalStateException] should be thrownBy BucketedStore.read(spark, t)
+    // the writer refuses before it stages, sweeps or writes anything
+    val calls = scala.collection.mutable.ArrayBuffer.empty[String]
+    val fs = new ForwardingFs {
+      override protected def before(op: String, path: String): Unit = calls += op
+    }
+    an[IllegalStateException] should be thrownBy write(t, "v2", batchId = 2, fs)
+    calls.toSet shouldBe Set("read")
+    names(t) shouldBe before // left in place
   }
 
   "writeBuckets" should "refuse a bucket-count mismatch against the persisted arity" in {
