@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.functions._
 
@@ -128,12 +129,16 @@ object GraftFunctions {
         c => PqSubDistortions(c(0), c(1), litLongCube("graft_pq_sub_distortions", c(2)),
           litInt("graft_pq_sub_distortions", c(3))))))
 
-  /** Register expression-backed functions for SQL use (idempotent; called
-    * from Tables so every query session has them). */
-  def register(spark: SparkSession): Unit =
+  /** Register expression-backed functions for SQL use: installs only the
+    * ones the session's registry does not hold yet, so the per-read calls
+    * from Tables cost a lookup each and replace nothing. */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     builders.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 
   /** Codegen'd integer dot product over two `array<bigint>` columns. */
   def ldot(a: Column, b: Column): Column = call_function("graft_ldot", a, b)

@@ -1,7 +1,6 @@
 package graft.queries
 
 import graft.core.{Changelog, Tables, TimeRange}
-import graft.functions.GraftFunctions
 import graft.functions.GraftFunctions._
 import graft.multimodal.Multimodal
 import graft.operators._
@@ -327,7 +326,6 @@ private[graft] object CoreQueries1 {
     // J1 murmur2 key routing (Kafka-parity partitioner; no SQL oracle —
     // checked rows-only here, exact test vectors in Murmur2Spec)
     "q18_route_partition" -> ((s, d) => {
-      GraftFunctions.register(s)
       val ev = Tables.events(s, d)
       ev.select(col("user_id")).distinct()
         .withColumn("partition", kafkaPartition(col("user_id").cast("string"), 32))

@@ -1,12 +1,13 @@
 package graft.queries
 
-import graft.core.{Changelog, Tables}
+import graft.core.Tables
 import graft.functions.GraftFunctions.{ldot, md5Hash60, quantize1000}
 import graft.operators.{Similarity, Sketches, TextAnalysis}
-import graft.streaming.{EosSink, StatefulOps, StreamingSketches, StreamRun,
-  TwsEvent, TwsOps, TwsTimedEvent}
+import graft.streaming.{BucketedStore, ChangelogStream, StatefulOps, StreamingSketches,
+  StreamRun, TwsEvent, TwsOps, TwsTimedEvent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import Support._
 
@@ -175,13 +176,13 @@ private[graft] object StreamingQueries {
 
     // the reference's FULL stream → state → write-back loop hash-gated
     // (GatewayStream's commit cycle, S6+S10 promoted from spec-only):
-    // per-user profile state in update mode streams through the EOS file
-    // sink as a batchId-keyed upsert changelog (torn batches invisible,
-    // replays no-ops), and the committed view compacts last-writer-wins
-    // per user — by construction equal to the batch aggregate, which is
-    // exactly what the oracle hashes. Update mode emits one row per
-    // changed key per micro-batch, so (user, batch) is unique and the
-    // batch id is the compaction recency.
+    // per-user profile state in update mode drains through the bucketed
+    // changelog writer as an upsert changelog (one manifest flip per
+    // batch; a re-run batch re-commits idempotently), latest-per-user by
+    // n_events — by construction equal to the batch aggregate, which is
+    // exactly what the oracle hashes. Update mode emits a user only in a
+    // batch that added events for it, so its count strictly increases
+    // from one emission to the next and is the recency.
     "w9_stream_writeback" -> ((s, d) => {
       val tmpPath = java.nio.file.Files.createTempDirectory("graft_w9_")
       Support.deleteOnExit(tmpPath)
@@ -189,13 +190,10 @@ private[graft] object StreamingQueries {
       val ev = Tables.eventsStream(s, d)
       val agg = ev.groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), qSum(col("value"), "sum_value"))
-      EosSink.writer(agg, s"$tmp/out", s"$tmp/ckpt", outputMode = "update",
-          tag = (b, id) => b.withColumn("__batch", lit(id)))
-        .start().awaitTermination()
-      Changelog.compact(EosSink.committedView(s, s"$tmp/out"),
-          Seq("user_id"), "__batch")
-        .drop("__batch")
-        .orderBy("user_id")
+      ChangelogStream.materializeLatestBucketed(agg, Seq("user_id"), "n_events",
+          s"$tmp/t", s"$tmp/ckpt")
+        .outputMode("update").start().awaitTermination()
+      BucketedStore.read(s, s"$tmp/t").get.orderBy("user_id")
     }),
 
     // CHAINED stateful aggregations in ONE streaming query (Spark's
@@ -327,11 +325,12 @@ private[graft] object StreamingQueries {
     // the FULL streaming curation loop in one topology — the LLM-data
     // pipeline's ingest path end to end: row-local quality gate (t2's
     // keep rule, zero state) → streaming content-hash dedup (distinct-
-    // pair-sized state) → exactly-once file sink (batchId-keyed idempotent
-    // writes, torn batches invisible) → compacted manifest off the
-    // committed view. The oracle is the batch composition: per-language
-    // count of DISTINCT kept texts — gate, dedup and EOS plumbing all
-    // inside the hash gate at once.
+    // pair-sized state) → Spark's exactly-once file sink (its
+    // `_spark_metadata` log names only committed files, and a batch id it
+    // already committed is skipped) → per-language counts off the
+    // committed files. The oracle is the batch composition: per-language
+    // count of DISTINCT kept texts — gate, dedup and sink all inside the
+    // hash gate at once.
     "w16_stream_curation" -> ((s, d) => {
       val tmpPath = java.nio.file.Files.createTempDirectory("graft_w16_")
       Support.deleteOnExit(tmpPath)
@@ -340,8 +339,9 @@ private[graft] object StreamingQueries {
         .filter(TextAnalysis.keepCol(col("text")))
         .select(col("lang"), md5(col("text")).as("h"))
         .dropDuplicates("lang", "h")
-      EosSink.writer(kept, s"$tmp/out", s"$tmp/ckpt").start().awaitTermination()
-      EosSink.committedView(s, s"$tmp/out")
+      kept.writeStream.format("parquet").option("checkpointLocation", s"$tmp/ckpt")
+        .trigger(Trigger.AvailableNow()).start(s"$tmp/out").awaitTermination()
+      s.read.parquet(s"$tmp/out")
         .groupBy("lang").agg(count(lit(1)).as("n_unique_kept"))
         .orderBy("lang")
     }),
@@ -1052,7 +1052,7 @@ private[graft] object StreamingQueries {
 
     // the write-back loop lands on the same per-user profile as w2 — the
     // oracle is intentionally identical; what w9 adds to the hash gate is
-    // the EOS sink + compaction path the profile travels through
+    // the bucketed changelog writer the profile travels through
     "w9_stream_writeback" ->
       s"""SELECT user_id, COUNT(*) AS n_events,
          |  ${qSumSql("value", "sum_value")}

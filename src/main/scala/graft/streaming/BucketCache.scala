@@ -6,7 +6,6 @@ import scala.util.{Failure, Try}
 import scala.util.chaining._
 
 import org.apache.spark.sql.{Row, SparkSession}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SizeEstimator
 
 import BucketedStore.Manifest
@@ -34,12 +33,13 @@ import BucketedStore.Manifest
   * on its manifest afterwards read its generation whole.
   *
   * The writer keeps table entries fresh ([[publish]]): before its flip it
-  * builds, from the final rows of the keys its batch wrote, the entry of
-  * each touched bucket's new generation, and right after the flip installs
-  * them and the new manifest under one lock, without a load — the
-  * reference's write-through MemStore (KVStoreLocal.put:477-513). The
-  * pointer stays the truth: a reader that misses a publication, or runs in
-  * another JVM, loads.
+  * decodes the whole new generation of each touched bucket the cache
+  * holds, and right after the flip installs those entries and the new
+  * manifest under one lock, without a load — the reference's
+  * write-through MemStore (KVStoreLocal.put:477-513). Every entry is the
+  * decode of exactly one committed generation, whoever built it. The
+  * pointer stays the truth: a reader that misses a publication, or runs
+  * in another JVM, loads.
   *
   * Entries are sized with Spark's SizeEstimator when stored and evicted
   * whole, least recently used first, so the held total never exceeds
@@ -58,10 +58,11 @@ final class BucketCache(val maxBytes: Long) {
   val hits = new AtomicLong
   val loads = new AtomicLong
   val evictions = new AtomicLong
-  /** Entries the writer moved to a generation it committed, with no load. */
+  /** Entries the writer installed for a generation it committed, with no
+    * load. */
   val published = new AtomicLong
-  /** Entries a publication dropped: held for neither side of the flip, or
-    * not rebuildable within the byte bound. */
+  /** Entries a publication dropped: over the byte bound, or for a
+    * generation its manifest no longer names. */
   val invalidated = new AtomicLong
 
   /** Estimated bytes of the entries held now; never above `maxBytes`. */
@@ -110,58 +111,41 @@ final class BucketCache(val maxBytes: Long) {
     }.getOrElse(Map.empty)
 
   /** Whether an entry of bucket `id` of table `root` is held, for any
-    * generation: whether a publication could rebuild one. */
+    * generation: whether a publication should install its next one. */
   def holds(root: String, id: Int, keyCols: Seq[String]): Boolean =
     synchronized(entries.containsKey(Key("table", root, id, keyCols)))
 
-  /** The writer's hand-off for its commit of `next` over `prev` into table
-    * `root`, built BEFORE the flip; the returned install runs right AFTER
-    * it. `rows` are the final rows, tombstoned ones included, of every key
-    * the batch wrote, by bucket; None when the writer could not collect
-    * them. Per bucket whose generation changed, a compare-and-set on
-    * identity:
-    *
-    *   - an entry for the old generation becomes the entry for the new
-    *     one: the batch's keys are dropped from it and `rows` decoded into
-    *     it as a load decodes;
-    *   - an entry already for the new one (a reader loaded it first) stays;
-    *   - any other entry is dropped, and no entry is ever created.
-    *
-    * The rows are final, so no merge rule is repeated here. A publication
-    * that cannot keep the entry within `maxBytes`, or whose rows' schema
-    * differs from the entry's, drops it instead. The install also hands
-    * the cache `next`, all under one lock. */
-  def publish(prev: Option[Manifest], next: Manifest, root: String,
-      keyCols: Seq[String], rows: Option[Map[Int, Seq[Row]]]): () => Unit = {
-    val before = prev.fold(Map.empty[Int, String])(_.gens(root))
-    val after = next.gens(root)
-    val moves = (before.keySet ++ after.keySet).filter(id => before.get(id) != after.get(id))
-      .flatMap { id =>
-        val key = Key("table", root, id, keyCols)
-        synchronized(Option(entries.get(key))).filterNot(e => after.get(id).contains(e.id))
-          .map { e =>
-            val rebuilt = for {
-              to <- after.get(id)
-              byId <- rows if before.get(id).contains(e.id)
-              rs = byId.getOrElse(id, Nil)
-              base = e.value.asInstanceOf[Map[Seq[Any], Row]]
-              if rs.headOption.forall(r => base.valuesIterator.nextOption()
-                .forall(b => shape(b.schema) == shape(r.schema)))
-            } yield {
-              val keyIdx = rs.headOption.map(r => keyCols.map(r.fieldIndex)).getOrElse(Nil)
-              val value = base -- rs.map(r => keyIdx.map(r.get)) ++ live(rs, keyCols)
-              new Entry(to, value, SizeEstimator.estimate(value))
-            }
-            (key, e, rebuilt)
-          }
-      }
+  /** The writer's hand-off for its commit of `next` into table `root`,
+    * built BEFORE the flip; the returned install runs right AFTER it.
+    * `rows` are the rows of each bucket's generation in `next`, by bucket
+    * id, decoded here as a load decodes them. The install hands the cache
+    * `next` and, under one lock with no filesystem call, leaves every
+    * bucket of `root` holding its generation in `next` or no entry: a
+    * built entry replaces any other (one a reader already loaded for the
+    * same generation stays), and an entry over `maxBytes`, or for a
+    * generation `next` no longer names, is dropped. So every entry is the
+    * decode of one committed generation, whether loaded or installed. */
+  def publish(next: Manifest, root: String, keyCols: Seq[String],
+      rows: Map[Int, Seq[Row]]): () => Unit = {
+    val gens = next.gens(root)
+    val built = rows.map { case (id, rs) =>
+      // an unchanged row keeps the held entry's Row object, so a batch
+      // does not churn a whole bucket's rows through the heap
+      val cur = synchronized(Option(entries.get(Key("table", root, id, keyCols))))
+        .fold(Map.empty[Seq[Any], Row])(_.value.asInstanceOf[Map[Seq[Any], Row]])
+      val value = live(rs, keyCols).map { case (k, r) => k -> cur.get(k).filter(_ == r).getOrElse(r) }
+      id -> new Entry(gens(id), value, SizeEstimator.estimate(value))
+    }
     () => synchronized {
       manifests.put(BucketedStore.pointer(root), next)
-      moves.foreach { case (key, e, rebuilt) =>
-        if (entries.get(key) eq e) { // nothing stored since the look above
-          if (rebuilt.exists(put(key, _))) published.incrementAndGet()
-          else {
-            Option(entries.remove(key)).foreach(old => held -= old.bytes)
+      for (id <- 0 until next.arity; key = Key("table", root, id, keyCols)) {
+        val cur = Option(entries.get(key))
+        built.get(id) match {
+          case Some(e) if !cur.exists(_.id == e.id) =>
+            if (put(key, e)) published.incrementAndGet() else invalidated.incrementAndGet()
+          case _ => cur.filterNot(c => gens.get(id).contains(c.id)).foreach { c =>
+            entries.remove(key)
+            held -= c.bytes
             invalidated.incrementAndGet()
           }
         }
@@ -240,11 +224,6 @@ object BucketCache {
       rows.iterator.filterNot(row => tomb.exists(i => row.isNullAt(i) || row.getBoolean(i)))
         .map(row => keyIdx.map(row.get) -> row).toMap
     }
-
-  /** Field names and types, nullability aside: what a published row must
-    * share with the rows an entry holds. */
-  private def shape(s: StructType): Seq[(String, String)] =
-    s.fields.toSeq.map(f => f.name -> f.dataType.catalogString)
 
   private final case class Key(kind: String, root: String, id: Int, keyCols: Seq[String])
   private final class Entry(val id: String, val value: AnyRef, val bytes: Long)

@@ -165,8 +165,8 @@ object BucketedStore {
     * this attempt, whose `__b=<id>` subdirs are the new generations (a
     * touched bucket with no rows gets none); then the new manifest is
     * written under a unique name and `_manifest.ptr` names it. `publish`
-    * sees the previous and the new manifest before the flip, and what it
-    * returns runs right after the flip, before anything is deleted; then
+    * sees the new manifest before the flip, and what it returns runs
+    * right after the flip, before anything is deleted; then
     * the generations only the previous manifest named, and every staging
     * and manifest the new one does not name (crash leftovers included),
     * go. Refuses an arity other than the store's: rows would strand in
@@ -181,7 +181,7 @@ object BucketedStore {
       arity: Int,
       fs: StoreFs = LocalFs,
       index: Option[(DataFrame, String)] = None,
-      publish: (Option[Manifest], Manifest) => () => Unit = (_, _) => () => ()): Manifest = {
+      publish: Manifest => () => Unit = _ => () => ()): Manifest = {
     val prev = manifest(root, fs)
     prev.foreach(m => require(m.arity == arity,
       s"bucket-count mismatch for $root: store has ${m.arity}, caller passed " +
@@ -198,7 +198,7 @@ object BucketedStore {
       parts ++ staged)
     index.map(_._2).filterNot(parts.contains)
       .foreach(r => fs.writeString(s"$r/_manifest.ref", pointer(root)))
-    val install = publish(prev, next)
+    val install = publish(next)
     fs.writeString(next.path, next.render)
     fs.writeString(pointer(root), next.path)
     install()

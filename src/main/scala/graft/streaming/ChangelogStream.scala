@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.SizeEstimator
 
 /** Streaming changelog ingestion & materialization.
   *
@@ -107,10 +108,11 @@ object ChangelogStream {
     *      row-local function of that bucket's latest rows),
     *   4. commits table and index with ONE manifest flip
     *      ([[BucketedStore.writeBuckets]]), so a reader never sees one a
-    *      batch ahead of the other, and installs the touched table buckets
-    *      into `cache` right after it (the final rows of the batch's keys,
-    *      collected before: [[BucketCache.publish]]), so a read after the
-    *      commit runs no Spark load.
+    *      batch ahead of the other, and right after it installs into
+    *      `cache` the new generation of each touched table bucket the cache
+    *      holds (its rows, collected from the compaction before the flip:
+    *      [[BucketCache.publish]]), so a read after the commit runs no
+    *      Spark load.
     *
     * Per-batch work is O(batch + touched-bucket rows), never O(table) —
     * the reference's incremental CDC index maintenance
@@ -198,9 +200,7 @@ object ChangelogStream {
     val bexpr = BucketedStore.bucketCol(keyCols, numBuckets)
     // the batch's keys with their bucket ids: one narrow job, no shuffle
     val keyed = batch.select(keyCols.map(col) :+ bexpr.cast("int"): _*).collect()
-    val bucketOfKey =
-      keyed.iterator.map(r => r.toSeq.init -> r.getInt(keyCols.size)).toMap
-    val touched = bucketOfKey.values.toSeq.distinct.sorted // ≤ numBuckets ids
+    val touched = keyed.map(_.getInt(keyCols.size)).distinct.sorted.toSeq // ≤ numBuckets ids
     if (touched.nonEmpty) {
       val prev = BucketedStore.manifest(tablePath, fs)
       checkKeyTypes(batch, keyCols, prev.flatMap(_.parts.get(tablePath)).map(_.schema))
@@ -211,18 +211,29 @@ object ChangelogStream {
         rowsRead.fold(e)(o => e.observe(o, count(lit(1)).as("rows")))
           .unionByName(batch, allowMissingColumns = true)
       }
-      // checkpointed: read again by the table and index stagings, and it
-      // cuts lineage, so the index never reads through the table's files
+      // checkpointed: read again by the table and index stagings and the
+      // publication, and it cuts lineage, so the index never reads
+      // through the table's files
       val latest = graft.core.Changelog
         .compact(all, keyCols, tsCol, tieBreakCols).localCheckpoint(true)
-      val published = publishable(latest, keyCols, bucketOfKey, tablePath, cache)
+      // the whole new content of each touched bucket the cache holds, by
+      // bucket: one narrow job; no job when no such bucket is held, or when
+      // the batch's keys alone exceed the cache's bound (the rows would too).
+      // The ids ride as one array literal, so every batch runs the same
+      // generated code (an `isin` inlines them: each new id set compiles)
+      val held = touched.filter(cache.holds(tablePath, _, keyCols))
+      val published =
+        if (held.isEmpty || SizeEstimator.estimate(keyed) > cache.maxBytes) Map.empty[Int, Seq[Row]]
+        else latest.where(array_contains(typedLit(held.toArray), bexpr))
+          .select(bexpr.cast("int"), struct(col("*")))
+          .collect().toSeq.groupMap(_.getInt(0))(_.getStruct(1))
       // table and index are staged in full, then committed by ONE flip, so
       // no reader ever sees one of them a batch ahead of the other
       val next = BucketedStore.writeBuckets(latest, bexpr, tablePath, touched, batchId,
         numBuckets, fs, index.map { case (indexFn, indexPath) =>
           (graft.state.SecondaryIndex.build(latest.filter(!col("tombstone")), keyCols, indexFn),
             indexPath)
-        }, (from, to) => cache.publish(from, to, tablePath, keyCols, published))
+        }, cache.publish(_, tablePath, keyCols, published))
       stats.foreach(_ += BucketBatchStats(batchId, keyed.length,
         rowsRead.fold(0L)(_.get("rows").asInstanceOf[Long]), touched.size, numBuckets,
         next.scan(spark, tablePath, next.gens(tablePath).keys.toSeq).count()))
@@ -243,23 +254,5 @@ object ChangelogStream {
       if (b != t) throw new IllegalArgumentException(
         s"changelog key type mismatch on '$c': batch $b vs stored $t " +
           "— the murmur3 route would be wrong")
-    }
-
-  /** The final rows of the batch's keys in `latest`, by bucket id, for
-    * [[BucketCache.publish]]: one narrow job over the checkpointed
-    * compaction. None, and the touched entries are then dropped, not
-    * rebuilt, when the cache holds no touched bucket of `tablePath`
-    * (nothing to rebuild, so no job), or when the keys alone exceed the
-    * cache's byte bound (the rows would too). */
-  private def publishable(latest: DataFrame, keyCols: Seq[String],
-      bucketOfKey: Map[Seq[Any], Int], tablePath: String,
-      cache: BucketCache): Option[Map[Int, Seq[Row]]] =
-    Option.when(
-      bucketOfKey.valuesIterator.exists(id =>
-        cache.holds(tablePath, id, keyCols)) &&
-        org.apache.spark.util.SizeEstimator.estimate(bucketOfKey) <= cache.maxBytes) {
-      val keyIdx = keyCols.map(latest.schema.fieldIndex)
-      latest.filter((r: Row) => bucketOfKey.contains(keyIdx.map(r.get)))
-        .collect().toSeq.groupBy(r => bucketOfKey(keyIdx.map(r.get)))
     }
 }

@@ -172,9 +172,9 @@ class BucketCacheSpec extends SparkSpec {
   }
 
   /** Rows shaped as [[commit]] writes them, as a writer would publish them
-    * into bucket `id`. */
-  private def rowsOf(id: Int, rows: (Long, String)*): Option[Map[Int, Seq[Row]]] =
-    Some(Map(id -> rows.toDF("k", "v").withColumn("tombstone", lit(false)).collect().toSeq))
+    * as the whole content of bucket `id`. */
+  private def rowsOf(id: Int, rows: (Long, String)*): Map[Int, Seq[Row]] =
+    Map(id -> rows.toDF("k", "v").withColumn("tombstone", lit(false)).collect().toSeq)
 
   /** `m` with bucket `id` of `root` moved to generation `gen`. */
   private def moved(m: BucketedStore.Manifest, root: String, id: Int,
@@ -189,61 +189,45 @@ class BucketCacheSpec extends SparkSpec {
     val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
     val bucket = BucketedStore.bucketOf(Seq(1L), N)
     value(route.get(Seq(1L))) shouldBe Some("v0")
-    val from = BucketedStore.manifest(root)
     commit(root, 1L, 1L -> "v1")
     val to = BucketedStore.manifest(root).get
     value(route.get(Seq(1L))) shouldBe Some("v1")
     val (bytes, loads) = (cache.bytes, cache.loads.get)
-    cache.publish(from, to, root, kv, rowsOf(bucket, 1L -> "stale"))()
+    cache.publish(to, root, kv, rowsOf(bucket, 1L -> "stale"))()
     value(route.get(Seq(1L))) shouldBe Some("v1")
     (cache.bytes, cache.loads.get) shouldBe ((bytes, loads))
     cache.published.get shouldBe 0
     cache.invalidated.get shouldBe 0
   }
 
-  it should "invalidate, never fill, a bucket with no entry for the superseded generation" in {
+  it should "replace an entry held for neither side of the flip, and drop one over the byte bound" in {
     val root = store("graft-bc-inval")
     val b1 = BucketedStore.bucketOf(Seq(1L), N)
     val mate = (2L to 100L).find(k => BucketedStore.bucketOf(Seq(k), N) == b1).get
+    val cache = new BucketCache(1L << 26)
+    lazy val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
     val ms = (0L to 2L).map { b =>
       commit(root, b, 1L -> s"v$b", mate -> "w0")
+      if (b == 0L) value(route.get(Seq(mate))) shouldBe Some("w0") // resident for gens(0)
       BucketedStore.manifest(root).get
     }
-    val rows = rowsOf(b1, 1L -> "v2")
 
-    // no entry at all: nothing is filled in, and the next read loads
-    val empty = new BucketCache(1L << 26)
-    empty.publish(Some(ms(1)), ms(2), root, kv, rows)()
-    empty.bytes shouldBe 0L
-    (empty.published.get, empty.invalidated.get) shouldBe ((0L, 0L))
-    value(new Gateway.BucketedRoute(spark, root, kv, LocalFs, empty)
-      .get(Seq(1L))) shouldBe Some("v2")
-    empty.loads.get shouldBe 1
+    // an entry for neither side of the flip ms(1) → ms(2) becomes ms(2)'s,
+    // and the next read is a hit
+    cache.publish(ms(2), root, kv, rowsOf(b1, 1L -> "v2", mate -> "w0"))()
+    (cache.published.get, cache.invalidated.get) shouldBe ((1L, 0L))
+    val (loads, hits) = (cache.loads.get, cache.hits.get)
+    value(route.get(Seq(1L))) shouldBe Some("v2")
+    (cache.loads.get, cache.hits.get) shouldBe ((loads, hits + 1))
 
-    // an entry for neither side of the flip is dropped
-    val cache = new BucketCache(1L << 26)
-    val route = new Gateway.BucketedRoute(spark, root, kv, LocalFs, cache)
-    value(route.get(Seq(mate))) shouldBe Some("w0") // resident for gens(2)
-    cache.publish(Some(ms(0)), ms(1), root, kv, rows)()
-    (cache.published.get, cache.invalidated.get, cache.bytes) shouldBe ((0L, 1L, 0L))
-
-    // and so is one whose rebuilt entry would not fit the bound
-    route.get(Seq(mate))
-    val tight = new BucketCache(cache.bytes)
+    // an entry that would not fit the bound is dropped
+    val tight = new BucketCache(2 * cache.bytes)
     val tightRoute = new Gateway.BucketedRoute(spark, root, kv, LocalFs, tight)
     value(tightRoute.get(Seq(mate))) shouldBe Some("w0")
     tight.bytes should be > 0L
     val next = moved(ms(2), root, b1, s"${genOf(root, b1)}-next")
-    tight.publish(Some(ms(2)), next, root, kv,
-      rowsOf(b1, (1L to 64L).map(k => k -> s"wide-$k"): _*))()
+    tight.publish(next, root, kv, rowsOf(b1, (1L to 64L).map(k => k -> s"wide-$k"): _*))()
     (tight.published.get, tight.invalidated.get, tight.bytes) shouldBe ((0L, 1L, 0L))
-
-    // and so is one whose rows lack a column the batch brought: the files
-    // now carry it on every row of the bucket
-    value(route.get(Seq(mate))) shouldBe Some("w0")
-    cache.publish(Some(ms(2)), next, root, kv, Some(Map(b1 -> Seq((1L, "v3", "new"))
-      .toDF("k", "v", "extra").withColumn("tombstone", lit(false)).collect().toSeq)))()
-    (cache.published.get, cache.invalidated.get, cache.bytes) shouldBe ((0L, 2L, 0L))
   }
 
   /** Spark jobs, and stages that wrote shuffle output, of every thread
@@ -341,6 +325,28 @@ class BucketCacheSpec extends SparkSpec {
     tree(s.table) shouldBe files
     (Seq(cache.loads, cache.hits, cache.published, cache.invalidated,
       cache.evictions).map(_.get) :+ cache.bytes) shouldBe counters
+  }
+
+  it should "neither collect nor fill a touched bucket the cache does not hold" in {
+    val n = 16
+    val Seq(warm, cold) = Seq.fill(2)(new BucketCache(1L << 26))
+    val Seq(ws, cs) = Seq(warm, cold).map(seeded(_, 400, n))
+    val a = 3L
+    val b = (4L to 400L).find(k =>
+      BucketedStore.bucketOf(Seq(k), n) != BucketedStore.bucketOf(Seq(a), n)).get
+    val route = new Gateway.BucketedRoute(spark, ws.table, kv, LocalFs, warm)
+    value(route.get(Seq(a))) shouldBe Some("v0") // warm holds a's bucket only
+    Seq(ws, cs).foreach(_.append(changes((a, "v1", 200L, false), (b, "v1", 200L, false))))
+    // the one job the warm writer adds is its publication's collect; the
+    // cold writer, whose cache holds no touched bucket, collects nothing
+    jobsDuring(ws.drain()) - jobsDuring(cs.drain()) shouldBe 1
+    (cold.published.get, cold.bytes) shouldBe ((0L, 0L))
+    (warm.published.get, warm.invalidated.get) shouldBe ((1L, 0L))
+    val loads = warm.loads.get
+    value(route.get(Seq(a))) shouldBe Some("v1")
+    warm.loads.get shouldBe loads // installed
+    value(route.get(Seq(b))) shouldBe Some("v1")
+    warm.loads.get shouldBe loads + 1 // never filled, so loaded
   }
 
   it should "refuse a one-key update whose key type is narrower than the table's, committing and publishing nothing" in {

@@ -6,6 +6,7 @@ import scala.util.Random
 
 import graft.serving.Gateway
 import graft.streaming.{BucketCache, BucketedStore, ChangelogStream, LocalFs}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 /** End-to-end file-backed changelog streaming: ingest → latest-per-key
@@ -83,6 +84,35 @@ class ChangelogStreamSpec extends SparkSpec {
     all.count() shouldBe 2
     val live = graft.core.Changelog.dropTombstones(all, "tombstone")
     live.select("key").as[Int].collect() shouldBe Seq(1)
+  }
+
+  it should "drain an update-mode aggregate to the batch aggregate, idempotently across re-runs" in {
+    val root = Files.createTempDirectory("graft-cls-agg").toFile.getAbsolutePath
+    val in = s"$root/in"
+    val ddl = "user_id BIGINT, value BIGINT"
+    def part(rows: (Long, Long)*): Unit = {
+      rows.toDF("user_id", "value").coalesce(1).write.mode("append").parquet(in)
+      Thread.sleep(20) // distinct mtimes: the file source drains oldest-first
+    }
+    part((1L, 5L), (2L, 7L), (1L, 1L))
+    part((3L, 2L), (1L, 4L))
+    part((2L, 1L), (4L, 9L), (4L, 9L))
+    val events = spark.read.schema(ddl).parquet(in)
+    // the count is the recency: update mode emits a user only in a batch
+    // that added events for it, so each emission's count is larger
+    def drain(ckpt: String): Seq[Row] = {
+      ChangelogStream.materializeLatestBucketed(
+          spark.readStream.schema(ddl).option("maxFilesPerTrigger", "1").parquet(in)
+            .groupBy("user_id").agg(count(lit(1)).as("n"), sum("value").as("s")),
+          Seq("user_id"), "n", s"$root/t", s"$root/$ckpt", numBuckets = 4)
+        .outputMode("update").start().awaitTermination()
+      BucketedStore.read(spark, s"$root/t").get.orderBy("user_id").collect().toSeq
+    }
+    val batch = events.groupBy("user_id").agg(count(lit(1)).as("n"), sum("value").as("s"))
+      .orderBy("user_id").collect().toSeq
+    drain("ckpt") shouldBe batch
+    drain("ckpt") shouldBe batch // the same checkpoint: nothing left to run
+    drain("ckpt2") shouldBe batch // a fresh one: every batch re-run over the table
   }
 }
 
@@ -187,7 +217,7 @@ class BucketPublicationSpec extends SparkSpec {
           s.drain()
         case 5 => // crash right after the flip landed, before the
           // publication: the re-run finds the touched entries on neither
-          // side of its own flip
+          // side of its own flip, and installs its own generations
           intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
             s.drain(new CrashOnceFs((op, p) => op == "wrote" && p == ptr))
           }
@@ -199,7 +229,7 @@ class BucketPublicationSpec extends SparkSpec {
     model(doomed)._3 shouldBe true
     route.get(Seq(doomed)) shouldBe None
     cache.published.get should be > 10L
-    cache.invalidated.get should be >= 1L
+    cache.invalidated.get shouldBe 0L // the crash re-runs stayed warm too
   }
 }
 

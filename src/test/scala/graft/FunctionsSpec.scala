@@ -71,6 +71,23 @@ class Murmur2Spec extends SparkSpec {
   }
 }
 
+class FunctionRegistrationSpec extends SparkSpec {
+
+  "GraftFunctions.register" should "install each function once per session and replace none" in {
+    val registry = spark.sessionState.functionRegistry
+    def infos = GraftFunctions.builders.map { case (name, _, _) =>
+      registry.lookupFunction(org.apache.spark.sql.catalyst.FunctionIdentifier(name)).get }
+    GraftFunctions.register(spark)
+    val first = infos
+    GraftFunctions.register(spark)
+    infos.zip(first).foreach { case (again, was) => (again eq was) shouldBe true }
+    // a new session starts without them and gets every one
+    val fresh = spark.newSession()
+    GraftFunctions.register(fresh)
+    fresh.range(1).select(ldot(array(lit(2L)), array(lit(3L)))).head().getLong(0) shouldBe 6L
+  }
+}
+
 class RegistryFramingSpec extends SparkSpec {
   import spark.implicits._
 

@@ -61,4 +61,13 @@ class ModuleCallerSpec extends AnyFlatSpec with Matchers {
     withClue(s"files with a pointer or generation path: ${spelled.mkString(", ")} ")(
       spelled shouldBe empty)
   }
+
+  it should "rename a file only inside StoreFs.scala" in {
+    // the seam's atomic small-file put is the one rename; a commit built
+    // on another would be a protocol of its own, outside the seam
+    val renaming = scalaFiles(Paths.get("src/main/scala"))
+      .filterNot(_.getFileName.toString == "StoreFs.scala")
+      .filter(p => """\brenameTo\b""".r.findFirstIn(code(Files.readString(p))).isDefined)
+    withClue(s"files that call renameTo: ${renaming.mkString(", ")} ")(renaming shouldBe empty)
+  }
 }
